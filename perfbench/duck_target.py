@@ -54,6 +54,12 @@ class DuckConn:
             self._c.execute("ROLLBACK;")
             self._in_txn = False
 
+    def insert_arrow(self, table: str, data) -> None:
+        """Bulk-insert an Arrow table into ``public.table`` (set-up only)."""
+        self._c.register("_src", data)
+        self._c.execute(f'INSERT INTO public."{table}" SELECT * FROM _src')
+        self._c.unregister("_src")
+
     def close(self):
         self._c.close()
 

@@ -1,6 +1,6 @@
 """NEMSIS ingest / warehouse benchmark.
 
-    python3 perfbench/run.py --workload ingest_overwrite --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload ingest_overwrite --seed 1 --seconds 4 --trace 0
 
 Run from the repository root.  One process drives the program through its
 public functions on ``local[N]``, N = the cores this process may use.  Each
@@ -14,8 +14,11 @@ The last stdout line is the result: ``{"correct", "attempted", "failed",
 "metrics"}``.  With ``--trace 0`` the metrics are the end-to-end metrics,
 with ``--trace 1`` the per-layer metrics of a traced run, where every other
 operation records spans (``tracing.py``) and the untraced ones give the
-tracing overhead.  The line before it is a JSON report with the
-environment, sample counts and warm-up times.
+tracing overhead; the traced ``ingest_overwrite`` run ends with a pass of
+registered plans and NEMSIS query shapes.  The line before it is a JSON
+report with the environment, sample counts and warm-up times.  A failed
+operation or check ends the loop; the run still prints its result, with
+``correct`` false.
 """
 
 from __future__ import annotations
@@ -35,6 +38,10 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 OUT = os.path.join(ROOT, ".perfbench")
+# Untimed ops after set-up.  The first op is 25-40% slower than the next
+# ones, which differ by about 5%; ingest_overwrite's set-up already ran one
+# ingest batch (the lake build).
+WARM_OPS = 1
 
 END_TO_END = {
     "setup_s": "s",
@@ -68,6 +75,13 @@ PER_LAYER_UNITS = {
     "jdbc_sink.partitions_staged": "count",
     "jdbc_sink.stage_connections": "count",
     "jdbc_sink.driver_statements": "count",
+    **{f"plans.{q}_s": "s" for q in (
+        "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
+        "q10_returned_items", "q21_last_shipper_multi_supplier", "text_bm25_score",
+        "nemsis_value_select", "nemsis_parent_child_join")},
+    "plans.build_s": "s",
+    "plans.exec_s": "s",
+    "warehouse.orphan_check_s": "s",
     "self.bookkeeping_s": "s",
     "self.flatten_s": "s",
     "self.warehouse_s": "s",
@@ -150,7 +164,7 @@ class Loop:
         self.untraced: list[float] = []
         self.work = 0
 
-    def one(self, traced: bool = False) -> float:
+    def one(self, traced: bool) -> float:
         w, tr = self.w, self.tracer
         self.attempted += 1
         w.prepare()
@@ -169,6 +183,7 @@ class Loop:
         return dt
 
     def attempt(self, traced: bool = False) -> float | None:
+        """One op; its seconds, or None if it or its check failed."""
         try:
             dt = self.one(traced)
         except Exception:
@@ -179,31 +194,19 @@ class Loop:
         (self.traced if traced else self.untraced).append(dt)
         return dt
 
-    def round(self, n_ops: int) -> float | None:
-        """One round of n_ops untraced ops; its seconds, or None on a failure."""
-        total = 0.0
-        for _ in range(n_ops):
-            dt = self.attempt()
-            if dt is None:
-                return None
-            total += dt
-        return total
+    def restart(self) -> None:
+        """Forget the samples so far (warm-up); attempts and failures stay."""
+        self.samples, self.traced, self.untraced, self.work = [], [], [], 0
 
 
-def warm_up(w, tracer, size) -> list[float]:
-    """Rounds of ops until batch times stop falling: at least warm_min
-    rounds, then stop once a round is no longer 10% faster than the best
-    round before it, or after warm_max rounds."""
-    loop = Loop(w, tracer)
-    times: list[float] = list(w.warm_rounds)
-    while len(times) < size["warm_max"]:
-        t = loop.round(w.round_ops())
+def warm_up(loop: Loop, n_ops: int) -> list[float]:
+    """n_ops untimed ops before the measured ones (fewer at a failure)."""
+    times: list[float] = []
+    while len(times) < n_ops:
+        t = loop.attempt()
         if t is None:
-            raise RuntimeError("warm-up operation failed")
-        times.append(t)
-        if len(times) >= size["warm_min"] and (
-                len(times) == 1 or t >= 0.9 * min(times[:-1])):
             break
+        times.append(t)
     return times
 
 
@@ -236,22 +239,32 @@ def main(argv=None) -> int:
         tracer = Tracer(enabled=False)
         w = workloads.WORKLOADS[args.workload](spark, work, args.seed, size, tracer)
         w.setup()
+        loop = Loop(w, tracer)
         t = time.perf_counter()
-        warm_times = warm_up(w, tracer, size)
+        warm_times = warm_up(loop, WARM_OPS)
         warmup_s = time.perf_counter() - t
         setup_s = time.perf_counter() - t_setup0
 
         if args.trace:
             w.install_wrappers()
-        # traced runs alternate untraced and traced rounds, two at least
-        loop, per_round = Loop(w, tracer), w.round_ops()
-        while (sum(loop.samples) < args.seconds or loop.attempted % per_round
-               or loop.attempted < 2 * per_round * args.trace):
-            traced = bool(args.trace) and (loop.attempted // per_round) % 2 == 1
-            loop.attempt(traced)
-            if loop.failed and not loop.samples:
-                break
+        # Traced runs alternate untraced and traced ops, three at least, so a
+        # traced op sits between two untraced ones and the tracing overhead
+        # is not confounded with the drift of op times over a run.
+        loop.restart()
+        while not loop.failed and (sum(loop.samples) < args.seconds
+                                   or len(loop.samples) < 3 * args.trace):
+            loop.attempt(traced=bool(args.trace) and len(loop.samples) % 2 == 1)
         tracer.unwrap_all()
+        if args.trace and not loop.failed:
+            try:
+                tracer.op_id, tracer.enabled = None, True  # spans outside any op
+                loop.attempted += w.traced_finish()
+            except Exception:
+                loop.attempted += 1
+                loop.failed += 1
+                traceback.print_exc(file=sys.stderr)
+            finally:
+                tracer.enabled = False
 
         import duckdb
         import pyspark
@@ -261,7 +274,7 @@ def main(argv=None) -> int:
         busy = sum(loop.samples)
         cpu = [b - a for a, b in zip(cpu0, cpu_times())]
         if args.trace:
-            units = {**PER_LAYER_UNITS, **w.layer_units}
+            units = PER_LAYER_UNITS
             metrics = layer_metrics(units, w, tracer, loop, start_s, warmup_s)
             metrics["process.peak_rss_mb"] = peak_rss
         else:
@@ -278,7 +291,7 @@ def main(argv=None) -> int:
             "versions": {"python": platform.python_version(),
                          "pyspark": pyspark.__version__, "duckdb": duckdb.__version__},
             "unit_of_work": w.unit, "work": loop.work, "ops": len(loop.samples),
-            "op_s": loop.samples, "warmup_round_s": warm_times,
+            "op_s": loop.samples, "warmup_op_s": warm_times,
             "session_start_s": start_s, "setup_s": setup_s, "warmup_s": warmup_s,
             "peak_rss_mb": peak_rss,
             # share of CPU time the hypervisor gave to other guests
@@ -286,8 +299,6 @@ def main(argv=None) -> int:
             "error_rate": loop.failed / max(1, loop.attempted),
             **w.report,
         }
-        if not args.trace and len(loop.samples) >= 100:
-            report["op_p90_s"] = statistics.quantiles(loop.samples, n=10)[-1]
         result = {
             "correct": loop.failed == 0,
             "attempted": loop.attempted,
@@ -320,7 +331,7 @@ def layer_metrics(units, w, tracer, loop, start_s: float, warmup_s: float) -> di
     for layer, secs in tracer.self_times().items():
         if f"self.{layer}_s" in out:
             out[f"self.{layer}_s"] = secs / n_traced
-    out["trace.spans_per_op"] = len(tracer.spans) / n_traced
+    out["trace.spans_per_op"] = sum(s[4] is not None for s in tracer.spans) / n_traced
     if loop.traced and loop.untraced:
         out["trace.overhead_ratio"] = (statistics.median(loop.traced)
                                        / statistics.median(loop.untraced))

@@ -1,9 +1,9 @@
-"""Seeded analytic tables for the ``query_mix`` workload, and the DuckDB
-oracle check of the registered plans against them.
+"""Seeded analytic tables for the registered plans of the traced run's query
+pass, and the DuckDB oracle check of those plans against them.
 
 The tables follow the shapes the plan registry reads (TPC-H-like
 ``region nation customer supplier orders lineitem`` plus the ``documents``
-corpus and 64-dim ``embeddings``): the same column names and Arrow types,
+corpus): the same column names and Arrow types,
 one parquet file per table.  ``sf`` scales row counts the way TPC-H does
 (sf 0.01 -> 1,500 customers, 15,000 orders, ~60,000 line items).
 """
@@ -44,7 +44,6 @@ def generate(out_dir: str, seed: int, sf: float) -> dict[str, int]:
     n_supp = max(20, int(10_000 * sf))
     n_part = max(100, int(200_000 * sf))
     n_docs = max(200, int(50_000 * sf))
-    n_vecs = max(200, int(20_000 * sf))
 
     tables: dict[str, pa.Table] = {}
     tables["region"] = pa.table({
@@ -109,12 +108,6 @@ def generate(out_dir: str, seed: int, sf: float) -> dict[str, int]:
         "lang": [LANGS[i] for i in rng.integers(0, len(LANGS), n_docs)],
         "source": [f"src{i % 20}" for i in range(n_docs)],
         "n_chars": np.array([len(t) for t in text], dtype=np.int64),
-    })
-    emb = rng.normal(0.0, 0.125, (n_vecs, 64)).astype(np.float32)
-    tables["embeddings"] = pa.table({
-        "vec_id": np.arange(n_vecs, dtype=np.int64),
-        "embedding": pa.array(list(emb), pa.list_(pa.float32())),
-        "label": rng.integers(0, 10, n_vecs).astype(np.int32),
     })
     for name, t in tables.items():
         pq.write_table(t, os.path.join(out_dir, f"{name}.parquet"))

@@ -19,9 +19,7 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
     SPEC = json.load(f)
-LISTED = [w["name"] for w in SPEC["workloads"]]
-# implemented and runnable, but not listed in BENCHMARK.json (see CHANGES.md)
-UNLISTED = ["ingest_fresh", "query_mix"]
+WORKLOADS = [w["name"] for w in SPEC["workloads"]]
 
 
 def run(workload: str, trace: int) -> dict:
@@ -34,17 +32,14 @@ def run(workload: str, trace: int) -> dict:
 
 
 @pytest.mark.parametrize("trace", [0, 1])
-@pytest.mark.parametrize("workload", LISTED + UNLISTED)
+@pytest.mark.parametrize("workload", WORKLOADS)
 def test_every_metric_emitted(workload, trace):
     result = run(workload, trace)
     assert set(result) == {"correct", "attempted", "failed", "metrics"}
     assert result["correct"] and result["failed"] == 0 and result["attempted"] >= 1
     want = {m["name"]: m["unit"] for m in SPEC["per_layer" if trace else "end_to_end"]}
     got = {k: v["unit"] for k, v in result["metrics"].items()}
-    if workload in LISTED or not trace:
-        assert got == want
-    else:  # query_mix adds its plan metrics
-        assert want.items() <= got.items()
+    assert got == want
     assert all(isinstance(v["value"], float) for v in result["metrics"].values())
     if not trace:
         assert all(v["value"] > 0 for v in result["metrics"].values())

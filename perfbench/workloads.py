@@ -3,8 +3,9 @@
 Each workload builds its inputs from the seed in ``setup`` (untimed),
 restores its target in ``prepare`` (untimed), runs one operation in ``op``
 (timed) and verifies that operation in ``check`` (untimed).  ``op`` returns
-the units of work it completed: elements written, rows staged or queries
-answered.  After a traced op, ``traced_extra`` records the per-layer numbers.
+the units of work it completed: elements written or rows staged.  After a
+traced op, ``traced_extra`` records the per-layer numbers, and after the
+last op of a traced run ``traced_finish`` records those of whole passes.
 
 The program is driven only through its public functions: ``ingest_xml_files``,
 ``flatten``, ``warehouse``, ``catalog``, ``jdbc_sink.stage_to_jdbc_distributed``
@@ -15,12 +16,15 @@ with DuckDB and pyarrow and compare them with counts the generators return.
 from __future__ import annotations
 
 import os
+import random
 import shutil
+import statistics
 import time
 from collections import Counter
 from contextlib import contextmanager
 
 import duckdb
+import pyspark.sql.functions as F
 
 import duck_target
 import tables_gen
@@ -34,19 +38,10 @@ from nemsis_xml_parser_spark.schema import STATUS_OK
 
 SKIPPED = "Skipped_MD5_Seen"
 
-# Tag layout of the benchmark's files: the NEMSIS header (7 tables) plus
-# eRecord and a repeating vitals group with units and CorrelationID
-# attributes -- 12 tables.  The ingest path runs one write job per table and
-# batch, so breadth is sized to fit the run budget; the generator's full
-# layout (~280 tags) is nemsis_gen.SECTIONS.
-SECTIONS = [
-    ("eRecord", ["01"], {}),
-    ("eVitals", [], {"VitalGroup": ["06"]}),
-]
-
-# Registered plans of the mix.  dedup_minhash_lsh_candidates,
-# ann_ivfpq_rerank_topk and graph_pagerank_centrality are left out: together
-# they take 8.7 s of a 15 s warm pass on four cores, more than a run can hold.
+# Registered plans of the traced run's query pass: the cheaper TPC-H shapes
+# and text scoring.  dedup_minhash_lsh_candidates, ann_ivfpq_rerank_topk and
+# graph_pagerank_centrality are left out: together they take 8.7 s of a 15 s
+# warm pass on four cores.
 PLAN_MIX = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -55,18 +50,23 @@ PLAN_MIX = [
     "q21_last_shipper_multi_supplier",
     "text_bm25_score",
 ]
+# the paper's own query shapes over the lake
 NEMSIS_SHAPES = ["nemsis_value_select", "nemsis_parent_child_join", "nemsis_orphan_check"]
 # parent/child tables of the NEMSIS query shapes
 PARENT, CHILD = "evitals_vitalgroup", "evitals_06"
 
-# sizes: "full" is the benchmark, "tiny" the smoke test
+# Sizes: "full" is the benchmark, "tiny" the smoke test.  A full
+# ingest_overwrite batch writes 22,120 elements into a lake of 222,440; a
+# full stage_jdbc batch stages 100,440 rows, at or above
+# jdbc_sink.DISTRIBUTED_ROW_THRESHOLD.
 SIZES = {
-    "full": dict(fresh_files=2, fresh_pcrs=40, lake_files=1, lake_pcrs=200,
-                 batch_pcrs=20, stage_files=2, stage_pcrs=40, sf=0.005, mix_pcrs=12,
-                 warm_min=3, warm_max=4),
-    "tiny": dict(fresh_files=2, fresh_pcrs=4, lake_files=1, lake_pcrs=10,
-                 batch_pcrs=2, stage_files=2, stage_pcrs=4, sf=0.001, mix_pcrs=2,
-                 warm_min=1, warm_max=1),
+    "full": dict(lake_files=40, lake_pcrs=20_200, batch_files=20, batch_pcrs=2_000,
+                 resubmitted=2, stage_files=20, stage_pcrs=9_120,
+                 stage_min_rows=jdbc_sink.DISTRIBUTED_ROW_THRESHOLD, sf=0.005,
+                 query_reps=2),
+    "tiny": dict(lake_files=2, lake_pcrs=20, batch_files=2, batch_pcrs=4,
+                 resubmitted=1, stage_files=2, stage_pcrs=8, stage_min_rows=1,
+                 sf=0.001, query_reps=1),
 }
 
 
@@ -177,10 +177,6 @@ class SparkJobs:
 class Workload:
     name = ""
     unit = ""  # what op() counts
-    # seconds of warm-up rounds setup already ran
-    warm_rounds: list[float] = []
-    # per-layer metrics of this workload beyond run.PER_LAYER_UNITS
-    layer_units: dict[str, str] = {}
 
     def __init__(self, spark, work: str, seed: int, size: dict, tracer):
         self.spark, self.work, self.seed, self.size = spark, work, seed, size
@@ -201,10 +197,6 @@ class Workload:
 
     def setup(self) -> None: ...
 
-    def round_ops(self) -> int:
-        """Ops that form one round: warm-up and measurement run whole rounds."""
-        return 1
-
     def prepare(self) -> None: ...
 
     def op(self) -> int:
@@ -215,17 +207,82 @@ class Workload:
     def traced_extra(self) -> None:
         """Untimed per-layer measurements after a traced op."""
 
+    def traced_finish(self) -> int:
+        """Untimed per-layer measurements after the last op of a traced run;
+        returns the checked operations it ran."""
+        return 0
+
     def install_wrappers(self) -> None:
         """Wrap program module attributes for the traced run."""
 
 
 # --------------------------------------------------------------------------
-# ingest workloads
+# ingest with overwrite
 # --------------------------------------------------------------------------
 
 
-class _Ingest(Workload):
+class IngestOverwrite(Workload):
+    """One mixed batch into a lake ten times its size, restored before every
+    op: byte-identical resubmissions, corrections of existing PCRs, new PCRs.
+    The traced run ends with a query pass (``traced_finish``)."""
+
+    name = "ingest_overwrite"
     unit = "elements"
+
+    def setup(self) -> None:
+        s = self.size
+        corpus = Corpus(self.seed)
+        with self.phase("generate"):
+            lake_files = corpus.new_files(s["lake_files"], s["lake_pcrs"], prefix="lake")
+            lake_paths = write_files(lake_files, os.path.join(self.work, "lake_src"))
+            half = s["batch_pcrs"] // 2
+            corrected = random.Random(self.seed).sample(
+                [p for f in lake_files for p in f.pcrs], half)
+            self.processed = corpus.mixed_files(s["batch_files"], corrected,
+                                                s["batch_pcrs"] - half)
+            batch_dir = os.path.join(self.work, "batch")
+            self.resubmitted = write_files(lake_files[:s["resubmitted"]], batch_dir)
+            self.processed_paths = write_files(self.processed, batch_dir)
+            self.paths = self.resubmitted + self.processed_paths
+        self.snapshot = os.path.join(self.work, "lake_snapshot")
+        with self.phase("lake_build"):
+            statuses = bookkeeping.ingest_xml_files(self.spark, lake_paths, self.snapshot)
+        expect(all(v == STATUS_OK for v in statuses.values()), "lake build failed")
+        base = expected_rows(lake_files)
+        expect(lake_rows(self.snapshot) == base, "lake build rows differ")
+
+        gone = {p.uuid for p in corrected}
+        self.expected = Counter({k: n for k, n in base.items() if k[1] not in gone})
+        self.expected.update(expected_rows(self.processed))
+        self.markers = {p.uuid: p.marker for f in lake_files + self.processed
+                        for p in f.pcrs}
+        self.lake = os.path.join(self.work, "lake")
+        self.report.update(lake_elements=sum(base.values()),
+                           batch_elements=sum(f.elements for f in self.processed),
+                           corrections=half, new_pcrs=s["batch_pcrs"] - half,
+                           skipped_files=len(self.resubmitted))
+
+    def prepare(self) -> None:
+        shutil.rmtree(self.lake, ignore_errors=True)
+        shutil.copytree(self.snapshot, self.lake)
+        self.before = table_files(self.lake)
+
+    def op(self) -> int:
+        self.t_wall = time.time()
+        self.jobs.mark()
+        with self.tracer.span("bookkeeping.ingest_xml_files"):
+            self.statuses = bookkeeping.ingest_xml_files(self.spark, self.paths, self.lake)
+        self.op_jobs = self.jobs.since_mark()
+        return sum(f.elements for f in self.processed)
+
+    def check(self) -> None:
+        st = self.statuses
+        expect(all(st[p] == SKIPPED for p in self.resubmitted), "resubmission not skipped")
+        expect(all(st[p] == STATUS_OK for p in self.processed_paths), "batch not staged")
+        expect(lake_rows(self.lake) == self.expected, "lake rows differ after overwrite")
+        markers = lake_markers(self.lake)
+        expect(all(markers.get(u) == {m} for u, m in self.markers.items()),
+               "a PCR keeps rows of another version")
 
     def install_wrappers(self) -> None:
         tr = self.tracer
@@ -239,19 +296,7 @@ class _Ingest(Workload):
         tr.wrap(catalog, "clean_scratch_dirs", span="catalog.clean_scratch_dirs")
         tr.wrap(catalog, "list_table_dirs", span="catalog.list_table_dirs")
 
-    def _ingest(self, paths: list[str], lake: str) -> dict[str, str]:
-        with self.tracer.span("bookkeeping.ingest_xml_files"):
-            return bookkeeping.ingest_xml_files(self.spark, paths, lake)
-
-    def _timed_ingest(self, paths, lake, processed: list[XmlFile]) -> int:
-        self.t_wall = time.time()
-        self.jobs.mark()
-        self.statuses = self._ingest(paths, lake)
-        self.op_jobs = self.jobs.since_mark()
-        return sum(f.elements for f in processed)
-
-    def _ingest_layers(self, lake, processed_paths, processed, before) -> None:
-        """Per-layer numbers of the traced op just run."""
+    def traced_extra(self) -> None:
         tr, op = self.tracer, self.tracer.op_id
         self.record("spark.jobs_per_batch", self.op_jobs[0])
         self.record("spark.tasks_per_batch", self.op_jobs[1])
@@ -273,7 +318,7 @@ class _Ingest(Workload):
 
         # the same batch's flatten, materialised alone
         t = time.perf_counter()
-        noop(flatten.flatten_xml_files(self.spark, processed_paths))
+        noop(flatten.flatten_xml_files(self.spark, self.processed_paths))
         busy = time.perf_counter() - t
         self.record("flatten.busy_s", busy)
         self.record("warehouse.write_s", ingest_self - busy)
@@ -281,7 +326,7 @@ class _Ingest(Workload):
         # in-process flatten of the same documents
         n_out, failed = 0, 0
         t = time.perf_counter()
-        for p in processed_paths:
+        for p in self.processed_paths:
             with open(p, "rb") as fh:
                 rows = flatten.flatten_xml_document(fh.read(), file_name=p)
             n_out += len(rows)
@@ -290,17 +335,17 @@ class _Ingest(Workload):
         self.record("flatten.elements_out", n_out)
         self.record("flatten.parse_failed_files", failed)
 
-        after = table_files(lake)
+        after = table_files(self.lake)
         written = {t for t, (_, mtime) in after.items() if mtime >= self.t_wall}
-        rewritten = written & set(before)
+        rewritten = written & set(self.before)
         rows = Counter()
-        for (t, _), n in lake_rows(lake).items():
+        for (t, _), n in lake_rows(self.lake).items():
             rows[t] += n
         incoming = Counter()
-        for f in processed:
+        for f in self.processed:
             incoming.update(f.rows())
-        ingested = sum(f.elements for f in processed)
-        xml_bytes = sum(len(f.text.encode()) for f in processed)
+        ingested = sum(f.elements for f in self.processed)
+        xml_bytes = sum(len(f.text.encode()) for f in self.processed)
         self.record("warehouse.tables_written", len(written))
         self.record("warehouse.bytes_per_element",
                     sum(after[t][0] for t in written) / max(1, sum(rows[t] for t in written)))
@@ -310,92 +355,59 @@ class _Ingest(Workload):
         self.record("overwrite.bytes_rewritten_per_byte_ingested",
                     sum(after[t][0] for t in rewritten) / xml_bytes)
 
+    # -- query pass -----------------------------------------------------
 
-class IngestFresh(_Ingest):
-    """Batches of new files into an empty lake."""
+    def _frame(self, name: str):
+        if name in QUERIES:
+            return QUERIES[name].spark(self.spark, self.sf_dir)
+        child = self.spark.read.parquet(os.path.join(self.lake, CHILD))
+        parent = self.spark.read.parquet(os.path.join(self.lake, PARENT))
+        if name == "nemsis_value_select":
+            return child.select("pcr_uuid_context", f"{CHILD}_value")
+        if name == "nemsis_parent_child_join":
+            return child.join(parent, child["parent_element_id"] == parent["element_id"])
+        return warehouse.orphan_check(child, parent)
 
-    name = "ingest_fresh"
+    def traced_finish(self) -> int:
+        """Registered plans over seeded tables and the NEMSIS query shapes
+        over the lake the last op left: each checked once (plans against
+        their DuckDB oracle, shapes against the generator's counts), then
+        timed query_reps times, materialised through the noop sink.  The
+        pass counts as one checked operation."""
+        self.sf_dir = os.path.join(self.work, "tables")
+        self.report["table_rows"] = tables_gen.generate(self.sf_dir, self.seed,
+                                                        self.size["sf"])
+        want = tables_gen.oracle_digests(
+            self.sf_dir, {q: QUERIES[q].oracle for q in PLAN_MIX})
+        bad = [q for q in PLAN_MIX
+               if tables_gen.result_digest(self._frame(q).toPandas()) != want[q]]
+        expect(not bad, f"plans differ from their oracle: {bad}")
+        child_rows = sum(n for (t, _), n in self.expected.items() if t == CHILD)
+        expect(self._frame("nemsis_orphan_check").count() == 0, "orphan rows")
+        expect(self._frame("nemsis_parent_child_join").count() == child_rows,
+               "parent/child join rows differ from the generated child count")
+        expect(self._frame("nemsis_value_select").count() == child_rows,
+               "value select rows differ")
 
-    def setup(self) -> None:
-        corpus = Corpus(self.seed, SECTIONS, {})
-        self.files = corpus.new_files(self.size["fresh_files"], self.size["fresh_pcrs"])
-        self.paths = write_files(self.files, os.path.join(self.work, "batch"))
-        self.expected = expected_rows(self.files)
-        self.lake = os.path.join(self.work, "lake")
-        self.report.update(batch_elements=sum(f.elements for f in self.files))
-
-    def prepare(self) -> None:
-        shutil.rmtree(self.lake, ignore_errors=True)
-
-    def op(self) -> int:
-        return self._timed_ingest(self.paths, self.lake, self.files)
-
-    def check(self) -> None:
-        expect(all(self.statuses[p] == STATUS_OK for p in self.paths),
-               f"statuses {sorted(set(self.statuses.values()))}")
-        expect(lake_rows(self.lake) == self.expected, "lake rows differ from the batch")
-
-    def traced_extra(self) -> None:
-        self._ingest_layers(self.lake, self.paths, self.files, before={})
-
-
-class IngestOverwrite(_Ingest):
-    """One mixed batch into a lake ten times its size, restored before every
-    op: byte-identical resubmissions, corrections of existing PCRs, new PCRs."""
-
-    name = "ingest_overwrite"
-
-    def setup(self) -> None:
-        s = self.size
-        corpus = Corpus(self.seed, SECTIONS, {})
-        lake_files = corpus.new_files(s["lake_files"], s["lake_pcrs"], prefix="lake")
-        lake_paths = write_files(lake_files, os.path.join(self.work, "lake_src"))
-        self.snapshot = os.path.join(self.work, "lake_snapshot")
-        with self.phase("lake_build"):
-            statuses = bookkeeping.ingest_xml_files(self.spark, lake_paths, self.snapshot)
-        expect(all(v == STATUS_OK for v in statuses.values()), "lake build failed")
-        base = expected_rows(lake_files)
-        expect(lake_rows(self.snapshot) == base, "lake build rows differ")
-
-        half = s["batch_pcrs"] // 2
-        corrected = lake_files[-1].pcrs[-half:]
-        self.processed = corpus.mixed_files(1, corrected, s["batch_pcrs"] - half)
-        batch_dir = os.path.join(self.work, "batch")
-        self.resubmitted = write_files(lake_files[:1], batch_dir)
-        self.processed_paths = write_files(self.processed, batch_dir)
-        self.paths = self.resubmitted + self.processed_paths
-
-        self.expected = Counter({k: n for k, n in base.items()
-                                 if k[1] not in {p.uuid for p in corrected}})
-        self.expected.update(expected_rows(self.processed))
-        self.markers = {p.uuid: p.marker for f in lake_files + self.processed
-                        for p in f.pcrs}
-        self.lake = os.path.join(self.work, "lake")
-        self.report.update(lake_elements=sum(base.values()),
-                           batch_elements=sum(f.elements for f in self.processed),
-                           corrections=len(corrected),
-                           new_pcrs=s["batch_pcrs"] - half,
-                           skipped_files=len(self.resubmitted))
-
-    def prepare(self) -> None:
-        shutil.rmtree(self.lake, ignore_errors=True)
-        shutil.copytree(self.snapshot, self.lake)
-        self.before = table_files(self.lake)
-
-    def op(self) -> int:
-        return self._timed_ingest(self.paths, self.lake, self.processed)
-
-    def check(self) -> None:
-        st = self.statuses
-        expect(all(st[p] == SKIPPED for p in self.resubmitted), "resubmission not skipped")
-        expect(all(st[p] == STATUS_OK for p in self.processed_paths), "batch not staged")
-        expect(lake_rows(self.lake) == self.expected, "lake rows differ after overwrite")
-        markers = lake_markers(self.lake)
-        expect(all(markers.get(u) == {m} for u, m in self.markers.items()),
-               "a PCR keeps rows of another version")
-
-    def traced_extra(self) -> None:
-        self._ingest_layers(self.lake, self.processed_paths, self.processed, self.before)
+        builds, execs = [], []
+        for name in PLAN_MIX + NEMSIS_SHAPES:
+            totals = []
+            for _ in range(self.size["query_reps"]):
+                t0 = time.perf_counter()
+                with self.tracer.span("plans.build"):
+                    df = self._frame(name)
+                t1 = time.perf_counter()
+                with self.tracer.span("plans.exec"):
+                    noop(df)
+                builds.append(t1 - t0)
+                execs.append(time.perf_counter() - t1)
+                totals.append(time.perf_counter() - t0)
+            metric = ("warehouse.orphan_check_s" if name == "nemsis_orphan_check"
+                      else f"plans.{name}_s")
+            self.record(metric, statistics.median(totals))
+        self.record("plans.build_s", statistics.median(builds))
+        self.record("plans.exec_s", statistics.median(execs))
+        return 1
 
 
 # --------------------------------------------------------------------------
@@ -405,57 +417,66 @@ class IngestOverwrite(_Ingest):
 
 class StageJdbc(Workload):
     """One flattened, cached batch staged into a DuckDB target that already
-    holds the batch's PCRs; the target file is restored before every op."""
+    holds an earlier version of the batch's PCRs; the target file is
+    restored before every op."""
 
     name = "stage_jdbc"
     unit = "rows"
 
-    def _flatten(self, paths: list[str]):
-        """Flatten the batch once more (every flatten draws new element ids)
-        and derive the sink's registry, per-table frames and comments from
-        it; returns the cached elements."""
-        els = flatten.flatten_xml_files(self.spark, paths).cache()
-        attr_map = warehouse.attribute_columns_per_table(els)
-        tables = warehouse.table_names(els)
-        self.registry = {t: list(COMMON_COLUMNS) + [value_column_name(t)]
-                         + attr_map.get(t, []) for t in tables}
-        self.frames = {t: warehouse.table_frame(els, t, attr_map.get(t, [])) for t in tables}
-        self.comments = warehouse.table_comments(els)
-        return els
-
     def setup(self) -> None:
         s = self.size
-        files = Corpus(self.seed, SECTIONS, {}).new_files(s["stage_files"], s["stage_pcrs"])
-        paths = write_files(files, os.path.join(self.work, "batch"))
+        with self.phase("generate"):
+            files = Corpus(self.seed).new_files(s["stage_files"], s["stage_pcrs"])
+            paths = write_files(files, os.path.join(self.work, "batch"))
         self.keys = sorted(p.uuid for f in files for p in f.pcrs)
         self.batch = dict(sum((f.rows() for f in files), Counter()))
+        expect(sum(self.batch.values()) >= s["stage_min_rows"], "batch below size")
         self.markers = {p.uuid: p.marker for f in files for p in f.pcrs}
         self.stage_dir = os.path.join(self.work, "stage")
         os.makedirs(self.stage_dir)
         self.target = os.path.join(self.work, "target.db")
         self.snapshot = os.path.join(self.work, "target_snapshot.db")
 
-        # an earlier ingest of the same files put the batch's PCRs in the target
-        with self.phase("initial_stage"):
-            earlier = self._flatten(paths)
-            self.prepare(restore=False)
-            self.op()
-            self.conn.close()
-            earlier.unpersist()
+        with self.phase("flatten_batch"):
+            els = flatten.flatten_xml_files(self.spark, paths).cache()
+            els.count()
+        attr_map = warehouse.attribute_columns_per_table(els)
+        tables = warehouse.table_names(els)
+        self.registry = {t: list(COMMON_COLUMNS) + [value_column_name(t)]
+                         + attr_map.get(t, []) for t in tables}
+        self.frames = {t: warehouse.table_frame(els, t, attr_map.get(t, [])) for t in tables}
+        self.comments = warehouse.table_comments(els)
+
+        # The earlier version of the batch's PCRs: the same rows under other
+        # element ids (the target's primary key) and other eRecord.01
+        # markers, written straight into the target with the sink's DDL.
+        with self.phase("initial_fill"):
+            conn = duck_target.DuckConn(self.target)
+            for t, cols in self.registry.items():
+                for stmt in jdbc_sink.create_table_sql(
+                        t, cols[len(COMMON_COLUMNS) + 1:], "public", self.comments.get(t)):
+                    conn.execute_raw(stmt)
+                f = self.frames[t].withColumn(
+                    "element_id", F.concat(F.lit("v0-"), "element_id"))
+                if t == "erecord_01":
+                    f = f.withColumn("erecord_01_value",
+                                     F.concat(F.lit("v0-"), "erecord_01_value"))
+                conn.insert_arrow(t, f.select(*cols).toArrow())
+            conn.close()
         expect(duck_target.table_counts(self.target) == self.batch,
-               "initial staging rows differ")
+               "initial fill rows differ")
+        expect(duck_target.markers(self.target)
+               == {u: "v0-" + m for u, m in self.markers.items()},
+               "initial fill markers differ")
         shutil.copyfile(self.target, self.snapshot)
 
-        with self.phase("flatten_batch"):
-            self._flatten(paths).count()
         header = sum((f.header_rows for f in files), Counter())
         # PCR rows are replaced; rows outside any PCR are appended
         self.want = {t: n + header[t] for t, n in self.batch.items()}
         self.report.update(batch_rows=sum(self.batch.values()), tables=len(self.registry))
 
-    def prepare(self, restore: bool = True) -> None:
-        if restore:
-            shutil.copyfile(self.snapshot, self.target)
+    def prepare(self) -> None:
+        shutil.copyfile(self.snapshot, self.target)
         for f in os.listdir(self.stage_dir):
             os.remove(os.path.join(self.stage_dir, f))
         self.conn = duck_target.DuckConn(self.target)
@@ -463,14 +484,17 @@ class StageJdbc(Workload):
         self.counters = duck_target.StagingCounters()
         self.phases: dict = {}
 
+    def _stage(self, frames) -> dict[str, int]:
+        return jdbc_sink.stage_to_jdbc_distributed(
+            self.conn, registry=self.registry, frames=frames,
+            pcr_keys=self.keys, comments=self.comments,
+            phase_timings=self.phases,
+            **duck_target.staging_hooks(self.stage_dir, self.counters))
+
     def op(self) -> int:
         self.jobs.mark()
         with self.tracer.span("jdbc_sink.stage_to_jdbc_distributed"):
-            self.inserted = jdbc_sink.stage_to_jdbc_distributed(
-                self.conn, registry=self.registry, frames=self.frames,
-                pcr_keys=self.keys, comments=self.comments,
-                phase_timings=self.phases,
-                **duck_target.staging_hooks(self.stage_dir, self.counters))
+            self.inserted = self._stage(self.frames)
         self.op_jobs = self.jobs.since_mark()
         return sum(self.inserted.values())
 
@@ -492,94 +516,4 @@ class StageJdbc(Workload):
         self.record("jdbc_sink.driver_statements", self.conn.statements)
 
 
-# --------------------------------------------------------------------------
-# query mix
-# --------------------------------------------------------------------------
-
-
-class QueryMix(Workload):
-    """Closed loop over registered plans and the paper's NEMSIS query shapes.
-    One op is one query; the loop always runs whole passes of the mix."""
-
-    name = "query_mix"
-    unit = "queries"
-    layer_units = {
-        **{f"plans.{q}_s": "s" for q in PLAN_MIX + NEMSIS_SHAPES[:2]},
-        "plans.build_s": "s",
-        "plans.exec_s": "s",
-        "warehouse.orphan_check_s": "s",
-        "self.plans_s": "s",
-    }
-
-    def setup(self) -> None:
-        s = self.size
-        self.sf_dir = os.path.join(self.work, "tables")
-        self.report["table_rows"] = tables_gen.generate(self.sf_dir, self.seed, s["sf"])
-        corpus = Corpus(self.seed, SECTIONS, {})
-        files = corpus.new_files(1, s["mix_pcrs"])
-        self.lake = os.path.join(self.work, "lake")
-        with self.phase("lake_build"):
-            statuses = bookkeeping.ingest_xml_files(
-                self.spark, write_files(files, os.path.join(self.work, "xml")), self.lake)
-        expect(all(v == STATUS_OK for v in statuses.values()), "lake build failed")
-        self.child_rows = sum(f.rows()[CHILD] for f in files)
-        self.mix = PLAN_MIX + NEMSIS_SHAPES
-        self.i = 0
-        t = time.perf_counter()
-        self.check_pass()
-        # the check pass runs the whole mix once: it is the first warm-up round
-        self.warm_rounds = [time.perf_counter() - t]
-
-    def round_ops(self) -> int:
-        return len(self.mix)
-
-    def _frame(self, name: str):
-        if name in QUERIES:
-            return QUERIES[name].spark(self.spark, self.sf_dir)
-        child = self.spark.read.parquet(os.path.join(self.lake, CHILD))
-        parent = self.spark.read.parquet(os.path.join(self.lake, PARENT))
-        if name == "nemsis_value_select":
-            return child.select("pcr_uuid_context", f"{CHILD}_value")
-        if name == "nemsis_parent_child_join":
-            return child.join(parent, child["parent_element_id"] == parent["element_id"])
-        return warehouse.orphan_check(child, parent)
-
-    def check_pass(self) -> None:
-        """Every plan against its DuckDB oracle and the NEMSIS shapes against
-        the generator's counts: once per run, outside the timed window."""
-        want = tables_gen.oracle_digests(
-            self.sf_dir, {q: QUERIES[q].oracle for q in PLAN_MIX})
-        bad = [q for q in PLAN_MIX
-               if tables_gen.result_digest(self._frame(q).toPandas()) != want[q]]
-        expect(not bad, f"plans differ from their oracle: {bad}")
-        expect(self._frame("nemsis_orphan_check").count() == 0, "orphan rows")
-        expect(self._frame("nemsis_parent_child_join").count() == self.child_rows,
-               "parent/child join rows differ from the generated child count")
-        expect(self._frame("nemsis_value_select").count() == self.child_rows,
-               "value select rows differ")
-
-    def op(self) -> int:
-        name = self.mix[self.i % len(self.mix)]
-        self.i += 1
-        self.last = name
-        t0 = time.perf_counter()
-        with self.tracer.span("plans.build"):
-            df = self._frame(name)
-        t1 = time.perf_counter()
-        with self.tracer.span("plans.exec"):
-            noop(df)
-        self.t_build, self.t_exec = t1 - t0, time.perf_counter() - t1
-        return 1
-
-    def traced_extra(self) -> None:
-        total = self.t_build + self.t_exec
-        if self.last == "nemsis_orphan_check":
-            self.record("warehouse.orphan_check_s", total)
-        else:
-            self.record(f"plans.{self.last}_s", total)
-        self.record("plans.build_s", self.t_build)
-        self.record("plans.exec_s", self.t_exec)
-
-
-WORKLOADS = {w.name: w for w in (IngestFresh, IngestOverwrite, StageJdbc, QueryMix)}
-
+WORKLOADS = {w.name: w for w in (IngestOverwrite, StageJdbc)}
