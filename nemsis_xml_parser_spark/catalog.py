@@ -10,15 +10,29 @@ joins (SURVEY A9/F4) are ordinary joins.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 BOOKKEEPING_PREFIX = "_"
 
-# Scratch-directory suffixes used by the rewrite paths (bookkeeping EP1,
-# migration) — a crash between staging write and rename must not leave a
-# directory that later scans mistake for a real dynamic table.
+# Scratch-directory suffixes used by the rewrite paths (the PCR-scoped
+# overwrite, migration) — a crash between staging write and rename must not
+# leave a directory that later scans mistake for a real dynamic table.
 SCRATCH_SUFFIXES = ("__staging", "__migrating")
+
+
+def replace_table_dir(
+    frame: DataFrame, path: str, scratch_suffix: str = "__staging"
+) -> None:
+    """Rewrite the parquet table at ``path`` with ``frame``, which may read
+    ``path`` itself: parquet overwrite cannot read and clobber the same path
+    in one job, so the rows go to a scratch directory (one of
+    ``SCRATCH_SUFFIXES``) that then replaces the table."""
+    scratch = path + scratch_suffix
+    frame.write.mode("overwrite").parquet(scratch)
+    shutil.rmtree(path)
+    os.rename(scratch, path)
 
 
 def is_table_dir(name: str) -> bool:
@@ -39,8 +53,6 @@ def clean_scratch_dirs(warehouse_dir: str) -> list[str]:
     """Remove leftover ``__staging``/``__migrating`` directories from a
     crashed rewrite (the subsequent re-ingest regenerates them).  Returns the
     removed names."""
-    import shutil
-
     removed = []
     if os.path.isdir(warehouse_dir):
         for d in os.listdir(warehouse_dir):

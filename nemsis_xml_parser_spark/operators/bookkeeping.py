@@ -25,7 +25,6 @@ import hashlib
 import os
 import shutil
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -81,10 +80,11 @@ def read_files_processed(spark: SparkSession, warehouse_dir: str) -> DataFrame:
 
 def files_to_process(
     spark: SparkSession, warehouse_dir: str, file_paths: list[str]
-) -> tuple[list[str], list[str]]:
-    """Split incoming files into (todo, skipped) by MD5 anti-join against
-    previously-succeeded files (SURVEY D5 — the check the reference records
-    data for but never performs)."""
+) -> tuple[dict[str, str | None], list[str]]:
+    """Split incoming files into ({todo: md5}, skipped) by MD5 anti-join
+    against previously-succeeded files (SURVEY D5 — the check the reference
+    records data for but never performs).  Each file is hashed once; the
+    todo hash is the one the log records."""
     seen = {
         r["md5_hash"]
         for r in read_files_processed(spark, warehouse_dir)
@@ -93,9 +93,13 @@ def files_to_process(
         .distinct()
         .collect()
     }
-    todo, skipped = [], []
+    todo, skipped = {}, []
     for p in file_paths:
-        (skipped if file_md5(p) in seen else todo).append(p)
+        md5 = file_md5(p)
+        if md5 in seen:
+            skipped.append(p)
+        else:
+            todo[p] = md5
     return todo, skipped
 
 
@@ -127,8 +131,9 @@ def ingest_xml_files(
 ) -> dict[str, str]:
     """EP1 pipeline (SURVEY G3) over a batch of XML files:
 
-    md5-skip → flatten → PCR-scoped overwrite per tag → warehouse write →
-    bookkeeping log → archive/error routing.  Returns {file: status}.
+    md5-skip → flatten → PCR-scoped overwrite of the per-tag lake
+    (``overwrite.overwrite_pcrs``) → bookkeeping log → archive/error
+    routing.  Returns {file: status}.
 
     Unlike the reference's file-at-a-time loop, the whole batch flattens in
     ONE distributed pass; per-file statuses are derived from the parse
@@ -136,88 +141,33 @@ def ingest_xml_files(
     error-dir routing (parity: main_ingest.py:386-397).
     """
     from .flatten import flatten_xml_files
-    from .warehouse import attribute_columns_per_table, table_frame, table_names
+    from .overwrite import overwrite_pcrs
 
     statuses: dict[str, str] = {}
     todo, skipped = files_to_process(spark, warehouse_dir, file_paths)
     for p in skipped:
         statuses[p] = "Skipped_MD5_Seen"
 
-    missing = [p for p in todo if not os.path.exists(p)]
-    for p in missing:
+    for p in [p for p in todo if not os.path.exists(p)]:
         statuses[p] = STATUS_ERROR_NOT_FOUND
-    todo = [p for p in todo if os.path.exists(p)]
+        del todo[p]
     if not todo:
         return statuses
 
-    elements = flatten_xml_files(spark, todo, deterministic_ids=deterministic_ids)
+    elements = flatten_xml_files(spark, list(todo), deterministic_ids=deterministic_ids)
     elements = elements.cache()
     try:
         parsed_files = {
             r["file"] for r in elements.select("file").distinct().collect()
         }
-        incoming_tables = table_names(elements)
-        attr_map = attribute_columns_per_table(elements)
+        overwrite_pcrs(elements, warehouse_dir)
 
-        # PCR-scoped overwrite against every existing dynamic table
-        # (SURVEY D3): one anti-join per table on the broadcast key set.
-        pcr_keys = (
-            elements.select("pcr_uuid").where(F.col("pcr_uuid").isNotNull()).distinct()
-        )
-        # drop crashed-rewrite leftovers first so a '{table}__staging' dir is
-        # never treated as a real dynamic table, then list survivors
-        from ..catalog import clean_scratch_dirs, list_table_dirs
-
-        clean_scratch_dirs(warehouse_dir)
-        existing_tables = list_table_dirs(warehouse_dir)
-
-        def write_table(t: str) -> None:
-            path = os.path.join(warehouse_dir, t)
-            new_rows = (
-                table_frame(elements, t, attr_map.get(t, []))
-                if t in incoming_tables
-                else None
-            )
-            if t in existing_tables:
-                old = spark.read.parquet(path)
-                kept = old.join(
-                    F.broadcast(
-                        pcr_keys.withColumnRenamed("pcr_uuid", "pcr_uuid_context")
-                    ),
-                    on="pcr_uuid_context",
-                    how="left_anti",
-                )
-                merged = (
-                    kept.unionByName(new_rows, allowMissingColumns=True)
-                    if new_rows is not None
-                    else kept
-                )
-                # rewrite via a staging dir: parquet overwrite cannot read
-                # and clobber the same path in one job
-                staging = path + "__staging"
-                merged.write.mode("overwrite").parquet(staging)
-                shutil.rmtree(path)
-                os.rename(staging, path)
-            elif new_rows is not None:
-                new_rows.write.mode("overwrite").parquet(path)
-
-        # concurrent per-tag write jobs: outputs are disjoint directories and
-        # Spark's scheduler handles concurrent actions, so the only thing
-        # serial execution buys is idle cores between job barriers.  The
-        # reference processes tags inside a single-threaded per-element loop
-        # (/root/reference/main_ingest.py:429-495).
-        all_tables = sorted(set(existing_tables) | set(incoming_tables))
-        with ThreadPoolExecutor(max_workers=min(8, max(1, len(all_tables)))) as ex:
-            for fut in [ex.submit(write_table, t) for t in all_tables]:
-                fut.result()  # propagate the first failure
-
-        file_urls = {p: "file:" + os.path.abspath(p) for p in todo}
         records = []
-        for p in todo:
-            ok = file_urls[p] in parsed_files
+        for p, md5 in todo.items():
+            ok = "file:" + os.path.abspath(p) in parsed_files
             status = STATUS_OK if ok else STATUS_ERROR_PARSE
             statuses[p] = status
-            records.append((os.path.basename(p), file_md5(p), status))
+            records.append((os.path.basename(p), md5, status))
         log_processed_files(spark, warehouse_dir, records)
 
         for p in todo:

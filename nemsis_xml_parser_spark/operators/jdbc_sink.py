@@ -55,8 +55,6 @@ class Dialect:
     if_not_exists: bool = True
     #: engine supports COMMENT ON TABLE (Derby has no table comments)
     supports_comment_on: bool = True
-    #: DBAPI placeholder style: psycopg2 "format", DuckDB/JDBC "qmark"
-    paramstyle: str = "format"
 
     @property
     def ine(self) -> str:
@@ -69,7 +67,6 @@ DUCKDB = Dialect(
     # DuckDB has no SERIAL; sequences exist but the bookkeeping PK only
     # needs uniqueness in the live tests
     serial_pk="INTEGER PRIMARY KEY",
-    paramstyle="qmark",
 )
 DERBY = Dialect(
     name="derby",
@@ -78,7 +75,6 @@ DERBY = Dialect(
     serial_pk="INTEGER GENERATED ALWAYS AS IDENTITY PRIMARY KEY",
     if_not_exists=False,
     supports_comment_on=False,
-    paramstyle="qmark",
 )
 
 DIALECTS = {d.name: d for d in (POSTGRES, DUCKDB, DERBY)}
@@ -118,9 +114,8 @@ def widen_table_sql(
 ) -> list[str]:
     """Schema evolution by widening (main_ingest.py:252-271), one ALTER per
     newly-observed attribute column."""
-    ine = "IF NOT EXISTS " if dialect.if_not_exists else ""
     return [
-        f'ALTER TABLE "{schema}"."{table}" ADD COLUMN {ine}"{a}" '
+        f'ALTER TABLE "{schema}"."{table}" ADD COLUMN {dialect.ine}"{a}" '
         f"{dialect.text_type};"
         for a in new_attr_cols
     ]
@@ -228,6 +223,22 @@ def delete_by_keys_sql(table: str, keys: list[str], schema: str = "public") -> s
     )
 
 
+def _prepare_target(cur, table, cols, pcr_keys, comments, schema) -> None:
+    """Target DDL and the key-scoped DELETE, inside the caller's
+    transaction: CREATE TABLE IF NOT EXISTS, then ADD COLUMN IF NOT EXISTS
+    for every attribute column of the batch (an existing table gains the
+    columns a new batch brings), then DELETE by PCR keys."""
+    attr_cols = [
+        c for c in cols if c not in COMMON_COLUMNS and c != value_column_name(table)
+    ]
+    for stmt in create_table_sql(table, attr_cols, schema, (comments or {}).get(table)):
+        cur.execute(stmt)
+    for stmt in widen_table_sql(table, attr_cols, schema):
+        cur.execute(stmt)
+    if pcr_keys:
+        cur.execute(delete_by_keys_sql(table, pcr_keys, schema))
+
+
 #: DBAPI paramstyle → placeholder token (psycopg2 is "format", duckdb and
 #: most JDBC-bridged drivers are "qmark")
 _PLACEHOLDERS = {"format": "%s", "qmark": "?"}
@@ -255,8 +266,8 @@ def stage_to_jdbc(
     paramstyle: str = "format",
 ) -> dict[str, int]:
     """Execute the full staging transaction over a DBAPI connection:
-    DDL → FK DDL → set-based DELETE → batched INSERTs → commit (rollback on
-    any error — D6 parity).  Returns rows inserted per table.
+    DDL (create, widen) → set-based DELETE → batched INSERTs → commit
+    (rollback on any error — D6 parity).  Returns rows inserted per table.
 
     ``frames`` values must be per-tag table frames (warehouse.table_frame
     shape).  This single-connection form funnels rows through the driver —
@@ -268,13 +279,7 @@ def stage_to_jdbc(
     cur = conn.cursor()
     try:
         for table, cols in registry.items():
-            attr_cols = [c for c in cols if c not in COMMON_COLUMNS and c != value_column_name(table)]
-            for stmt in create_table_sql(
-                table, attr_cols, schema, (comments or {}).get(table)
-            ):
-                cur.execute(stmt)
-            if pcr_keys:
-                cur.execute(delete_by_keys_sql(table, pcr_keys, schema))
+            _prepare_target(cur, table, cols, pcr_keys, comments, schema)
             rows = [tuple(r) for r in frames[table].collect()]
             sql = insert_sql(table, cols, schema, paramstyle)
             for i in range(0, len(rows), batch_size):
@@ -492,9 +497,9 @@ def stage_to_jdbc_distributed(
     No data row ever passes through the driver — the driver collects one
     (table, partition_id, n_rows) metadata triple per partition.
 
-    Phase 2 (driver, ONE transaction): target DDL → set-based DELETE by PCR
-    keys → ``INSERT INTO target SELECT .. FROM stage`` per staged partition
-    → single commit.  A failure anywhere rolls the target back untouched —
+    Phase 2 (driver, ONE transaction): target DDL (create, widen) →
+    set-based DELETE by PCR keys → ``INSERT INTO target SELECT .. FROM
+    stage`` per staged partition → single commit.  A failure anywhere rolls the target back untouched —
     the same per-file all-or-nothing guarantee as the reference
     (/root/reference/main_ingest.py:644) and as ``stage_to_jdbc``, but the
     data motion is executor-parallel server-side set operations.
@@ -601,16 +606,7 @@ def stage_to_jdbc_distributed(
     cur = driver_conn.cursor()
     try:
         for table, cols in registry.items():
-            attr_cols = [
-                c for c in cols
-                if c not in COMMON_COLUMNS and c != value_column_name(table)
-            ]
-            for stmt in create_table_sql(
-                table, attr_cols, schema, (comments or {}).get(table)
-            ):
-                cur.execute(stmt)
-            if pcr_keys:
-                cur.execute(delete_by_keys_sql(table, pcr_keys, schema))
+            _prepare_target(cur, table, cols, pcr_keys, comments, schema)
         collists = {
             table: ", ".join(f'"{c}"' for c in cols)
             for table, cols in registry.items()

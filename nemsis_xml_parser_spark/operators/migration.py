@@ -17,11 +17,11 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .. import catalog
 from ..naming import value_column_name
 from ..schema import INGESTION_LOGIC_VERSION
 
@@ -80,33 +80,20 @@ def require_schema_version(
         )
 
 
-def _dynamic_tables(warehouse_dir: str) -> list[str]:
-    """Catalog scan excluding bookkeeping tables (C10 parity:
-    main_ingest.py:296-305 excludes pg_% and the bookkeeping pair)."""
-    from ..catalog import list_table_dirs
-
-    return list_table_dirs(warehouse_dir)
-
-
-def _rewrite(df: DataFrame, path: str) -> None:
-    staging = path + "__migrating"
-    df.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(path)
-    os.rename(staging, path)
-
-
 def migrate_text_content_to_value_columns(
     spark: SparkSession, warehouse_dir: str
 ) -> dict[str, str]:
     """G5 upgrade: for every dynamic table that still has a ``text_content``
     column, rename it to ``{table}_value``.  Returns {table: new_column}."""
     renamed: dict[str, str] = {}
-    for t in _dynamic_tables(warehouse_dir):
+    for t in catalog.list_table_dirs(warehouse_dir):
         path = os.path.join(warehouse_dir, t)
         df = spark.read.parquet(path)
         target = value_column_name(t)
         if "text_content" in df.columns and target not in df.columns:
-            _rewrite(df.withColumnRenamed("text_content", target), path)
+            catalog.replace_table_dir(
+                df.withColumnRenamed("text_content", target), path, "__migrating"
+            )
             renamed[t] = target
     return renamed
 
@@ -116,11 +103,13 @@ def downgrade_value_columns_to_text_content(
 ) -> dict[str, str]:
     """G5 downgrade (reversibility parity: 1941212973eb downgrade path)."""
     renamed: dict[str, str] = {}
-    for t in _dynamic_tables(warehouse_dir):
+    for t in catalog.list_table_dirs(warehouse_dir):
         path = os.path.join(warehouse_dir, t)
         df = spark.read.parquet(path)
         source = value_column_name(t)
         if source in df.columns and "text_content" not in df.columns:
-            _rewrite(df.withColumnRenamed(source, "text_content"), path)
+            catalog.replace_table_dir(
+                df.withColumnRenamed(source, "text_content"), path, "__migrating"
+            )
             renamed[t] = "text_content"
     return renamed

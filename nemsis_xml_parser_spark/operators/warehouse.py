@@ -16,12 +16,12 @@ Spark-first redesign:
   {table}_value`` + attribute columns, names lowercased, attr names that
   collide with the common columns silently dropped — parity with the
   column-intersection filter (/root/reference/main_ingest.py:479-483);
-* ``write_warehouse`` defaults to ONE shuffle-free write of the canonical
-  schema ``partitionBy("table_name")`` (single Spark job for the whole
-  fan-out); ``read_table`` projects any table back into the reference's
-  exact pivoted shape via a partition-pruned scan.  ``layout="per-table"``
-  keeps the one-directory-per-tag compat layout, writing parents before
-  children using the flatten's ``depth`` (FK ordering, SURVEY §7.4).
+* ``overwrite.overwrite_pcrs`` writes these frames as the per-tag lake
+  (one parquet directory per table) that batch and streaming ingest keep;
+* ``write_warehouse`` is the partitioned alternative: ONE shuffle-free
+  write of the canonical schema ``partitionBy("table_name")`` (a single
+  Spark job for the whole fan-out); ``read_table`` projects any table back
+  into the reference's exact pivoted shape via a partition-pruned scan.
 
 At 100 TB the partitioned layout is the one that holds: ingest cost is a
 single job regardless of tag count (NEMSIS has hundreds of tags — per-tag
@@ -30,9 +30,6 @@ consumer read is pruned to its table's directory.
 """
 
 from __future__ import annotations
-
-import os
-from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -117,31 +114,19 @@ def table_comments(elements: DataFrame) -> dict[str, str]:
     return {r["t"]: r["path"] for r in rows}
 
 
-def write_warehouse(
-    elements: DataFrame,
-    lake_dir: str,
-    mode: str = "overwrite",
-    file_format: str = "parquet",
-    layout: str = "partitioned",
-) -> dict[str, list[str]]:
-    """Materialize the per-tag warehouse under ``lake_dir``.
-
-    ``layout="partitioned"`` (default, the 100 TB path): ONE write job of
-    the canonical element schema ``partitionBy("table_name")`` — no per-tag
-    job fan-out, no shuffle (partitioning is directory layout, not an
-    Exchange), and every per-table read is partition-pruned.  The
+def write_warehouse(elements: DataFrame, lake_dir: str) -> dict[str, list[str]]:
+    """Materialize the partitioned warehouse under ``lake_dir``: ONE write
+    job of the canonical element schema ``partitionBy("table_name")`` — no
+    per-tag job fan-out, no shuffle (partitioning is directory layout, not
+    an Exchange), and every per-table read is partition-pruned.  The
     reference's exact per-table shape (value column renamed, attributes
     pivoted) is a lazy projection applied at read time by ``read_table``.
     Atomicity of the whole fan-out is the single job commit — closer to the
     reference's one-transaction-per-file guarantee (main_ingest.py:500-642)
     than N independent per-tag jobs.
 
-    ``layout="per-table"`` (compat): one pivoted parquet directory per tag,
-    written parents-before-children (ascending min-depth) so a referential
-    reader never sees a child table whose parent is missing.
-
     Returns {table: [columns...]} — the warehouse schema registry, in the
-    reference's pivoted shape for both layouts.
+    reference's pivoted shape.
     """
     elements = elements.cache()
     try:
@@ -152,52 +137,20 @@ def write_warehouse(
             + attr_map.get(t, [])
             for t in table_names(elements)
         }
-
-        if layout == "partitioned":
-            (
-                elements.select(
-                    F.lower(F.col("table_name")).alias("table_name"),
-                    F.col("element_id"),
-                    F.col("parent_element_id"),
-                    F.col("pcr_uuid").alias("pcr_uuid_context"),
-                    F.col("element_tag").alias("original_tag_name"),
-                    F.col("value"),
-                    F.col("attributes"),
-                )
-                .write.mode(mode)
-                .format(file_format)
-                .partitionBy("table_name")
-                .save(lake_dir)
+        (
+            elements.select(
+                F.lower(F.col("table_name")).alias("table_name"),
+                F.col("element_id"),
+                F.col("parent_element_id"),
+                F.col("pcr_uuid").alias("pcr_uuid_context"),
+                F.col("element_tag").alias("original_tag_name"),
+                F.col("value"),
+                F.col("attributes"),
             )
-            return registry
-        if layout != "per-table":
-            raise ValueError(f"unknown layout {layout!r}")
-
-        depth_rows = (
-            elements.groupBy(F.lower(F.col("table_name")).alias("t"))
-            .agg(F.min("depth").alias("d"))
-            .collect()
+            .write.mode("overwrite")
+            .partitionBy("table_name")
+            .parquet(lake_dir)
         )
-        levels: dict[int, list[str]] = {}
-        for r in depth_rows:
-            levels.setdefault(r["d"], []).append(r["t"])
-
-        def write_table(t: str) -> None:
-            frame = table_frame(elements, t, attr_map.get(t, []))
-            frame.write.mode(mode).format(file_format).save(os.path.join(lake_dir, t))
-
-        # parent-before-child across depth levels (barrier per level), but
-        # concurrent write jobs within a level — sibling tags have no
-        # referential ordering between them, so serializing them only
-        # leaves cores idle between job barriers
-        for d in sorted(levels):
-            with ThreadPoolExecutor(
-                max_workers=min(8, len(levels[d]))
-            ) as ex:
-                for fut in [
-                    ex.submit(write_table, t) for t in sorted(levels[d])
-                ]:
-                    fut.result()
         return registry
     finally:
         elements.unpersist()
@@ -206,8 +159,8 @@ def write_warehouse(
 def read_table(
     spark, lake_dir: str, table: str, attr_cols: list[str] | None = None
 ) -> DataFrame:
-    """Read one table from a ``layout="partitioned"`` lake in the
-    reference's exact pivoted shape (FIXTURES.md F3).
+    """Read one table from a ``write_warehouse`` lake in the reference's
+    exact pivoted shape (FIXTURES.md F3).
 
     The ``table_name`` filter is partition pruning (a directory pick, zero
     data read outside the table); the value-column rename and attribute

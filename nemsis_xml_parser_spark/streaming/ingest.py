@@ -12,13 +12,11 @@ processed_xml_archive/ behavior natively.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.flatten import _flatten_partition
+from ..operators.overwrite import overwrite_pcrs
 from ..schema import ELEMENT_SCHEMA
 
 
@@ -58,14 +56,9 @@ def start_warehouse_stream(
     glob: str = "*.xml",
     deterministic_ids: bool = False,
 ) -> StreamingQuery:
-    """Microbatch EP1: each batch of files goes through the same per-tag
-    overwrite-and-write path as batch ingest (foreachBatch bridges the
-    streaming plan to the batch sink operators)."""
-    from ..operators.warehouse import attribute_columns_per_table, table_frame, table_names
-    import os
-    import shutil
-    import pyspark.sql.functions as F
-
+    """Microbatch EP1: each batch of files goes through the same PCR-scoped
+    overwrite as batch ingest (``overwrite.overwrite_pcrs``; foreachBatch
+    bridges the streaming plan to the batch sink)."""
     elements_stream = stream_elements(
         spark, watch_dir, glob=glob, deterministic_ids=deterministic_ids
     )
@@ -75,39 +68,7 @@ def start_warehouse_stream(
             return
         batch_df = batch_df.cache()
         try:
-            incoming = table_names(batch_df)
-            attr_map = attribute_columns_per_table(batch_df)
-            pcr_keys = (
-                batch_df.select("pcr_uuid")
-                .where(F.col("pcr_uuid").isNotNull())
-                .distinct()
-                .withColumnRenamed("pcr_uuid", "pcr_uuid_context")
-            )
-            from ..catalog import clean_scratch_dirs, list_table_dirs
-
-            clean_scratch_dirs(warehouse_dir)
-            existing = list_table_dirs(warehouse_dir)
-            for t in sorted(set(existing) | set(incoming)):
-                path = os.path.join(warehouse_dir, t)
-                new_rows = (
-                    table_frame(batch_df, t, attr_map.get(t, []))
-                    if t in incoming
-                    else None
-                )
-                if t in existing:
-                    old = spark.read.parquet(path)
-                    kept = old.join(F.broadcast(pcr_keys), "pcr_uuid_context", "left_anti")
-                    merged = (
-                        kept.unionByName(new_rows, allowMissingColumns=True)
-                        if new_rows is not None
-                        else kept
-                    )
-                    staging = path + "__staging"
-                    merged.write.mode("overwrite").parquet(staging)
-                    shutil.rmtree(path)
-                    os.rename(staging, path)
-                elif new_rows is not None:
-                    new_rows.write.mode("overwrite").parquet(path)
+            overwrite_pcrs(batch_df, warehouse_dir)
         finally:
             batch_df.unpersist()
 

@@ -78,12 +78,11 @@ class DuckDBAPIConn:
         return self._c.execute(sql).fetchall()
 
 
-@pytest.fixture()
-def staged(spark):
+def _batch(spark, xml):
     # fresh uuids per flatten, like the reference's per-ingest uuid4
     # (main_ingest.py element_id generation) — a re-stage of the same file
     # therefore never collides on the PRIMARY KEY
-    els = flatten_xml_strings(spark, [("f.xml", NEMSIS_XML)], deterministic_ids=False)
+    els = flatten_xml_strings(spark, [("f.xml", xml)], deterministic_ids=False)
     attr_map = attribute_columns_per_table(els)
     tables = sorted(attr_map.keys() | {t for t in (
         r["t"] for r in els.selectExpr("lower(table_name) t").distinct().collect()
@@ -96,6 +95,11 @@ def staged(spark):
     keys = [r["pcr_uuid"] for r in els.select("pcr_uuid").where(
         "pcr_uuid is not null").distinct().collect()]
     return els, registry, frames, keys
+
+
+@pytest.fixture()
+def staged(spark):
+    return _batch(spark, NEMSIS_XML)
 
 
 def test_stage_roundtrip_and_idempotent_restage(spark, staged):
@@ -389,3 +393,45 @@ def test_distributed_stage_rows_bulk_hook_parity(spark, staged, tmp_path):
         got = sorted(conn.q(f'SELECT * FROM "public"."{t}"'))
         want = sorted(ref_conn.q(f'SELECT * FROM "public"."{t}"'))
         assert got == want, t
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_restage_widens_existing_table(spark, tmp_path, distributed):
+    """A batch bringing an attribute the target table lacks: both staging
+    paths add the column (ALTER ... ADD COLUMN IF NOT EXISTS) in the same
+    transaction as the DELETE and INSERT, and its values land."""
+    conn = DuckDBAPIConn()
+
+    def stage(xml, n):
+        _, registry, frames, keys = _batch(spark, xml)
+        if not distributed:
+            return J.stage_to_jdbc(conn, registry, frames, keys, paramstyle="qmark")
+        stage_dir = tmp_path / f"batch{n}"
+        stage_dir.mkdir()
+        inserted = J.stage_to_jdbc_distributed(
+            conn, registry=registry, frames=frames, pcr_keys=keys,
+            **_duckdb_file_hooks(stage_dir),
+        )
+        for (name,) in conn.q(
+            "SELECT database_name FROM duckdb_databases() "
+            "WHERE database_name LIKE 'stg%'"
+        ):
+            conn._c.execute(f"DETACH {name};")
+        return inserted
+
+    def columns():
+        return [r[0] for r in conn.q(
+            "SELECT column_name FROM information_schema.columns "
+            "WHERE table_name = 'erecord_01' ORDER BY ordinal_position"
+        )]
+
+    stage(NEMSIS_XML, 1)
+    assert "newattr" not in columns()
+    widened = NEMSIS_XML.replace(
+        "<eRecord.01>rec-1<", '<eRecord.01 NewAttr="n1">rec-1<'
+    )
+    assert stage(widened, 2)["erecord_01"] == 2
+    assert columns()[-1] == "newattr"
+    assert sorted(conn.q(
+        'SELECT "erecord_01_value", "newattr" FROM "public"."erecord_01"'
+    )) == [("rec-1", "n1"), ("rec-2", None)]

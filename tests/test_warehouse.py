@@ -5,6 +5,8 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from nemsis_xml_parser_spark.catalog import list_table_dirs
+from nemsis_xml_parser_spark.operators.bookkeeping import ingest_xml_files
 from nemsis_xml_parser_spark.operators.flatten import flatten_xml_strings
 from nemsis_xml_parser_spark.operators.warehouse import (
     attribute_columns_per_table,
@@ -105,11 +107,14 @@ def test_write_warehouse_partitioned_single_pass(elements, spark, tmp_path):
     assert orphan_check(child, parent).count() == 0
 
 
-def test_write_warehouse_per_table_compat(elements, spark, tmp_path):
+def test_ingested_lake_orphan_check(elements, spark, tmp_path):
+    """The per-tag lake batch ingest writes: one directory per table, and
+    the orphan check holds on it."""
+    src = tmp_path / "f.xml"
+    src.write_text(NEMSIS_XML)
     lake = str(tmp_path / "lake")
-    registry = write_warehouse(elements, lake, layout="per-table")
-    assert "evitals_01" in registry
-    assert sorted(os.listdir(lake)) == sorted(registry.keys())
+    ingest_xml_files(spark, [str(src)], lake, deterministic_ids=True)
+    assert list_table_dirs(lake) == table_names(elements)
     child = spark.read.parquet(os.path.join(lake, "evitals_vitalgroup"))
     parent = spark.read.parquet(os.path.join(lake, "evitals"))
     assert orphan_check(child, parent).count() == 0
