@@ -16,23 +16,23 @@ from pyspark.sql import DataFrame, SparkSession
 
 BOOKKEEPING_PREFIX = "_"
 
-# Scratch-directory suffixes used by the rewrite paths (the PCR-scoped
-# overwrite, migration) — a crash between staging write and rename must not
-# leave a directory that later scans mistake for a real dynamic table.
-SCRATCH_SUFFIXES = ("__staging", "__migrating")
+# Scratch-directory suffixes of the rewrite paths: the PCR-scoped overwrite
+# writes ``{table}__staging``, the structural migration ``{table}__migrating``.
+# A crash between scratch write and swap must not leave a directory that
+# later scans mistake for a real dynamic table.
+STAGING_SUFFIX = "__staging"
+MIGRATING_SUFFIX = "__migrating"
+SCRATCH_SUFFIXES = (STAGING_SUFFIX, MIGRATING_SUFFIX)
 
 
-def replace_table_dir(
-    frame: DataFrame, path: str, scratch_suffix: str = "__staging"
-) -> None:
-    """Rewrite the parquet table at ``path`` with ``frame``, which may read
-    ``path`` itself: parquet overwrite cannot read and clobber the same path
-    in one job, so the rows go to a scratch directory (one of
-    ``SCRATCH_SUFFIXES``) that then replaces the table."""
-    scratch = path + scratch_suffix
-    frame.write.mode("overwrite").parquet(scratch)
-    shutil.rmtree(path)
-    os.rename(scratch, path)
+def swap_in_scratch_dir(path: str, scratch_suffix: str) -> None:
+    """Replace the table directory ``path`` (if any) with its fully written
+    scratch directory ``path + scratch_suffix``.  Rewrites that read
+    ``path`` itself cannot write it in place, so they write the scratch
+    directory first and call this once the write has finished."""
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    os.rename(path + scratch_suffix, path)
 
 
 def is_table_dir(name: str) -> bool:
@@ -50,7 +50,7 @@ def list_table_dirs(warehouse_dir: str) -> list[str]:
 
 
 def clean_scratch_dirs(warehouse_dir: str) -> list[str]:
-    """Remove leftover ``__staging``/``__migrating`` directories from a
+    """Remove leftover scratch directories (``SCRATCH_SUFFIXES``) of a
     crashed rewrite (the subsequent re-ingest regenerates them).  Returns the
     removed names."""
     removed = []

@@ -11,7 +11,7 @@ idempotency on top of the overwrite semantics.
 
 The lake layout is plain parquet directories under a warehouse root:
 
-    {root}/_files_processed/          bookkeeping log (append)
+    {root}/_files_processed/          bookkeeping log (append, one file per batch)
     {root}/{tag}/                     one directory per dynamic table
 
 At 100 TB the same code runs with Delta/Iceberg table paths for ACID
@@ -26,8 +26,10 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schema import (
     FILES_PROCESSED_SCHEMA,
@@ -60,22 +62,29 @@ def log_processed_files(
     records: list[tuple[str, str | None, str]],
 ) -> None:
     """Append (file_name, md5, status) records to the bookkeeping table
-    (parity: main_ingest.py:67-98 + database_setup.py:80-95)."""
+    (parity: main_ingest.py:67-98 + database_setup.py:80-95) as ONE parquet
+    file, so the log every later ``files_to_process`` lists grows by one
+    file per batch."""
     now = dt.datetime.now(dt.timezone.utc).isoformat()
+    names = FILES_PROCESSED_SCHEMA.fieldNames()
     rows = [
-        (str(uuid.uuid4()), name, md5, now, status, INGESTION_LOGIC_VERSION)
+        dict(zip(names, (str(uuid.uuid4()), name, md5, now, status, INGESTION_LOGIC_VERSION)))
         for name, md5, status in records
     ]
-    spark.createDataFrame(rows, schema=FILES_PROCESSED_SCHEMA).write.mode(
-        "append"
-    ).parquet(files_processed_path(warehouse_dir))
+    # a frame made from an arrow table is a local relation: no Python
+    # worker round-trip, and coalesce(1) writes it as one file
+    log = spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(FILES_PROCESSED_SCHEMA)),
+        schema=FILES_PROCESSED_SCHEMA,
+    )
+    log.coalesce(1).write.mode("append").parquet(files_processed_path(warehouse_dir))
 
 
 def read_files_processed(spark: SparkSession, warehouse_dir: str) -> DataFrame:
     path = files_processed_path(warehouse_dir)
     if not os.path.isdir(path):  # first run: empty log
         return spark.createDataFrame([], schema=FILES_PROCESSED_SCHEMA)
-    return spark.read.parquet(path)
+    return spark.read.schema(FILES_PROCESSED_SCHEMA).parquet(path)
 
 
 def files_to_process(

@@ -18,7 +18,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import catalog
@@ -80,6 +80,15 @@ def require_schema_version(
         )
 
 
+def _rewrite_renamed(df: DataFrame, path: str, old: str, new: str) -> None:
+    """Rewrite the table at ``path`` (read as ``df``) with column ``old``
+    renamed to ``new``, through its ``__migrating`` scratch directory."""
+    df.withColumnRenamed(old, new).write.mode("overwrite").parquet(
+        path + catalog.MIGRATING_SUFFIX
+    )
+    catalog.swap_in_scratch_dir(path, catalog.MIGRATING_SUFFIX)
+
+
 def migrate_text_content_to_value_columns(
     spark: SparkSession, warehouse_dir: str
 ) -> dict[str, str]:
@@ -91,9 +100,7 @@ def migrate_text_content_to_value_columns(
         df = spark.read.parquet(path)
         target = value_column_name(t)
         if "text_content" in df.columns and target not in df.columns:
-            catalog.replace_table_dir(
-                df.withColumnRenamed("text_content", target), path, "__migrating"
-            )
+            _rewrite_renamed(df, path, "text_content", target)
             renamed[t] = target
     return renamed
 
@@ -108,8 +115,6 @@ def downgrade_value_columns_to_text_content(
         df = spark.read.parquet(path)
         source = value_column_name(t)
         if source in df.columns and "text_content" not in df.columns:
-            catalog.replace_table_dir(
-                df.withColumnRenamed(source, "text_content"), path, "__migrating"
-            )
+            _rewrite_renamed(df, path, source, "text_content")
             renamed[t] = "text_content"
     return renamed

@@ -10,24 +10,50 @@ broadcast) key set of the whole batch, unioned with the new rows:
 
     kept = old ⟕anti keys ;  result = kept ∪ new
 
+and every table's result goes out in ONE Spark write job per batch,
+whatever the number of tables.  The new rows (one projection of the batch
+for all tables) and each existing table's kept rows share one flat shape
+— table tag, the 4 common columns, the value, one slot per attribute
+column — so they union into a single plan.  Each task of that job writes
+its rows of each table as one parquet file into the table's staging
+directory; the driver then swaps the staging directories in
+(``catalog.swap_in_scratch_dir``).  Per-tag jobs would cost a scheduler
+round-trip per table, and NEMSIS has hundreds of tags.
+
 ``overwrite_pcrs`` is the one place the lake applies this rule; batch
 ingest (``bookkeeping.ingest_xml_files``) and the streaming ``foreachBatch``
 (``streaming.ingest.start_warehouse_stream``) both call it.  On
-Delta/Iceberg this function becomes ``MERGE``/``replaceWhere``; on plain
-parquet it is rewrite-on-overwrite through a staging directory
-(``catalog.replace_table_dir``).
+Delta/Iceberg this function becomes ``MERGE``/``replaceWhere``.  Tasks
+write with plain file-system calls, so the lake must be a path every
+executor sees (local or a shared mount).
 """
 
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
+import uuid
+from collections import Counter
+from functools import reduce
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import catalog
+from ..naming import COMMON_COLUMNS, value_column_name
 from . import warehouse
+
+# flat-frame columns besides the 4 common ones: table tag, value, and
+# attribute slots "_a0".."_aN" (named by position, so no attribute name can
+# collide with them)
+TABLE, VALUE = "_t", "_v"
+WRITTEN_SCHEMA = "table string, rows long"
+# rows a task buffers per table before writing them as a parquet row group
+ROW_GROUP_ROWS = 1 << 20
 
 
 def distinct_pcr_uuids(elements: DataFrame) -> DataFrame:
@@ -40,50 +66,187 @@ def distinct_pcr_uuids(elements: DataFrame) -> DataFrame:
     )
 
 
+def footer_columns(table_dir: str) -> list[str]:
+    """Column list of a lake table, in order, from one parquet footer."""
+    first = min(f for f in os.listdir(table_dir) if f.endswith(".parquet"))
+    return pq.read_schema(os.path.join(table_dir, first)).names
+
+
+def part_file_name(pid: int) -> str:
+    return f"part-{pid:05d}.parquet"
+
+
+def write_partition(
+    batches, layouts: dict[str, tuple[str, list[str], list[str]]], pid: int
+) -> list[tuple[str, int]]:
+    """Task side of the write job: split flat-shape ``batches`` by table
+    tag and write each table's rows as ONE parquet file
+    ``part_file_name(pid)`` in that table's directory.  ``layouts`` maps a
+    table to (directory, column names, flat source columns).  Files are
+    written under a hidden temp name and renamed into place, so a retried
+    task replaces its own file instead of adding a second one.  Returns
+    (table, rows) per file written."""
+    pending: dict[str, list[pa.RecordBatch]] = {}
+    buffered: Counter = Counter()
+    rows: Counter = Counter()
+    writers: dict[str, tuple[pq.ParquetWriter, str]] = {}
+
+    def flush(t: str) -> None:
+        part = pa.Table.from_batches(pending.pop(t))
+        buffered[t] = 0
+        if t not in writers:
+            directory = layouts[t][0]
+            os.makedirs(directory, exist_ok=True)
+            tmp = os.path.join(directory, f".{pid:05d}-{uuid.uuid4().hex}.tmp")
+            writers[t] = (pq.ParquetWriter(tmp, part.schema), tmp)
+        writers[t][0].write_table(part)
+
+    for batch in batches:
+        tags = batch.column(TABLE)
+        for t in pc.unique(tags).to_pylist():
+            _, names, sources = layouts[t]
+            sub = batch.filter(pc.equal(tags, t))
+            pending.setdefault(t, []).append(
+                pa.RecordBatch.from_arrays([sub.column(s) for s in sources], names=names)
+            )
+            buffered[t] += sub.num_rows
+            rows[t] += sub.num_rows
+            if buffered[t] >= ROW_GROUP_ROWS:
+                flush(t)
+    for t in list(pending):
+        flush(t)
+    for t, (writer, tmp) in writers.items():
+        writer.close()
+        os.replace(tmp, os.path.join(layouts[t][0], part_file_name(pid)))
+    return sorted(rows.items())
+
+
+def _write_task(layouts):
+    def run(batches):
+        written = write_partition(batches, layouts, TaskContext.get().partitionId())
+        yield pa.RecordBatch.from_pylist(
+            [{"table": t, "rows": n} for t, n in written],
+            schema=pa.schema([("table", pa.string()), ("rows", pa.int64())]),
+        )
+
+    return run
+
+
 def overwrite_pcrs(elements: DataFrame, warehouse_dir: str) -> None:
     """Apply one batch of canonical elements to the per-tag lake under
     ``warehouse_dir``: every existing table loses the rows of every PCR in
-    the batch, then each table gains its new rows.
+    the batch, then each table gains its new rows — in one Spark write job.
 
     The key set is the whole batch's, not each table's own: a correction
     that drops a repeating group still deletes that PCR's old rows from the
     group's tables, which the batch never writes.  Rows with a NULL
     ``pcr_uuid_context`` are never deleted — the reference only deletes
-    per concrete UUID (main_ingest.py:312-316).  ``elements`` should be
-    cached: it is read once per table.
+    per concrete UUID (main_ingest.py:312-316).  An existing table keeps
+    its columns in order and gains the batch's new attribute columns at
+    the end; a new table gets ``warehouse.table_frame``'s columns.  Every
+    column is a string.  ``elements`` should be cached: the table list,
+    attribute pass, key set and write each read it.
     """
     spark = elements.sparkSession
     incoming = warehouse.table_names(elements)
     attr_map = warehouse.attribute_columns_per_table(elements)
-    keys = F.broadcast(
-        distinct_pcr_uuids(elements).withColumnRenamed("pcr_uuid", "pcr_uuid_context")
-    )
-    # drop crashed-rewrite leftovers first so a '{table}__staging' dir is
-    # never treated as a real dynamic table, then list survivors
+    # drop crashed-rewrite leftovers first so a staging dir is never
+    # treated as a real dynamic table, then list survivors
     catalog.clean_scratch_dirs(warehouse_dir)
     existing = catalog.list_table_dirs(warehouse_dir)
 
-    def write_table(t: str) -> None:
-        path = os.path.join(warehouse_dir, t)
-        new_rows = (
-            warehouse.table_frame(elements, t, attr_map.get(t, []))
-            if t in incoming
-            else None
-        )
-        if t not in existing:
-            new_rows.write.mode("overwrite").parquet(path)
-            return
-        kept = spark.read.parquet(path).join(keys, "pcr_uuid_context", "left_anti")
-        if new_rows is not None:
-            kept = kept.unionByName(new_rows, allowMissingColumns=True)
-        catalog.replace_table_dir(kept, path)
+    # every table's final column list, fixed on the driver before the job
+    old_cols = {t: footer_columns(os.path.join(warehouse_dir, t)) for t in existing}
+    columns = dict(old_cols)
+    for t in incoming:
+        old = columns.get(t, [])
+        new = list(COMMON_COLUMNS) + [value_column_name(t)] + attr_map.get(t, [])
+        columns[t] = old + [c for c in new if c not in old]
 
-    # concurrent per-tag write jobs: outputs are disjoint directories and
-    # Spark's scheduler handles concurrent actions, so the only thing
-    # serial execution buys is idle cores between job barriers.  The
-    # reference processes tags inside a single-threaded per-element loop
-    # (main_ingest.py:429-495).
-    tables = sorted(set(existing) | set(incoming))
-    with ThreadPoolExecutor(max_workers=min(8, max(1, len(tables)))) as ex:
-        for fut in [ex.submit(write_table, t) for t in tables]:
-            fut.result()  # propagate the first failure
+    # flat column of each table column: common columns as they are, the
+    # table's value column -> VALUE, every other column -> its attribute slot
+    slot_names = sorted(
+        {c for t, cols in columns.items() for c in cols
+         if c not in COMMON_COLUMNS and c != value_column_name(t)}
+    )
+    slot = {c: f"_a{i}" for i, c in enumerate(slot_names)}
+
+    def source(t: str, c: str) -> str:
+        if c in COMMON_COLUMNS:
+            return c
+        return VALUE if c == value_column_name(t) else slot[c]
+
+    # the batch's new rows, one projection for all tables
+    lower_map = warehouse.lowered_attributes()
+    parts = [
+        elements.select(
+            F.lower(F.col("table_name")).alias(TABLE),
+            F.col("element_id"),
+            F.col("parent_element_id"),
+            F.col("pcr_uuid").alias("pcr_uuid_context"),
+            F.col("element_tag").alias("original_tag_name"),
+            F.col("value").alias(VALUE),
+            *[lower_map.getItem(c).alias(slot[c]) for c in slot_names],
+        )
+    ]
+    # every existing table's rows in the same shape, minus the batch's key
+    # set (one anti-join over all of them)
+    null = F.lit(None).cast("string")
+    old_rows = []
+    for t in existing:
+        schema = StructType([StructField(c, StringType()) for c in old_cols[t]])
+        have = {source(t, c): c for c in old_cols[t]}
+        old_rows.append(
+            spark.read.schema(schema)
+            .parquet(os.path.join(warehouse_dir, t))
+            .select(
+                F.lit(t).alias(TABLE),
+                *[
+                    (F.col(have[s]) if s in have else null).alias(s)
+                    for s in [*COMMON_COLUMNS, VALUE, *slot.values()]
+                ],
+            )
+        )
+    if old_rows:
+        # collected once; a frame made from an arrow table is a local
+        # relation, which broadcasts without a Spark job
+        keys = spark.createDataFrame(
+            pa.table(
+                {"pcr_uuid_context": pa.array(
+                    [r[0] for r in distinct_pcr_uuids(elements).collect()], pa.string()
+                )}
+            )
+        )
+        parts.append(
+            reduce(DataFrame.unionByName, old_rows).join(
+                F.broadcast(keys), "pcr_uuid_context", "left_anti"
+            )
+        )
+
+    layouts = {
+        t: (
+            os.path.join(warehouse_dir, t) + catalog.STAGING_SUFFIX,
+            cols,
+            [source(t, c) for c in cols],
+        )
+        for t, cols in columns.items()
+    }
+    flat = reduce(DataFrame.unionByName, parts)
+    written: Counter = Counter()
+    for r in (
+        flat.coalesce(spark.sparkContext.defaultParallelism)
+        .mapInArrow(_write_task(layouts), WRITTEN_SCHEMA)
+        .collect()
+    ):
+        written[r["table"]] += r["rows"]
+
+    for t, (staging, cols, _) in layouts.items():
+        if not written[t]:
+            # an emptied table still holds its schema, or readers that
+            # infer it (Spark, DuckDB globs) find nothing
+            os.makedirs(staging, exist_ok=True)
+            pq.write_table(
+                pa.table({c: pa.array([], pa.string()) for c in cols}),
+                os.path.join(staging, part_file_name(0)),
+            )
+        catalog.swap_in_scratch_dir(os.path.join(warehouse_dir, t), catalog.STAGING_SUFFIX)

@@ -16,23 +16,24 @@ Spark-first redesign:
   {table}_value`` + attribute columns, names lowercased, attr names that
   collide with the common columns silently dropped — parity with the
   column-intersection filter (/root/reference/main_ingest.py:479-483);
-* ``overwrite.overwrite_pcrs`` writes these frames as the per-tag lake
-  (one parquet directory per table) that batch and streaming ingest keep;
+* ``overwrite.overwrite_pcrs`` keeps the per-tag lake (one parquet
+  directory per table, in these shapes) that batch and streaming ingest
+  write: every table's rewrite of a batch runs in ONE Spark write job;
 * ``write_warehouse`` is the partitioned alternative: ONE shuffle-free
-  write of the canonical schema ``partitionBy("table_name")`` (a single
-  Spark job for the whole fan-out); ``read_table`` projects any table back
-  into the reference's exact pivoted shape via a partition-pruned scan.
+  write of the canonical schema ``partitionBy("table_name")``; ``read_table``
+  projects any table back into the reference's exact pivoted shape via a
+  partition-pruned scan.
 
-At 100 TB the partitioned layout is the one that holds: ingest cost is a
-single job regardless of tag count (NEMSIS has hundreds of tags — per-tag
-jobs would mean hundreds of scheduler round-trips per batch), and every
-consumer read is pruned to its table's directory.
+Neither layout runs a job per tag: ingest cost is one write job per batch
+regardless of tag count (NEMSIS has hundreds of tags — per-tag jobs would
+mean hundreds of scheduler round-trips per batch), and every consumer read
+is pruned to its table's directory.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from ..naming import COMMON_COLUMNS, table_name_for_tag, value_column_name
 
@@ -73,6 +74,15 @@ def attribute_columns_per_table(elements: DataFrame) -> dict[str, list[str]]:
     return out
 
 
+def lowered_attributes() -> Column:
+    """The ``attributes`` map with lowercased keys.  Keys were sanitized
+    during flatten; lookups must be case-insensitive because column names
+    are lowercased at sink time."""
+    return F.expr(
+        "map_from_entries(transform(map_entries(attributes), e -> struct(lower(e.key), e.value)))"
+    )
+
+
 def table_frame(
     elements: DataFrame, table: str, attr_cols: list[str] | None = None
 ) -> DataFrame:
@@ -86,11 +96,7 @@ def table_frame(
     if attr_cols is None:
         attr_cols = attribute_columns_per_table(subset).get(table, [])
 
-    # attribute keys were sanitized during flatten; lookup must be
-    # case-insensitive because column names are lowercased at sink time
-    lower_map = F.expr(
-        "map_from_entries(transform(map_entries(attributes), e -> struct(lower(e.key), e.value)))"
-    )
+    lower_map = lowered_attributes()
     cols = [
         F.col("element_id"),
         F.col("parent_element_id"),
@@ -179,9 +185,7 @@ def read_table(
         )
         reserved = set(COMMON_5_PREFIX) | {value_column_name(table)}
         attr_cols = sorted(r["attr"] for r in rows if r["attr"] not in reserved)
-    lower_map = F.expr(
-        "map_from_entries(transform(map_entries(attributes), e -> struct(lower(e.key), e.value)))"
-    )
+    lower_map = lowered_attributes()
     return part.select(
         F.col("element_id"),
         F.col("parent_element_id"),

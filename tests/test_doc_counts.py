@@ -5,14 +5,16 @@ a mismatch means someone edited counts by hand or forgot to regenerate)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT / "tools"))
 
 from gen_query_docs import readme_with_counts  # noqa: E402
 
 
 def test_readme_counts_in_sync():
-    with open("/root/repo/README.md") as fh:
+    with open(ROOT / "README.md") as fh:
         readme = fh.read()
     assert readme_with_counts(readme) == readme, (
         "README counts drifted from the registry — run "

@@ -14,6 +14,9 @@ from __future__ import annotations
 import glob
 import json
 import re
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _newest(pattern: str) -> dict | None:
@@ -29,7 +32,7 @@ def _newest(pattern: str) -> dict | None:
 
 def _narrative() -> str:
     out = []
-    for p in ("/root/repo/NOTES.md", "/root/repo/SCALING.md"):
+    for p in (ROOT / "NOTES.md", ROOT / "SCALING.md"):
         with open(p) as fh:
             out.append(fh.read())
     return "\n".join(out)
@@ -42,7 +45,7 @@ def _fmt_thousands(x: float) -> str:
 
 
 def test_stream_medians_quoted_in_narrative():
-    reps = _newest("/root/repo/STREAM_REPS_r*.json")
+    reps = _newest(str(ROOT / "STREAM_REPS_r*.json"))
     assert reps is not None
     import statistics
 
@@ -59,7 +62,7 @@ def test_stream_medians_quoted_in_narrative():
 
 
 def test_interleaved_headline_quoted_in_narrative():
-    reps = _newest("/root/repo/BENCH_REPS_r*.json")
+    reps = _newest(str(ROOT / "BENCH_REPS_r*.json"))
     assert reps is not None
     shared = next(
         (
@@ -78,7 +81,7 @@ def test_interleaved_headline_quoted_in_narrative():
 
 
 def test_stream_nsw_recall_quoted_in_narrative():
-    rec = _newest("/root/repo/ANN_RECALL_r*.json")
+    rec = _newest(str(ROOT / "ANN_RECALL_r*.json"))
     assert rec is not None
     methods = rec["methods"]
     docs = _narrative()

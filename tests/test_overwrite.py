@@ -115,3 +115,92 @@ def test_correction_without_a_group_clears_its_tables(spark, tmp_path):
         assert spark.read.parquet(os.path.join(wh, t)).count() == 0, t
     rec = spark.read.parquet(os.path.join(wh, "erecord_01"))
     assert {r["erecord_01_value"] for r in rec.collect()} == {"rec-1-v2", "rec-2"}
+
+
+def _report(uuid, tags, value):
+    body = "".join(f"<{t}>{value}</{t}>" for t in tags)
+    return f'<PatientCareReport UUID="{uuid}">{body}</PatientCareReport>'
+
+
+def _jobs_per_overwrite(spark, lake, n_tables):
+    """Spark jobs of one overwrite_pcrs call that corrects a PCR in a lake
+    of ``n_tables`` tables (root + report + leaf tags)."""
+    tags = [f"x{i}" for i in range(n_tables - 2)]
+    first = f"<r>{_report('A', tags, 1)}{_report('B', tags, 1)}</r>"
+    overwrite_pcrs(flatten_xml_strings(spark, [("a.xml", first)]), lake)
+    assert len(list_table_dirs(lake)) == n_tables
+    batch = flatten_xml_strings(spark, [("b.xml", f"<r>{_report('A', tags, 2)}</r>")])
+    batch = batch.cache()
+    batch.count()
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None) or [-1])
+    overwrite_pcrs(batch, lake)
+    jobs = max(tracker.getJobIdsForGroup(None) or [-1]) - before
+    batch.unpersist()
+    return jobs
+
+
+def test_job_count_does_not_grow_with_table_count(spark, tmp_path):
+    """Every table's rewrite runs in one write job, so a lake of 12 tables
+    costs the same jobs per batch as a lake of 3."""
+    small = _jobs_per_overwrite(spark, str(tmp_path / "small"), 3)
+    large = _jobs_per_overwrite(spark, str(tmp_path / "large"), 12)
+    assert small == large, (small, large)
+
+
+def test_new_attribute_widens_existing_table(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    first = '<r><PatientCareReport UUID="A"><x a="1">v</x><y>w</y></PatientCareReport></r>'
+    second = '<r><PatientCareReport UUID="B"><x b="2">u</x></PatientCareReport></r>'
+    overwrite_pcrs(flatten_xml_strings(spark, [("1.xml", first)]), lake)
+    x_cols = spark.read.parquet(os.path.join(lake, "x")).columns
+    y_cols = spark.read.parquet(os.path.join(lake, "y")).columns
+    assert x_cols == ["element_id", "parent_element_id", "pcr_uuid_context",
+                      "original_tag_name", "x_value", "a"]
+
+    overwrite_pcrs(flatten_xml_strings(spark, [("2.xml", second)]), lake)
+    x = spark.read.parquet(os.path.join(lake, "x"))
+    assert x.columns == x_cols + ["b"]
+    got = {(r["pcr_uuid_context"], r["x_value"], r["a"], r["b"]) for r in x.collect()}
+    assert got == {("A", "v", "1", None), ("B", "u", None, "2")}
+    # a table the batch does not touch keeps its exact column list and rows
+    y = spark.read.parquet(os.path.join(lake, "y"))
+    assert y.columns == y_cols
+    assert [(r["pcr_uuid_context"], r["y_value"]) for r in y.collect()] == [("A", "w")]
+
+
+def test_write_partition_retry_replaces_its_own_file(tmp_path):
+    """A retried task (same partition id) leaves one file per table, with
+    its rows once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nemsis_xml_parser_spark.operators.overwrite import (
+        TABLE,
+        VALUE,
+        part_file_name,
+        write_partition,
+    )
+
+    common = ["element_id", "parent_element_id", "pcr_uuid_context", "original_tag_name"]
+    layouts = {
+        t: (str(tmp_path / t), common + [f"{t}_value", "a"], common + [VALUE, "_a0"])
+        for t in ("p", "q")
+    }
+    batch = pa.RecordBatch.from_pydict({
+        TABLE: ["p", "q", "p"],
+        "element_id": ["1", "2", "3"],
+        "parent_element_id": [None, "1", "1"],
+        "pcr_uuid_context": ["A", "A", None],
+        "original_tag_name": ["p", "q", "p"],
+        VALUE: ["v1", "v2", "v3"],
+        "_a0": ["x", None, None],
+    })
+    for _ in range(2):
+        assert write_partition([batch], layouts, 7) == [("p", 2), ("q", 1)]
+    for t, n in (("p", 2), ("q", 1)):
+        assert os.listdir(tmp_path / t) == [part_file_name(7)]
+        got = pq.read_table(tmp_path / t / part_file_name(7))
+        assert got.column_names == layouts[t][1]
+        assert got.num_rows == n
+    assert pq.read_table(tmp_path / "p").column("a").to_pylist() == ["x", None]

@@ -12,8 +12,10 @@ import glob
 import re
 import sys
 from collections import Counter
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from nemsis_xml_parser_spark.plans import QUERIES  # noqa: E402
 
@@ -26,7 +28,7 @@ each covered by a determinism/error-bound pytest instead).
 """
 
 
-def count_test_functions(tests_dir: str = "/root/repo/tests") -> int:
+def count_test_functions(tests_dir: str = str(ROOT / "tests")) -> int:
     """Number of ``def test_`` functions across the pytest suite."""
     total = 0
     for path in glob.glob(f"{tests_dir}/**/*.py", recursive=True):
@@ -64,14 +66,14 @@ def main() -> None:
         kind = "oracle" if q.oracle is not None else "rows-only"
         doc = " ".join(q.doc.split())
         lines.append(f"| `{name}` | {q.family} | {kind} | {doc} |")
-    with open("/root/repo/QUERIES.md", "w") as fh:
+    with open(ROOT / "QUERIES.md", "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md: {len(QUERIES)} queries, {n_oracle} oracle-checked")
-    with open("/root/repo/README.md") as fh:
+    with open(ROOT / "README.md") as fh:
         readme = fh.read()
     synced = readme_with_counts(readme)
     if synced != readme:
-        with open("/root/repo/README.md", "w") as fh:
+        with open(ROOT / "README.md", "w") as fh:
             fh.write(synced)
         print("rewrote README.md counts")
 
