@@ -13,24 +13,34 @@ reference's psycopg2 layer did — but set-based:
   pass per tag instead of per element);
 * ``fk_pairs`` derives the unique (child_table, parent_table) pairs
   distributively (D4);
-* ``stage_to_jdbc`` executes: DDL → set-based DELETE by PCR keys (D3) →
-  batched INSERT appends — one transaction per batch (D6) when a DBAPI
-  connection is supplied.
+* ``stage_to_jdbc_distributed`` is the scale path: ONE coalesced
+  ``mapInArrow`` job stages every table of the batch, in the flat layout
+  the lake rewrite also uses (``warehouse.to_flat``), over one connection
+  per task; then ONE driver transaction runs DDL → a DELETE per table
+  against the batch's PCR key set, staged once (D3) → one
+  ``INSERT .. SELECT .. UNION ALL`` per table (D6);
+* ``stage_to_jdbc`` is the single-connection form for file-sized batches
+  (DDL → DELETE by PCR keys → batched INSERTs, one transaction), and
+  ``stage_to_warehouse`` routes a batch between the two by size.
 
 No PostgreSQL exists in the test container, so execution is exercised
-against an in-memory DBAPI stub in tests; the SQL strings are the parity
-artifact and are byte-stable.
+against an in-memory DBAPI stub and DuckDB in tests; the SQL strings are
+the parity artifact and are byte-stable.
 """
 
 from __future__ import annotations
 
 import time as _time
 from dataclasses import dataclass
+from functools import reduce
 
+import pyarrow as pa
 import pyspark.sql.functions as F
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from ..naming import COMMON_COLUMNS, fk_constraint_name, value_column_name
+from . import warehouse
 
 
 @dataclass(frozen=True)
@@ -420,13 +430,20 @@ def stage_to_warehouse(
     NEMSIS-file size and avoids per-partition connection overhead.  Pass
     ``row_threshold=0`` to force the distributed path regardless of size.
 
-    Sizing runs one count per table frame — a metadata-cheap parallel
-    scan next to the staging work itself, and the frames are typically
-    already cached by the ingest pipeline.  ``distributed_hooks`` forward
-    to ``stage_to_jdbc_distributed`` (``stage_schema``, ``stage_ref``,
+    Sizing is ONE count over the union of the table frames, coalesced to
+    one task so the count needs no shuffle stage: one Spark job whatever
+    the number of tables (the frames are typically already cached by the
+    ingest pipeline).  ``distributed_hooks`` forward to
+    ``stage_to_jdbc_distributed`` (``stage_schema``, ``stage_ref``,
     ``prepare_promote``, ``cleanup``).
     """
-    total_rows = sum(frames[t].count() for t in registry)
+    total_rows = (
+        reduce(DataFrame.unionByName, [frames[t].select() for t in registry])
+        .coalesce(1)
+        .count()
+        if registry
+        else 0
+    )
     if connect_fn is not None and total_rows >= row_threshold:
         return stage_to_jdbc_distributed(
             conn,
@@ -453,18 +470,102 @@ def stage_to_warehouse(
 
 
 def stage_table_name(table: str, pid: int) -> str:
-    """Scratch table holding one partition's staged rows."""
+    """Scratch table holding one staging task's rows of ``table``."""
     return f"{table}__stg{pid}"
 
 
 def stage_table_ddl(stage: str, columns: list[str], schema: str | None) -> list[str]:
-    """Self-contained DDL for a partition's stage table (all TEXT, like the
+    """Self-contained DDL for a task's stage table (all TEXT, like the
     warehouse — main_ingest.py:210-246 types every column TEXT).  DROP+CREATE
-    makes a Spark task retry idempotent: a re-run partition rebuilds its
-    scratch table from zero instead of double-inserting."""
+    makes a Spark task retry idempotent: a re-run task rebuilds its scratch
+    table from zero instead of double-inserting."""
     qual = f'"{schema}"."{stage}"' if schema else f'"{stage}"'
     cols = ", ".join(f'"{c}" TEXT' for c in columns)
     return [f"DROP TABLE IF EXISTS {qual};", f"CREATE TABLE {qual} ({cols});"]
+
+
+#: rows of one table a staging task buffers before appending them to its
+#: stage table, so a task holds about this many rows per table
+STAGE_CHUNK_ROWS = 1 << 16
+#: what each staging task returns: one row per stage table it filled
+STAGED_SCHEMA = "table string, pid int, rows long"
+#: temporary table holding a batch's PCR keys during the promote
+KEYS_TABLE = "_batch_pcr_keys"
+
+
+def stage_partition(
+    batches,
+    pid: int,
+    connect_fn,
+    layouts: dict[str, tuple[list[str], list[str]]],
+    stage_schema: str | None = None,
+    stage_rows=None,
+    paramstyle: str = "format",
+    batch_size: int = 1000,
+) -> list[tuple[str, int, int]]:
+    """Task side of the staging job: split flat-layout Arrow ``batches`` by
+    table (``warehouse.split_by_table``; ``layouts`` maps a table to its
+    column names and flat source columns) and stage each table's rows into
+    ``stage_table_name(table, pid)`` over ONE connection,
+    ``connect_fn(pid)``, opened at the first row.  Each stage table is
+    rebuilt (DROP+CREATE) once, then appended to in chunks of about
+    ``STAGE_CHUNK_ROWS`` rows — through ``stage_rows`` when given, else
+    ``executemany`` batches of ``batch_size`` — and the connection commits
+    once.  Returns (table, pid, rows) per stage table."""
+    rows: dict[str, int] = {}
+    conn = None
+    try:
+        for table, part in warehouse.split_by_table(batches, layouts, STAGE_CHUNK_ROWS):
+            if conn is None:
+                conn = connect_fn(pid)
+                cur = conn.cursor()
+            cols = layouts[table][0]
+            stage = stage_table_name(table, pid)
+            if table not in rows:
+                for stmt in stage_table_ddl(stage, cols, stage_schema):
+                    cur.execute(stmt)
+                rows[table] = 0
+            tuples = list(zip(*(c.to_pylist() for c in part.columns)))
+            if stage_rows is not None:
+                stage_rows(conn, stage, stage_schema, cols, tuples)
+            else:
+                sql = insert_sql(stage, cols, stage_schema, paramstyle)
+                for i in range(0, len(tuples), batch_size):
+                    cur.executemany(sql, tuples[i : i + batch_size])
+            rows[table] += part.num_rows
+        if conn is not None:
+            conn.commit()
+    except Exception:
+        if conn is not None:
+            conn.rollback()
+        raise
+    finally:
+        if conn is not None and hasattr(conn, "close"):
+            conn.close()
+    return [(t, pid, n) for t, n in sorted(rows.items())]
+
+
+def delete_by_key_set(
+    cur, tables, pcr_keys: list[str], schema: str = "public", paramstyle: str = "format"
+) -> None:
+    """Delete the batch's PCRs from ``tables``: stage the key set ONCE, as
+    a temporary table filled by one bound statement (so no key is ever
+    spliced into SQL), then one ``DELETE .. IN (SELECT ..)`` per table.
+    Rows with a NULL ``pcr_uuid_context`` never match (main_ingest.py:312-316
+    deletes per concrete UUID)."""
+    if not pcr_keys:
+        return
+    cur.execute(
+        f'CREATE TEMP TABLE "{KEYS_TABLE}" AS SELECT '
+        f'unnest(CAST({_PLACEHOLDERS[paramstyle]} AS TEXT[])) AS "pcr_uuid_context";',
+        (list(pcr_keys),),
+    )
+    for table in tables:
+        cur.execute(
+            f'DELETE FROM "{schema}"."{table}" WHERE "pcr_uuid_context" IN '
+            f'(SELECT "pcr_uuid_context" FROM "{KEYS_TABLE}");'
+        )
+    cur.execute(f'DROP TABLE "{KEYS_TABLE}";')
 
 
 _SAME_AS_TARGET = object()  # sentinel: stage_schema=None means "unqualified"
@@ -490,28 +591,35 @@ def stage_to_jdbc_distributed(
     """Distributed two-phase staging — the 100 TB replacement for
     ``stage_to_jdbc``'s driver-side ``collect()``.
 
-    Phase 1 (executors): every partition of every table frame opens its OWN
-    DBAPI connection via ``connect_fn(partition_id)``, rebuilds its scratch
-    stage table (DROP+CREATE, so task retries are idempotent), bulk-inserts
-    its rows with ``executemany`` batches, and commits the scratch only.
-    No data row ever passes through the driver — the driver collects one
-    (table, partition_id, n_rows) metadata triple per partition.
+    Phase 1 (executors, ONE Spark job): every table frame is projected into
+    the flat layout the lake rewrite also writes (``warehouse.to_flat``:
+    table tag, the 4 common columns, the value, attribute slots), the union
+    is coalesced to ``defaultParallelism`` tasks, and ``mapInArrow`` hands
+    each task its rows as Arrow batches.  Each task opens ONE DBAPI
+    connection, ``connect_fn(task_id)``, and stages every table it holds
+    into its own scratch table (``stage_partition``: DROP+CREATE, so a
+    retried task is idempotent, then chunked appends, then one commit).
+    No data row passes through the driver — the driver receives one
+    (table, task_id, n_rows) triple per stage table.
 
-    Phase 2 (driver, ONE transaction): target DDL (create, widen) →
-    set-based DELETE by PCR keys → ``INSERT INTO target SELECT .. FROM
-    stage`` per staged partition → single commit.  A failure anywhere rolls the target back untouched —
-    the same per-file all-or-nothing guarantee as the reference
+    Phase 2 (driver, ONE transaction): target DDL (create, widen) → the
+    batch's key set staged once and deleted from every registry table
+    (``delete_by_key_set``) → one ``INSERT INTO target SELECT .. FROM
+    stage UNION ALL ..`` per table over its tasks' stage tables → single
+    commit.  A failure anywhere rolls the target back untouched — the same
+    per-file all-or-nothing guarantee as the reference
     (/root/reference/main_ingest.py:644) and as ``stage_to_jdbc``, but the
-    data motion is executor-parallel server-side set operations.
+    data motion is executor-parallel and server-side.
 
     Hooks for engines whose scratch lives outside the target database
-    (the DuckDB live test stages into per-partition files):
+    (the DuckDB live test stages into per-task files):
 
     * ``stage_ref(table, pid) -> str`` — FROM-able identifier for a staged
-      partition as seen by ``driver_conn`` (default: the same-database
+      task's table as seen by ``driver_conn`` (default: the same-database
       ``"{schema}"."{table}__stg{pid}"``, the PostgreSQL shape);
     * ``prepare_promote(driver_conn, staged) -> None`` — driver-side setup
       before the promote transaction (e.g. ``ATTACH`` scratch files);
+      ``staged`` is the list of (table, pid, n_rows) triples;
     * ``cleanup`` — drop same-database stage tables after commit (skipped
       automatically when ``stage_ref`` is overridden);
     * ``phase_timings`` — optional dict the call fills with wall seconds
@@ -519,7 +627,7 @@ def stage_to_jdbc_distributed(
       the driver promote transaction) so benches can name the bottleneck
       instead of guessing from the total;
     * ``stage_rows(conn, stage_table, stage_schema, cols, rows)`` —
-      engine-NATIVE bulk load of one partition's rows into its scratch
+      engine-NATIVE bulk load of one chunk of row tuples into its scratch
       table, replacing the generic ``executemany`` batches.  Measured on
       the 10k-file ingest bench (BENCH_ingest_r14.json): DBAPI
       ``executemany`` row binding is the staging bottleneck at ~2k
@@ -540,60 +648,36 @@ def stage_to_jdbc_distributed(
         _default_ref = False
 
     _t_stage0 = _time.perf_counter()
-    # ONE Spark job stages every table: each frame collapses to a uniform
-    # (table, values-array) shape — all warehouse columns are TEXT, so the
-    # array is lossless — and the frames union WITHOUT merging partitions,
-    # so a task still holds one table's partition but all 15 tables'
-    # partitions run CONCURRENTLY across the executor pool instead of as
-    # sequential per-table jobs each bounded by its own slowest task
-    # (measured: the sequential form was 86% of the 10k-file ingest
-    # bench's staging wall — BENCH_ingest_r14.json / SCALING round 14).
-    tagged = None
-    for table, cols in registry.items():
-        part = frames[table].select(
-            F.lit(table).alias("_t"),
-            F.array(*[F.col(c) for c in cols]).alias("_v"),
+    slots = warehouse.flat_slots(registry)
+    layouts = {
+        t: (cols, [warehouse.flat_source(t, c, slots) for c in cols])
+        for t, cols in registry.items()
+    }
+
+    def run(batches):
+        pid = TaskContext.get().partitionId()
+        staged = stage_partition(
+            batches, pid, connect_fn, layouts, stage_schema, stage_rows,
+            paramstyle, batch_size,
         )
-        tagged = part if tagged is None else tagged.unionByName(part)
+        yield pa.RecordBatch.from_pylist(
+            [{"table": t, "pid": p, "rows": n} for t, p, n in staged],
+            schema=pa.schema([("table", pa.string()), ("pid", pa.int32()),
+                              ("rows", pa.int64())]),
+        )
 
-    reg_cols = {t: list(cols) for t, cols in registry.items()}
-
-    def _stage_partition(pid, it):
-        by_table: dict[str, list[tuple]] = {}
-        for r in it:
-            by_table.setdefault(r[0], []).append(tuple(r[1]))
-        if not by_table:
-            return iter(())
-        conn = connect_fn(pid)
-        out: list[tuple[str, int, int]] = []
-        try:
-            cur = conn.cursor()
-            for _table, rows in sorted(by_table.items()):
-                _cols = reg_cols[_table]
-                stg = stage_table_name(_table, pid)
-                for stmt in stage_table_ddl(stg, _cols, stage_schema):
-                    cur.execute(stmt)
-                if stage_rows is not None:
-                    stage_rows(conn, stg, stage_schema, _cols, rows)
-                else:
-                    sql = insert_sql(stg, _cols, stage_schema, paramstyle)
-                    for i in range(0, len(rows), batch_size):
-                        cur.executemany(sql, rows[i : i + batch_size])
-                out.append((_table, pid, len(rows)))
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            if hasattr(conn, "close"):
-                conn.close()
-        return iter(out)
-
-    staged = (
-        tagged.rdd.mapPartitionsWithIndex(_stage_partition).collect()
-        if tagged is not None
-        else []
-    )
+    staged: list[tuple[str, int, int]] = []
+    if registry:
+        flat = reduce(
+            DataFrame.unionByName,
+            [warehouse.to_flat(frames[t], t, cols, slots) for t, cols in registry.items()],
+        )
+        out = (
+            flat.coalesce(flat.sparkSession.sparkContext.defaultParallelism)
+            .mapInArrow(run, STAGED_SCHEMA)
+            .toArrow()
+        )
+        staged = sorted(zip(*(out.column(c).to_pylist() for c in out.column_names)))
 
     if phase_timings is not None:
         phase_timings["stage_sec"] = round(_time.perf_counter() - _t_stage0, 2)
@@ -603,22 +687,20 @@ def stage_to_jdbc_distributed(
         prepare_promote(driver_conn, staged)
 
     inserted: dict[str, int] = dict.fromkeys(registry, 0)
+    sources: dict[str, list[str]] = {}
+    for table, pid, n in staged:
+        if n:
+            inserted[table] += n
+            sources.setdefault(table, []).append(stage_ref(table, pid))
     cur = driver_conn.cursor()
     try:
         for table, cols in registry.items():
-            _prepare_target(cur, table, cols, pcr_keys, comments, schema)
-        collists = {
-            table: ", ".join(f'"{c}"' for c in cols)
-            for table, cols in registry.items()
-        }
-        for table, pid, n in staged:
-            if n == 0:
-                continue
-            cur.execute(
-                f'INSERT INTO "{schema}"."{table}" ({collists[table]}) '
-                f"SELECT {collists[table]} FROM {stage_ref(table, pid)};"
-            )
-            inserted[table] += n
+            _prepare_target(cur, table, cols, [], comments, schema)
+        delete_by_key_set(cur, registry, pcr_keys, schema, paramstyle)
+        for table, refs in sources.items():
+            collist = ", ".join(f'"{c}"' for c in registry[table])
+            union = " UNION ALL ".join(f"SELECT {collist} FROM {r}" for r in refs)
+            cur.execute(f'INSERT INTO "{schema}"."{table}" ({collist}) {union};')
         driver_conn.commit()
     except Exception:
         driver_conn.rollback()

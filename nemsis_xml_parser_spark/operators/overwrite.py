@@ -12,11 +12,11 @@ broadcast) key set of the whole batch, unioned with the new rows:
 
 and every table's result goes out in ONE Spark write job per batch,
 whatever the number of tables.  The new rows (one projection of the batch
-for all tables) and each existing table's kept rows share one flat shape
-— table tag, the 4 common columns, the value, one slot per attribute
-column — so they union into a single plan.  Each task of that job writes
-its rows of each table as one parquet file into the table's staging
-directory; the driver then swaps the staging directories in
+for all tables) and each existing table's kept rows share
+``warehouse``'s flat layout — table tag, the 4 common columns, the value,
+one slot per attribute column — so they union into a single plan.  Each
+task of that job writes its rows of each table as one parquet file into
+the table's staging directory; the driver then swaps the staging directories in
 (``catalog.swap_in_scratch_dir``).  Per-tag jobs would cost a scheduler
 round-trip per table, and NEMSIS has hundreds of tags.
 
@@ -36,7 +36,6 @@ from collections import Counter
 from functools import reduce
 
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark import TaskContext
@@ -46,11 +45,8 @@ from pyspark.sql.types import StringType, StructField, StructType
 from .. import catalog
 from ..naming import COMMON_COLUMNS, value_column_name
 from . import warehouse
+from .warehouse import TABLE, VALUE
 
-# flat-frame columns besides the 4 common ones: table tag, value, and
-# attribute slots "_a0".."_aN" (named by position, so no attribute name can
-# collide with them)
-TABLE, VALUE = "_t", "_v"
 WRITTEN_SCHEMA = "table string, rows long"
 # rows a task buffers per table before writing them as a parquet row group
 ROW_GROUP_ROWS = 1 << 20
@@ -79,42 +75,27 @@ def part_file_name(pid: int) -> str:
 def write_partition(
     batches, layouts: dict[str, tuple[str, list[str], list[str]]], pid: int
 ) -> list[tuple[str, int]]:
-    """Task side of the write job: split flat-shape ``batches`` by table
+    """Task side of the write job: split flat-layout ``batches`` by table
     tag and write each table's rows as ONE parquet file
     ``part_file_name(pid)`` in that table's directory.  ``layouts`` maps a
     table to (directory, column names, flat source columns).  Files are
     written under a hidden temp name and renamed into place, so a retried
     task replaces its own file instead of adding a second one.  Returns
     (table, rows) per file written."""
-    pending: dict[str, list[pa.RecordBatch]] = {}
-    buffered: Counter = Counter()
     rows: Counter = Counter()
     writers: dict[str, tuple[pq.ParquetWriter, str]] = {}
-
-    def flush(t: str) -> None:
-        part = pa.Table.from_batches(pending.pop(t))
-        buffered[t] = 0
+    split = warehouse.split_by_table(
+        batches, {t: (names, sources) for t, (_, names, sources) in layouts.items()},
+        ROW_GROUP_ROWS,
+    )
+    for t, part in split:
         if t not in writers:
             directory = layouts[t][0]
             os.makedirs(directory, exist_ok=True)
             tmp = os.path.join(directory, f".{pid:05d}-{uuid.uuid4().hex}.tmp")
             writers[t] = (pq.ParquetWriter(tmp, part.schema), tmp)
         writers[t][0].write_table(part)
-
-    for batch in batches:
-        tags = batch.column(TABLE)
-        for t in pc.unique(tags).to_pylist():
-            _, names, sources = layouts[t]
-            sub = batch.filter(pc.equal(tags, t))
-            pending.setdefault(t, []).append(
-                pa.RecordBatch.from_arrays([sub.column(s) for s in sources], names=names)
-            )
-            buffered[t] += sub.num_rows
-            rows[t] += sub.num_rows
-            if buffered[t] >= ROW_GROUP_ROWS:
-                flush(t)
-    for t in list(pending):
-        flush(t)
+        rows[t] += part.num_rows
     for t, (writer, tmp) in writers.items():
         writer.close()
         os.replace(tmp, os.path.join(layouts[t][0], part_file_name(pid)))
@@ -163,18 +144,7 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str) -> None:
         new = list(COMMON_COLUMNS) + [value_column_name(t)] + attr_map.get(t, [])
         columns[t] = old + [c for c in new if c not in old]
 
-    # flat column of each table column: common columns as they are, the
-    # table's value column -> VALUE, every other column -> its attribute slot
-    slot_names = sorted(
-        {c for t, cols in columns.items() for c in cols
-         if c not in COMMON_COLUMNS and c != value_column_name(t)}
-    )
-    slot = {c: f"_a{i}" for i, c in enumerate(slot_names)}
-
-    def source(t: str, c: str) -> str:
-        if c in COMMON_COLUMNS:
-            return c
-        return VALUE if c == value_column_name(t) else slot[c]
+    slots = warehouse.flat_slots(columns)
 
     # the batch's new rows, one projection for all tables
     lower_map = warehouse.lowered_attributes()
@@ -186,27 +156,20 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str) -> None:
             F.col("pcr_uuid").alias("pcr_uuid_context"),
             F.col("element_tag").alias("original_tag_name"),
             F.col("value").alias(VALUE),
-            *[lower_map.getItem(c).alias(slot[c]) for c in slot_names],
+            *[lower_map.getItem(c).alias(s) for c, s in slots.items()],
         )
     ]
     # every existing table's rows in the same shape, minus the batch's key
     # set (one anti-join over all of them)
-    null = F.lit(None).cast("string")
-    old_rows = []
-    for t in existing:
-        schema = StructType([StructField(c, StringType()) for c in old_cols[t]])
-        have = {source(t, c): c for c in old_cols[t]}
-        old_rows.append(
-            spark.read.schema(schema)
-            .parquet(os.path.join(warehouse_dir, t))
-            .select(
-                F.lit(t).alias(TABLE),
-                *[
-                    (F.col(have[s]) if s in have else null).alias(s)
-                    for s in [*COMMON_COLUMNS, VALUE, *slot.values()]
-                ],
-            )
+    old_rows = [
+        warehouse.to_flat(
+            spark.read.schema(
+                StructType([StructField(c, StringType()) for c in old_cols[t]])
+            ).parquet(os.path.join(warehouse_dir, t)),
+            t, old_cols[t], slots,
         )
+        for t in existing
+    ]
     if old_rows:
         # collected once; a frame made from an arrow table is a local
         # relation, which broadcasts without a Spark job
@@ -227,7 +190,7 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str) -> None:
         t: (
             os.path.join(warehouse_dir, t) + catalog.STAGING_SUFFIX,
             cols,
-            [source(t, c) for c in cols],
+            [warehouse.flat_source(t, c, slots) for c in cols],
         )
         for t, cols in columns.items()
     }

@@ -16,9 +16,13 @@ Spark-first redesign:
   {table}_value`` + attribute columns, names lowercased, attr names that
   collide with the common columns silently dropped — parity with the
   column-intersection filter (/root/reference/main_ingest.py:479-483);
-* ``overwrite.overwrite_pcrs`` keeps the per-tag lake (one parquet
-  directory per table, in these shapes) that batch and streaming ingest
-  write: every table's rewrite of a batch runs in ONE Spark write job;
+* the flat layout (``flat_slots``, ``flat_source``, ``to_flat``,
+  ``split_by_table``) carries every table of a batch in one frame — table
+  tag, the 4 common columns, the value, one slot per attribute column — so
+  both sinks move a batch in ONE Spark job: ``overwrite.overwrite_pcrs``
+  (the per-tag lake, one parquet directory per table, that batch and
+  streaming ingest write) and ``jdbc_sink.stage_to_jdbc_distributed``
+  (the JDBC target's stage tables);
 * ``write_warehouse`` is the partitioned alternative: ONE shuffle-free
   write of the canonical schema ``partitionBy("table_name")``; ``read_table``
   projects any table back into the reference's exact pivoted shape via a
@@ -32,12 +36,21 @@ is pruned to its table's directory.
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..naming import COMMON_COLUMNS, table_name_for_tag, value_column_name
 
 COMMON_5_PREFIX = list(COMMON_COLUMNS)  # + the per-table value column
+
+# flat-layout columns besides the 4 common ones: table tag, value, and
+# attribute slots "_a0".."_aN" (named by position, so no attribute name can
+# collide with them)
+TABLE, VALUE = "_t", "_v"
 
 
 def table_names(elements: DataFrame) -> list[str]:
@@ -106,6 +119,67 @@ def table_frame(
     ]
     cols += [lower_map.getItem(a).alias(a) for a in attr_cols]
     return subset.select(*cols)
+
+
+def flat_slots(columns: dict[str, list[str]]) -> dict[str, str]:
+    """Attribute slot of every attribute column in ``columns`` ({table:
+    its column names}), shared by all the tables."""
+    names = sorted(
+        {c for t, cols in columns.items() for c in cols
+         if c not in COMMON_COLUMNS and c != value_column_name(t)}
+    )
+    return {c: f"_a{i}" for i, c in enumerate(names)}
+
+
+def flat_source(table: str, column: str, slots: dict[str, str]) -> str:
+    """Flat column holding ``table``'s ``column``: a common column as it
+    is, the table's value column -> VALUE, any other column -> its slot."""
+    if column in COMMON_COLUMNS:
+        return column
+    return VALUE if column == value_column_name(table) else slots[column]
+
+
+def to_flat(
+    frame: DataFrame, table: str, columns: list[str], slots: dict[str, str]
+) -> DataFrame:
+    """``frame``'s ``columns`` (those of ``table``) in the flat layout,
+    tagged ``table``; the slots of columns the table lacks are NULL."""
+    have = {flat_source(table, c, slots): c for c in columns}
+    null = F.lit(None).cast("string")
+    return frame.select(
+        F.lit(table).alias(TABLE),
+        *[
+            (F.col(have[s]) if s in have else null).alias(s)
+            for s in [*COMMON_COLUMNS, VALUE, *slots.values()]
+        ],
+    )
+
+
+def split_by_table(
+    batches, layouts: dict[str, tuple[list[str], list[str]]], chunk_rows: int
+):
+    """Task side of a flat-layout job: split Arrow ``batches`` by table tag
+    and yield (table, Arrow table in the table's own column names).
+    ``layouts`` maps a table to (column names, flat source columns).  A
+    table's rows are yielded once ``chunk_rows`` of them are buffered, and
+    the rest at the end, so a task holds at most about ``chunk_rows`` rows
+    per table, whatever the size of its partition."""
+    pending: dict[str, list[pa.RecordBatch]] = {}
+    buffered: Counter = Counter()
+    for batch in batches:
+        tags = batch.column(TABLE)
+        for t in pc.unique(tags).to_pylist():
+            names, sources = layouts[t]
+            sub = batch.filter(pc.equal(tags, t))
+            pending.setdefault(t, []).append(
+                pa.RecordBatch.from_arrays([sub.column(s) for s in sources], names=names)
+            )
+            buffered[t] += sub.num_rows
+            if buffered[t] >= chunk_rows:
+                buffered[t] = 0
+                yield t, pa.Table.from_batches(pending.pop(t))
+    for t, rest in pending.items():
+        yield t, pa.Table.from_batches(rest)
 
 
 def table_comments(elements: DataFrame) -> dict[str, str]:

@@ -435,3 +435,213 @@ def test_restage_widens_existing_table(spark, tmp_path, distributed):
     assert sorted(conn.q(
         'SELECT "erecord_01_value", "newattr" FROM "public"."erecord_01"'
     )) == [("rec-1", "n1"), ("rec-2", None)]
+
+
+def _prefill(conn, registry, table, rows):
+    """Create ``table`` with the sink's DDL and insert ``rows`` (tuples in
+    the registry's column order)."""
+    cols = registry[table]
+    cur = conn.cursor()
+    for stmt in J.create_table_sql(table, cols[len(COMMON_COLUMNS) + 1:]):
+        cur.execute(stmt)
+    cur.executemany(J.insert_sql(table, cols, paramstyle="qmark"), rows)
+    conn.commit()
+
+
+def _counting_hooks(stage_dir):
+    """``_duckdb_file_hooks`` whose ``connect_fn`` logs every connection it
+    opens (executor side) to ``connections.log``."""
+    hooks = _duckdb_file_hooks(stage_dir)
+    connect = hooks["connect_fn"]
+    log = f"{stage_dir}/connections.log"
+
+    def connect_fn(pid):
+        with open(log, "a") as f:
+            f.write(f"{pid}\n")
+        return connect(pid)
+
+    hooks["connect_fn"] = connect_fn
+    return hooks, log
+
+
+def test_distributed_stage_opens_one_connection_per_task(spark, staged, tmp_path):
+    """Staging runs in one coalesced job: at most defaultParallelism
+    connections, for a 3-table registry as for the full one."""
+    els, registry, frames, keys = staged
+    three = dict(sorted(registry.items())[:3])
+    assert len(registry) > spark.sparkContext.defaultParallelism
+    for name, reg in (("three", three), ("full", registry)):
+        stage_dir = tmp_path / name
+        stage_dir.mkdir()
+        hooks, log = _counting_hooks(stage_dir)
+        conn = DuckDBAPIConn()
+        inserted = J.stage_to_jdbc_distributed(
+            conn, registry=reg, frames=frames, pcr_keys=keys, **hooks
+        )
+        assert sum(inserted.values()) == sum(frames[t].count() for t in reg)
+        with open(log) as f:
+            opened = len(f.readlines())
+        assert 1 <= opened <= spark.sparkContext.defaultParallelism, name
+
+
+def test_stage_partition_retry_is_idempotent(tmp_path, monkeypatch):
+    """A retried staging task (same pid) rebuilds its stage tables: each
+    holds its rows once, also when they arrive in several chunks."""
+    import pyarrow as pa
+
+    from nemsis_xml_parser_spark.operators.warehouse import TABLE, VALUE
+
+    common = list(COMMON_COLUMNS)
+    layouts = {
+        t: (common + [value_column_name(t)], common + [VALUE]) for t in ("p", "q")
+    }
+    batch = pa.RecordBatch.from_pydict({
+        TABLE: ["p", "q", "p", "p"],
+        "element_id": ["1", "2", "3", "4"],
+        "parent_element_id": [None, "1", "1", "1"],
+        "pcr_uuid_context": ["A", "A", None, "B"],
+        "original_tag_name": ["p", "q", "p", "p"],
+        VALUE: ["v1", "v2", "v3", "v4"],
+    })
+
+    def connect_fn(pid):
+        return duckdb.connect(str(tmp_path / f"stg_{pid}.db"))
+
+    monkeypatch.setattr(J, "STAGE_CHUNK_ROWS", 1)
+    for _ in range(2):
+        staged = J.stage_partition(
+            [batch, batch.slice(3)], 7, connect_fn, layouts, paramstyle="qmark"
+        )
+        assert staged == [("p", 7, 4), ("q", 7, 1)]
+    con = duckdb.connect(str(tmp_path / "stg_7.db"), read_only=True)
+    assert sorted(con.execute('SELECT "element_id" FROM "p__stg7"').fetchall()) == [
+        ("1",), ("3",), ("4",), ("4",)
+    ]
+    assert con.execute('SELECT * FROM "q__stg7"').fetchall() == [
+        ("2", "1", "A", "q", "v2")
+    ]
+    con.close()
+
+
+# a batch whose second PCR's uuid holds a quote
+QUOTED_PCR = "6e5d2c1a-0000-4000-8000-00000000'002"
+QUOTED_XML = NEMSIS_XML.replace("6e5d2c1a-0000-4000-8000-000000000002", QUOTED_PCR)
+PCR1 = "6e5d2c1a-0000-4000-8000-000000000001"
+
+
+def _old_erecords(registry):
+    """eRecord.01 rows of an earlier version: (a) of a batch PCR, (b)
+    outside any PCR, (c) of the batch PCR whose uuid holds a quote."""
+    width = len(registry["erecord_01"])
+    row = lambda eid, pcr, v: (eid, None, pcr, "eRecord.01", v) + (None,) * (width - 5)
+    return [row("old-a", PCR1, "a"), row("old-b", None, "b"), row("old-c", QUOTED_PCR, "c")]
+
+
+def test_distributed_delete_by_key_set(spark, tmp_path):
+    """The promote deletes through the key set staged once: old rows of
+    batch PCRs go (a quote in a uuid included), NULL-PCR rows stay."""
+    _, registry, frames, keys = _batch(spark, QUOTED_XML)
+    assert QUOTED_PCR in keys
+    conn = DuckDBAPIConn()
+    _prefill(conn, registry, "erecord_01", _old_erecords(registry))
+    inserted = J.stage_to_jdbc_distributed(
+        conn, registry=registry, frames=frames, pcr_keys=keys,
+        **_duckdb_file_hooks(tmp_path),
+    )
+    assert inserted["erecord_01"] == 2
+    assert sorted(conn.q(
+        'SELECT "pcr_uuid_context", "erecord_01_value" FROM "public"."erecord_01"'
+    ), key=str) == sorted([(PCR1, "rec-1"), (None, "b"), (QUOTED_PCR, "rec-2")], key=str)
+    # the key table lives only inside the promote transaction
+    assert conn.q(
+        f"SELECT count(*) FROM duckdb_tables() WHERE table_name = '{J.KEYS_TABLE}'"
+    ) == [(0,)]
+
+
+class _FailingConn(DuckDBAPIConn):
+    """Raises on the first statement containing ``fail_on``."""
+
+    def __init__(self, fail_on):
+        super().__init__()
+        self.fail_on = fail_on
+
+    def cursor(self):
+        inner, fail_on = super().cursor(), self.fail_on
+
+        class _Cur:
+            def execute(self, sql, params=None):
+                if fail_on in sql:
+                    raise RuntimeError(f"injected failure on: {fail_on}")
+                return inner.execute(sql, params)
+
+            def executemany(self, sql, rows):
+                return inner.executemany(sql, rows)
+
+        return _Cur()
+
+
+def test_distributed_key_set_failure_rolls_back(spark, tmp_path):
+    """A failure at the key-set statement leaves the target as it was:
+    the promote's DDL is rolled back and no old row is deleted."""
+    _, registry, frames, keys = _batch(spark, QUOTED_XML)
+    conn = _FailingConn(f'CREATE TEMP TABLE "{J.KEYS_TABLE}"')
+    _prefill(conn, registry, "erecord_01", _old_erecords(registry))
+    before = sorted(conn.q('SELECT * FROM "public"."erecord_01"'), key=str)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        J.stage_to_jdbc_distributed(
+            conn, registry=registry, frames=frames, pcr_keys=keys,
+            **_duckdb_file_hooks(tmp_path),
+        )
+    assert conn.q(
+        "SELECT table_name FROM information_schema.tables "
+        "WHERE table_schema = 'public'"
+    ) == [("erecord_01",)]
+    assert sorted(conn.q('SELECT * FROM "public"."erecord_01"'), key=str) == before
+
+
+@pytest.mark.xfail(
+    strict=True,
+    raises=AssertionError,
+    reason="the promote deletes a batch's PCRs only from the tables in the "
+    "batch's registry, not from every table of the target",
+)
+def test_distributed_correction_drops_tables_it_no_longer_has(spark, tmp_path):
+    """A correction of a PCR that no longer carries its vitals group must
+    delete the PCR's old vitals rows, as the lake rewrite and the reference
+    (delete from every dynamic table) do."""
+    _, registry, frames, keys = _batch(spark, NEMSIS_XML)
+    conn = DuckDBAPIConn()
+    for v in ("v1", "v2"):
+        (tmp_path / v).mkdir()
+    J.stage_to_jdbc_distributed(
+        conn, registry=registry, frames=frames, pcr_keys=keys,
+        **_duckdb_file_hooks(tmp_path / "v1"),
+    )
+    assert conn.q('SELECT count(*) FROM "public"."evitals_06"') == [(1,)]
+    for (name,) in conn.q(
+        "SELECT database_name FROM duckdb_databases() WHERE database_name LIKE 'stg%'"
+    ):
+        conn._c.execute(f"DETACH {name};")
+    start = NEMSIS_XML.index("      <eVitals>")
+    end = NEMSIS_XML.index("</eVitals>") + len("</eVitals>\n")
+    _, registry2, frames2, keys2 = _batch(spark, NEMSIS_XML[:start] + NEMSIS_XML[end:])
+    assert "evitals_06" not in registry2 and PCR1 in keys2
+    J.stage_to_jdbc_distributed(
+        conn, registry=registry2, frames=frames2, pcr_keys=keys2,
+        **_duckdb_file_hooks(tmp_path / "v2"),
+    )
+    assert conn.q('SELECT count(*) FROM "public"."evitals_06"') == [(0,)]
+
+
+def test_stage_to_warehouse_sizes_batch_in_one_job(spark, staged, monkeypatch):
+    """Routing a batch by size counts its rows in one Spark job, whatever
+    the number of tables."""
+    els, registry, frames, keys = staged
+    three = dict(sorted(registry.items())[:3])
+    routed = []
+    monkeypatch.setattr(J, "stage_to_jdbc", lambda *a, **k: routed.append(a[1]) or {})
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None) or [-1])
+    J.stage_to_warehouse(DuckDBAPIConn(), three, frames, keys)
+    assert max(tracker.getJobIdsForGroup(None) or [-1]) - before == 1
+    assert routed == [three]
