@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 BOOKKEEPING_PREFIX = "_"
@@ -62,6 +63,23 @@ def clean_scratch_dirs(warehouse_dir: str) -> list[str]:
     return removed
 
 
+def part_files(table_dir: str) -> list[str]:
+    """Paths of a lake table's parquet part files, in name order; hidden
+    files (a task's temp file, checksums) and ``_SUCCESS`` markers are not
+    parts."""
+    return [
+        os.path.join(table_dir, f)
+        for f in sorted(os.listdir(table_dir))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+
+
+def footer_columns(table_dir: str) -> list[str]:
+    """Column list of a lake table, in order, from one parquet footer (every
+    part file of a table has the same columns)."""
+    return pq.read_schema(part_files(table_dir)[0]).names
+
+
 def list_tables(spark: SparkSession, warehouse_dir: str) -> DataFrame:
     """Dynamic tables in the lake, excluding bookkeeping (C10 parity:
     main_ingest.py:296-305 excludes pg_% + SchemaVersions/XMLFilesProcessed)."""
@@ -70,8 +88,9 @@ def list_tables(spark: SparkSession, warehouse_dir: str) -> DataFrame:
 
 
 def list_columns(spark: SparkSession, warehouse_dir: str, table: str) -> set[str]:
-    """Column set of one lake table (A6 parity: get_table_columns)."""
-    return set(spark.read.parquet(os.path.join(warehouse_dir, table)).columns)
+    """Column set of one lake table (A6 parity: get_table_columns), read
+    from a parquet footer without a Spark job."""
+    return set(footer_columns(os.path.join(warehouse_dir, table)))
 
 
 def columns_frame(spark: SparkSession, warehouse_dir: str) -> DataFrame:

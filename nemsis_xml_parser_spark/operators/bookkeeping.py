@@ -27,7 +27,8 @@ import shutil
 import uuid
 
 import pyarrow as pa
-import pyspark.sql.functions as F
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -88,20 +89,22 @@ def read_files_processed(spark: SparkSession, warehouse_dir: str) -> DataFrame:
 
 
 def files_to_process(
-    spark: SparkSession, warehouse_dir: str, file_paths: list[str]
+    warehouse_dir: str, file_paths: list[str]
 ) -> tuple[dict[str, str | None], list[str]]:
     """Split incoming files into ({todo: md5}, skipped) by MD5 anti-join
     against previously-succeeded files (SURVEY D5 — the check the reference
     records data for but never performs).  Each file is hashed once; the
-    todo hash is the one the log records."""
-    seen = {
-        r["md5_hash"]
-        for r in read_files_processed(spark, warehouse_dir)
-        .where(F.col("status") == STATUS_OK)
-        .select("md5_hash")
-        .distinct()
-        .collect()
-    }
+    todo hash is the one the log records.  The log's two columns are read
+    with pyarrow: the set ends up on the driver anyway, so it costs no
+    Spark job."""
+    path = files_processed_path(warehouse_dir)
+    seen = set()
+    if os.path.isdir(path):  # no directory on the first run
+        # with a schema, a log directory holding no file yet reads as empty
+        log = pq.read_table(
+            path, schema=pa.schema([("md5_hash", pa.string()), ("status", pa.string())])
+        )
+        seen = set(log.filter(pc.equal(log["status"], STATUS_OK))["md5_hash"].to_pylist())
     todo, skipped = {}, []
     for p in file_paths:
         md5 = file_md5(p)
@@ -153,7 +156,7 @@ def ingest_xml_files(
     from .overwrite import overwrite_pcrs
 
     statuses: dict[str, str] = {}
-    todo, skipped = files_to_process(spark, warehouse_dir, file_paths)
+    todo, skipped = files_to_process(warehouse_dir, file_paths)
     for p in skipped:
         statuses[p] = "Skipped_MD5_Seen"
 

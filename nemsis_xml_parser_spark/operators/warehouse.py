@@ -21,8 +21,10 @@ Spark-first redesign:
   tag, the 4 common columns, the value, one slot per attribute column — so
   both sinks move a batch in ONE Spark job: ``overwrite.overwrite_pcrs``
   (the per-tag lake, one parquet directory per table, that batch and
-  streaming ingest write) and ``jdbc_sink.stage_to_jdbc_distributed``
-  (the JDBC target's stage tables);
+  streaming ingest write; only the batch's new rows go through the flat
+  layout, the write tasks copy the lake's kept rows file by file) and
+  ``jdbc_sink.stage_to_jdbc_distributed`` (the JDBC target's stage
+  tables);
 * ``write_warehouse`` is the partitioned alternative: ONE shuffle-free
   write of the canonical schema ``partitionBy("table_name")``; ``read_table``
   projects any table back into the reference's exact pivoted shape via a

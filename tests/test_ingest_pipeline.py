@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 
 from nemsis_xml_parser_spark.operators.bookkeeping import (
     file_md5,
+    files_to_process,
     ingest_xml_files,
     read_files_processed,
 )
@@ -70,6 +71,23 @@ def test_reingest_md5_skip_and_overwrite(spark, tmp_path):
     assert after.count() == before
     vals = {r["erecord_01_value"] for r in after.collect()}
     assert vals == {"rec-1-v2", "rec-2"}
+
+
+def test_files_to_process_runs_no_spark_job(spark, tmp_path):
+    """The MD5 skip reads the log's hash and status with pyarrow: it runs
+    no Spark job, and a file logged as failed is not skipped."""
+    wh = str(tmp_path / "wh")
+    seen = _write(tmp_path, "seen.xml", NEMSIS_XML)
+    failed = _write(tmp_path, "failed.xml", "<open><unclosed>")
+    ingest_xml_files(spark, [seen, failed], wh, deterministic_ids=True)
+    new = _write(tmp_path, "new.xml", NEMSIS_XML.replace("rec-1", "rec-1-v2"))
+
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None) or [-1])
+    todo, skipped = files_to_process(wh, [seen, failed, new])
+    assert max(tracker.getJobIdsForGroup(None) or [-1]) == before
+    assert skipped == [seen]
+    assert todo == {failed: file_md5(failed), new: file_md5(new)}
 
 
 def test_md5_matches_hashlib(tmp_path):

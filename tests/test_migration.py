@@ -47,3 +47,29 @@ def test_value_column_migration_roundtrip(spark, tmp_path):
     assert "text_content" in spark.read.parquet(os.path.join(wh, "evitals_01")).columns
     # bookkeeping untouched throughout
     assert "text_content" in spark.read.parquet(os.path.join(wh, "_files_processed")).columns
+
+
+def test_tables_with_column_on_ingested_lake(spark, tmp_path):
+    """The catalog join (A6/A9/F4) over a lake written by ingest; column
+    lists come from parquet footers, without a Spark job."""
+    from nemsis_xml_parser_spark import catalog
+    from nemsis_xml_parser_spark.operators.bookkeeping import ingest_xml_files
+    from tests.conftest import NEMSIS_XML
+
+    wh = str(tmp_path / "wh")
+    xml = tmp_path / "f.xml"
+    xml.write_text(NEMSIS_XML)
+    ingest_xml_files(spark, [str(xml)], wh, deterministic_ids=True)
+
+    tables = catalog.list_table_dirs(wh)
+    assert catalog.tables_with_column(spark, wh, "pcr_uuid_context") == tables
+    assert catalog.tables_with_column(spark, wh, "evitals_06_value") == ["evitals_06"]
+    assert catalog.tables_with_column(spark, wh, "codetype") == ["epatient_15"]
+    assert catalog.tables_with_column(spark, wh, "text_content") == []
+
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None) or [-1])
+    cols = catalog.list_columns(spark, wh, "epatient_15")
+    assert max(tracker.getJobIdsForGroup(None) or [-1]) == before
+    assert cols == {"element_id", "parent_element_id", "pcr_uuid_context",
+                    "original_tag_name", "epatient_15_value", "codetype"}

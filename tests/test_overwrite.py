@@ -9,12 +9,15 @@ import pyspark.sql.functions as F
 from nemsis_xml_parser_spark.catalog import list_table_dirs
 from nemsis_xml_parser_spark.naming import value_column_name
 from nemsis_xml_parser_spark.operators.bookkeeping import ingest_xml_files
-from nemsis_xml_parser_spark.operators.flatten import flatten_xml_strings
+from nemsis_xml_parser_spark.operators.flatten import (
+    flatten_xml_files,
+    flatten_xml_strings,
+)
 from nemsis_xml_parser_spark.operators.overwrite import (
     distinct_pcr_uuids,
     overwrite_pcrs,
 )
-from nemsis_xml_parser_spark.schema import STATUS_OK
+from nemsis_xml_parser_spark.schema import STATUS_ERROR_PARSE, STATUS_OK
 from tests.conftest import NEMSIS_XML
 
 PCR1 = "6e5d2c1a-0000-4000-8000-000000000001"
@@ -169,9 +172,20 @@ def test_new_attribute_widens_existing_table(spark, tmp_path):
     assert [(r["pcr_uuid_context"], r["y_value"]) for r in y.collect()] == [("A", "w")]
 
 
+def _inodes(lake):
+    return {
+        (t, f): os.stat(os.path.join(lake, t, f)).st_ino
+        for t in list_table_dirs(lake)
+        for f in os.listdir(os.path.join(lake, t))
+    }
+
+
 def test_write_partition_retry_replaces_its_own_file(tmp_path):
     """A retried task (same partition id) leaves one file per table, with
-    its rows once."""
+    its new rows and the kept rows of its old files once: rows of a key-set
+    PCR go (a uuid holding ' too), a NULL-PCR row stays, a column the old
+    file lacks is NULL, and a table the batch has no rows for keeps its
+    kept rows."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -187,6 +201,7 @@ def test_write_partition_retry_replaces_its_own_file(tmp_path):
         t: (str(tmp_path / t), common + [f"{t}_value", "a"], common + [VALUE, "_a0"])
         for t in ("p", "q")
     }
+    layouts["r"] = (str(tmp_path / "r"), common + ["r_value"], None)
     batch = pa.RecordBatch.from_pydict({
         TABLE: ["p", "q", "p"],
         "element_id": ["1", "2", "3"],
@@ -196,11 +211,83 @@ def test_write_partition_retry_replaces_its_own_file(tmp_path):
         VALUE: ["v1", "v2", "v3"],
         "_a0": ["x", None, None],
     })
+    old = {}
+    for t, pcrs in (("p", ["A", None, "it's", "B"]), ("r", ["it's", "B"])):
+        old[t] = str(tmp_path / f"old_{t}.parquet")
+        pq.write_table(pa.table({
+            "element_id": [f"{t}{i}" for i in range(len(pcrs))],
+            "parent_element_id": [None] * len(pcrs),
+            "pcr_uuid_context": pcrs,
+            "original_tag_name": [t] * len(pcrs),
+            f"{t}_value": ["old"] * len(pcrs),
+        }), old[t])
     for _ in range(2):
-        assert write_partition([batch], layouts, 7) == [("p", 2), ("q", 1)]
-    for t, n in (("p", 2), ("q", 1)):
+        assert write_partition(
+            [batch], layouts, 7, [("p", old["p"]), ("r", old["r"])], ["A", "it's"]
+        ) == [("p", 4), ("q", 1), ("r", 1)]
+    for t, n in (("p", 4), ("q", 1), ("r", 1)):
         assert os.listdir(tmp_path / t) == [part_file_name(7)]
         got = pq.read_table(tmp_path / t / part_file_name(7))
         assert got.column_names == layouts[t][1]
         assert got.num_rows == n
-    assert pq.read_table(tmp_path / "p").column("a").to_pylist() == ["x", None]
+    p = pq.read_table(tmp_path / "p" / part_file_name(7)).to_pylist()
+    assert sorted((r["element_id"], r["pcr_uuid_context"], r["a"]) for r in p) == [
+        ("1", "A", "x"), ("3", None, None), ("p1", None, None), ("p3", "B", None)
+    ]
+    r = pq.read_table(tmp_path / "r" / part_file_name(7)).to_pylist()
+    assert [(x["element_id"], x["pcr_uuid_context"]) for x in r] == [("r1", "B")]
+
+
+def test_batch_without_keys_rewrites_only_its_own_tables(spark, tmp_path):
+    """An empty key set deletes nothing: a batch of only malformed files
+    touches no table, and a header-only batch without a PCR rewrites only
+    the tables it has rows for (file inodes compared before and after)."""
+    wh = str(tmp_path / "wh")
+    first = tmp_path / "first.xml"
+    first.write_text(NEMSIS_XML)
+    ingest_xml_files(spark, [str(first)], wh, deterministic_ids=True)
+    before = _inodes(wh)
+
+    bad = tmp_path / "bad.xml"
+    bad.write_text("<open><unclosed>")
+    assert ingest_xml_files(spark, [str(bad)], wh)[str(bad)] == STATUS_ERROR_PARSE
+    assert _inodes(wh) == before
+
+    header = tmp_path / "header.xml"
+    header.write_text(
+        '<EMSDataSet xmlns="http://www.nemsis.org"><Header><DemographicGroup>'
+        "<dAgency.01>AG-002</dAgency.01></DemographicGroup></Header></EMSDataSet>"
+    )
+    assert ingest_xml_files(spark, [str(header)], wh)[str(header)] == STATUS_OK
+    after = _inodes(wh)
+    changed = {t for t, f in before.keys() | after.keys()
+               if before.get((t, f)) != after.get((t, f))}
+    assert changed == {"emsdataset", "header", "demographicgroup", "dagency_01"}
+    agency = spark.read.parquet(os.path.join(wh, "dagency_01"))
+    assert {r["dagency_01_value"] for r in agency.collect()} == {"AG-001", "AG-002"}
+
+
+def test_one_file_batch_spreads_old_files_over_all_tasks(spark, tmp_path):
+    """The write tasks read the lake's old part files themselves, so a
+    one-file batch (one partition) still rewrites the lake in
+    defaultParallelism tasks, not in one."""
+    lake = str(tmp_path / "lake")
+    n = spark.sparkContext.defaultParallelism
+    tags = ["x0", "x1", "x2"]
+    reports = "".join(_report(f"P{i}", tags, 1) for i in range(4 * n))
+    overwrite_pcrs(flatten_xml_strings(spark, [("a.xml", f"<r>{reports}</r>")]), lake)
+    assert len([f for f in _inodes(lake) if f[1].endswith(".parquet")]) >= n
+
+    path = tmp_path / "b.xml"
+    path.write_text(f"<r>{_report('P0', tags, 2)}</r>")
+    batch = flatten_xml_files(spark, [str(path)], deterministic_ids=True).cache()
+    assert batch.rdd.getNumPartitions() == 1
+    batch.count()
+    tracker = spark.sparkContext.statusTracker()
+    overwrite_pcrs(batch, lake)
+    batch.unpersist()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(None)))
+    assert tracker.getStageInfo(max(write_job.stageIds)).numTasks == n
+    x0 = spark.read.parquet(os.path.join(lake, "x0"))
+    assert x0.count() == 4 * n
+    assert x0.where(F.col("pcr_uuid_context") == "P0").first()["x0_value"] == "2"
