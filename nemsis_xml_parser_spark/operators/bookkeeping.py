@@ -41,14 +41,12 @@ from ..schema import (
 )
 
 
-def file_md5(path: str, chunk_size: int = 4096) -> str | None:
-    """Chunked MD5 (parity: /root/reference/main_ingest.py:39-50)."""
+def file_md5(path: str) -> str | None:
+    """MD5 of a file's bytes, read in chunks, or None when it cannot be
+    read (parity: the reference's main_ingest.py:39-50)."""
     try:
-        digest = hashlib.md5()
         with open(path, "rb") as f:
-            for chunk in iter(lambda: f.read(chunk_size), b""):
-                digest.update(chunk)
-        return digest.hexdigest()
+            return hashlib.file_digest(f, "md5").hexdigest()
     except OSError:
         return None
 
@@ -58,27 +56,28 @@ def files_processed_path(warehouse_dir: str) -> str:
 
 
 def log_processed_files(
-    spark: SparkSession,
-    warehouse_dir: str,
-    records: list[tuple[str, str | None, str]],
+    warehouse_dir: str, records: list[tuple[str, str | None, str]]
 ) -> None:
     """Append (file_name, md5, status) records to the bookkeeping table
     (parity: main_ingest.py:67-98 + database_setup.py:80-95) as ONE parquet
-    file, so the log every later ``files_to_process`` lists grows by one
-    file per batch."""
+    file written with pyarrow on the driver (no Spark job), so the log
+    every later ``files_to_process`` lists grows by one file per batch.
+    The file is written under a hidden name, which both readers skip, and
+    then renamed into place."""
     now = dt.datetime.now(dt.timezone.utc).isoformat()
     names = FILES_PROCESSED_SCHEMA.fieldNames()
     rows = [
         dict(zip(names, (str(uuid.uuid4()), name, md5, now, status, INGESTION_LOGIC_VERSION)))
         for name, md5, status in records
     ]
-    # a frame made from an arrow table is a local relation: no Python
-    # worker round-trip, and coalesce(1) writes it as one file
-    log = spark.createDataFrame(
-        pa.Table.from_pylist(rows, schema=to_arrow_schema(FILES_PROCESSED_SCHEMA)),
-        schema=FILES_PROCESSED_SCHEMA,
+    path = files_processed_path(warehouse_dir)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(FILES_PROCESSED_SCHEMA)), tmp
     )
-    log.coalesce(1).write.mode("append").parquet(files_processed_path(warehouse_dir))
+    os.replace(tmp, os.path.join(path, name))
 
 
 def read_files_processed(spark: SparkSession, warehouse_dir: str) -> DataFrame:
@@ -180,7 +179,7 @@ def ingest_xml_files(
             status = STATUS_OK if ok else STATUS_ERROR_PARSE
             statuses[p] = status
             records.append((os.path.basename(p), md5, status))
-        log_processed_files(spark, warehouse_dir, records)
+        log_processed_files(warehouse_dir, records)
 
         for p in todo:
             if statuses[p] == STATUS_OK and archive_dir:

@@ -1,9 +1,10 @@
 """psycopg2-style transaction adapter over DuckDB's DBAPI.
 
-The JDBC/warehouse operators (``stage_to_jdbc``, the exactly-once
-streaming sink) are written against the psycopg2 contract the reference
-uses (/root/reference/database_setup.py:18-41): one shared transaction
-per connection, ``commit``/``rollback`` on the connection object.
+The JDBC/warehouse operators (the promote transaction of
+``stage_to_jdbc_distributed``, the exactly-once streaming sink) are
+written against the psycopg2 contract the reference uses
+(database_setup.py:18-41): one shared transaction per connection,
+``commit``/``rollback`` on the connection object.
 DuckDB's Python DBAPI autocommits each statement and ``cursor()`` opens
 a separate context, so this bridge issues an explicit BEGIN on first
 use and funnels every cursor through the one underlying connection —
@@ -70,9 +71,10 @@ class DuckTxnConnection:
 
 class JavaJdbcConnection:
     """Minimal DBAPI bridge over a ``java.sql.Connection`` via py4j —
-    runs the psycopg2-shaped code paths (stage_to_jdbc, the exactly-once
-    streaming sink) against any real JDBC engine reachable from the
-    driver JVM (Derby embedded in tests; PostgreSQL in production).
+    runs the psycopg2-shaped code paths (the promote transaction of
+    stage_to_jdbc_distributed, the exactly-once streaming sink) against
+    any real JDBC engine reachable from the driver JVM (Derby embedded in
+    tests; PostgreSQL in production).
     Driver-side only, like the reference's single psycopg2 connection.
 
     qmark placeholders map to ``PreparedStatement`` parameters;

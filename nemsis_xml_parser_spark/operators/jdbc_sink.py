@@ -13,19 +13,17 @@ reference's psycopg2 layer did — but set-based:
   pass per tag instead of per element);
 * ``fk_pairs`` derives the unique (child_table, parent_table) pairs
   distributively (D4);
-* ``stage_to_jdbc_distributed`` is the scale path: ONE coalesced
+* ``stage_to_jdbc_distributed`` is the one staging path: ONE coalesced
   ``mapInArrow`` job stages every table of the batch, in the flat layout
   the lake rewrite also uses (``warehouse.to_flat``), over one connection
   per task; then ONE driver transaction runs DDL → a DELETE per table
   against the batch's PCR key set, staged once (D3) → one
-  ``INSERT .. SELECT .. UNION ALL`` per table (D6);
-* ``stage_to_jdbc`` is the single-connection form for file-sized batches
-  (DDL → DELETE by PCR keys → batched INSERTs, one transaction), and
-  ``stage_to_warehouse`` routes a batch between the two by size.
+  ``INSERT .. SELECT .. UNION ALL`` per table (D6).  No data row passes
+  through the driver, whatever the size of the batch.
 
 No PostgreSQL exists in the test container, so execution is exercised
-against an in-memory DBAPI stub and DuckDB in tests; the SQL strings are
-the parity artifact and are byte-stable.
+against DuckDB in tests; the SQL strings are the parity artifact and are
+byte-stable.
 """
 
 from __future__ import annotations
@@ -223,21 +221,10 @@ def fk_constraint_sql(
     return probe, ddl
 
 
-def delete_by_keys_sql(table: str, keys: list[str], schema: str = "public") -> str:
-    """Set-based key-scoped delete — replaces the reference's per-UUID
-    round-trips (main_ingest.py:312-316) with one statement per table."""
-    key_list = ", ".join("'" + k.replace("'", "''") + "'" for k in keys)
-    return (
-        f'DELETE FROM "{schema}"."{table}" '
-        f'WHERE "pcr_uuid_context" IN ({key_list});'
-    )
-
-
-def _prepare_target(cur, table, cols, pcr_keys, comments, schema) -> None:
-    """Target DDL and the key-scoped DELETE, inside the caller's
-    transaction: CREATE TABLE IF NOT EXISTS, then ADD COLUMN IF NOT EXISTS
-    for every attribute column of the batch (an existing table gains the
-    columns a new batch brings), then DELETE by PCR keys."""
+def _prepare_target(cur, table, cols, comments, schema) -> None:
+    """Target DDL inside the caller's transaction: CREATE TABLE IF NOT
+    EXISTS, then ADD COLUMN IF NOT EXISTS for every attribute column of the
+    batch (an existing table gains the columns a new batch brings)."""
     attr_cols = [
         c for c in cols if c not in COMMON_COLUMNS and c != value_column_name(table)
     ]
@@ -245,8 +232,6 @@ def _prepare_target(cur, table, cols, pcr_keys, comments, schema) -> None:
         cur.execute(stmt)
     for stmt in widen_table_sql(table, attr_cols, schema):
         cur.execute(stmt)
-    if pcr_keys:
-        cur.execute(delete_by_keys_sql(table, pcr_keys, schema))
 
 
 #: DBAPI paramstyle → placeholder token (psycopg2 is "format", duckdb and
@@ -263,43 +248,6 @@ def insert_sql(
     params = ", ".join([_PLACEHOLDERS[paramstyle]] * len(columns))
     qual = f'"{schema}"."{table}"' if schema else f'"{table}"'
     return f'INSERT INTO {qual} ({collist}) VALUES ({params});'
-
-
-def stage_to_jdbc(
-    conn,
-    registry: dict[str, list[str]],
-    frames: dict[str, DataFrame],
-    pcr_keys: list[str],
-    comments: dict[str, str] | None = None,
-    schema: str = "public",
-    batch_size: int = 1000,
-    paramstyle: str = "format",
-) -> dict[str, int]:
-    """Execute the full staging transaction over a DBAPI connection:
-    DDL (create, widen) → set-based DELETE → batched INSERTs → commit
-    (rollback on any error — D6 parity).  Returns rows inserted per table.
-
-    ``frames`` values must be per-tag table frames (warehouse.table_frame
-    shape).  This single-connection form funnels rows through the driver —
-    acceptable for NEMSIS-file-sized batches only; at scale use
-    ``stage_to_jdbc_distributed`` (per-partition executor connections, same
-    transaction guarantee).
-    """
-    inserted: dict[str, int] = {}
-    cur = conn.cursor()
-    try:
-        for table, cols in registry.items():
-            _prepare_target(cur, table, cols, pcr_keys, comments, schema)
-            rows = [tuple(r) for r in frames[table].collect()]
-            sql = insert_sql(table, cols, schema, paramstyle)
-            for i in range(0, len(rows), batch_size):
-                cur.executemany(sql, rows[i : i + batch_size])
-            inserted[table] = len(rows)
-        conn.commit()
-        return inserted
-    except Exception:
-        conn.rollback()
-        raise
 
 
 def read_jdbc_table(
@@ -400,73 +348,10 @@ def read_jdbc_table_partitioned(
     )
 
 
-#: Above this many total batch rows the pipeline refuses the driver-side
-#: collect path: 100k TEXT rows is already tens of MB through one driver
-#: connection, and every NEMSIS file the reference ingests is far below it.
+#: the batch size the staging path is benchmarked at (100k rows, far above
+#: any NEMSIS file the reference ingests); nothing in the program routes
+#: on it
 DISTRIBUTED_ROW_THRESHOLD = 100_000
-
-
-def stage_to_warehouse(
-    conn,
-    registry: dict[str, list[str]],
-    frames: dict[str, DataFrame],
-    pcr_keys: list[str],
-    comments: dict[str, str] | None = None,
-    schema: str = "public",
-    batch_size: int = 1000,
-    paramstyle: str = "format",
-    connect_fn=None,
-    row_threshold: int = DISTRIBUTED_ROW_THRESHOLD,
-    **distributed_hooks,
-) -> dict[str, int]:
-    """The pipeline's staging entry point: route to the right path by size.
-
-    Batches at or above ``row_threshold`` total rows take
-    ``stage_to_jdbc_distributed`` (per-partition executor connections, one
-    promote transaction) — ``connect_fn`` is REQUIRED there, and a large
-    batch without one raises instead of silently funnelling everything
-    through the driver.  Smaller batches take the single-connection
-    ``stage_to_jdbc`` compat path, whose driver-side collect is fine at
-    NEMSIS-file size and avoids per-partition connection overhead.  Pass
-    ``row_threshold=0`` to force the distributed path regardless of size.
-
-    Sizing is ONE count over the union of the table frames, coalesced to
-    one task so the count needs no shuffle stage: one Spark job whatever
-    the number of tables (the frames are typically already cached by the
-    ingest pipeline).  ``distributed_hooks`` forward to
-    ``stage_to_jdbc_distributed`` (``stage_schema``, ``stage_ref``,
-    ``prepare_promote``, ``cleanup``).
-    """
-    total_rows = (
-        reduce(DataFrame.unionByName, [frames[t].select() for t in registry])
-        .coalesce(1)
-        .count()
-        if registry
-        else 0
-    )
-    if connect_fn is not None and total_rows >= row_threshold:
-        return stage_to_jdbc_distributed(
-            conn,
-            connect_fn,
-            registry,
-            frames,
-            pcr_keys,
-            comments,
-            schema,
-            batch_size,
-            paramstyle,
-            **distributed_hooks,
-        )
-    if total_rows >= row_threshold:
-        raise ValueError(
-            f"batch of {total_rows} rows >= {row_threshold} needs the "
-            "distributed staging path — pass connect_fn (per-partition "
-            "DBAPI connections); the single-connection path would collect "
-            "every row through the driver"
-        )
-    return stage_to_jdbc(
-        conn, registry, frames, pcr_keys, comments, schema, batch_size, paramstyle
-    )
 
 
 def stage_table_name(table: str, pid: int) -> str:
@@ -501,7 +386,6 @@ def stage_partition(
     stage_schema: str | None = None,
     stage_rows=None,
     paramstyle: str = "format",
-    batch_size: int = 1000,
 ) -> list[tuple[str, int, int]]:
     """Task side of the staging job: split flat-layout Arrow ``batches`` by
     table (``warehouse.split_by_table``; ``layouts`` maps a table to its
@@ -510,8 +394,8 @@ def stage_partition(
     ``connect_fn(pid)``, opened at the first row.  Each stage table is
     rebuilt (DROP+CREATE) once, then appended to in chunks of about
     ``STAGE_CHUNK_ROWS`` rows — through ``stage_rows`` when given, else
-    ``executemany`` batches of ``batch_size`` — and the connection commits
-    once.  Returns (table, pid, rows) per stage table."""
+    one ``executemany`` per chunk — and the connection commits once.
+    Returns (table, pid, rows) per stage table."""
     rows: dict[str, int] = {}
     conn = None
     try:
@@ -529,9 +413,7 @@ def stage_partition(
             if stage_rows is not None:
                 stage_rows(conn, stage, stage_schema, cols, tuples)
             else:
-                sql = insert_sql(stage, cols, stage_schema, paramstyle)
-                for i in range(0, len(tuples), batch_size):
-                    cur.executemany(sql, tuples[i : i + batch_size])
+                cur.executemany(insert_sql(stage, cols, stage_schema, paramstyle), tuples)
             rows[table] += part.num_rows
         if conn is not None:
             conn.commit()
@@ -579,17 +461,15 @@ def stage_to_jdbc_distributed(
     pcr_keys: list[str],
     comments: dict[str, str] | None = None,
     schema: str = "public",
-    batch_size: int = 1000,
     paramstyle: str = "format",
     stage_schema: str | None = _SAME_AS_TARGET,
     stage_ref=None,
     prepare_promote=None,
-    cleanup: bool = True,
     phase_timings: dict | None = None,
     stage_rows=None,
 ) -> dict[str, int]:
-    """Distributed two-phase staging — the 100 TB replacement for
-    ``stage_to_jdbc``'s driver-side ``collect()``.
+    """Two-phase staging of a batch into the JDBC target: the sink's one
+    path, for a one-file batch as for a 100 TB one.
 
     Phase 1 (executors, ONE Spark job): every table frame is projected into
     the flat layout the lake rewrite also writes (``warehouse.to_flat``:
@@ -608,20 +488,20 @@ def stage_to_jdbc_distributed(
     stage UNION ALL ..`` per table over its tasks' stage tables → single
     commit.  A failure anywhere rolls the target back untouched — the same
     per-file all-or-nothing guarantee as the reference
-    (/root/reference/main_ingest.py:644) and as ``stage_to_jdbc``, but the
-    data motion is executor-parallel and server-side.
+    (main_ingest.py:644), but the data motion is
+    executor-parallel and server-side.
 
     Hooks for engines whose scratch lives outside the target database
     (the DuckDB live test stages into per-task files):
 
     * ``stage_ref(table, pid) -> str`` — FROM-able identifier for a staged
       task's table as seen by ``driver_conn`` (default: the same-database
-      ``"{schema}"."{table}__stg{pid}"``, the PostgreSQL shape);
+      ``"{schema}"."{table}__stg{pid}"``, the PostgreSQL shape, whose stage
+      tables are dropped after the commit; scratch behind an overridden
+      ``stage_ref`` is left to its owner);
     * ``prepare_promote(driver_conn, staged) -> None`` — driver-side setup
       before the promote transaction (e.g. ``ATTACH`` scratch files);
       ``staged`` is the list of (table, pid, n_rows) triples;
-    * ``cleanup`` — drop same-database stage tables after commit (skipped
-      automatically when ``stage_ref`` is overridden);
     * ``phase_timings`` — optional dict the call fills with wall seconds
       per phase (``stage_sec`` executor scratch writes, ``promote_sec``
       the driver promote transaction) so benches can name the bottleneck
@@ -638,14 +518,11 @@ def stage_to_jdbc_distributed(
     """
     if stage_schema is _SAME_AS_TARGET:
         stage_schema = schema
-    if stage_ref is None:
-        _default_ref = True
+    default_ref = stage_ref is None
+    if default_ref:
 
         def stage_ref(table: str, pid: int) -> str:
             return f'"{stage_schema}"."{stage_table_name(table, pid)}"'
-
-    else:
-        _default_ref = False
 
     _t_stage0 = _time.perf_counter()
     slots = warehouse.flat_slots(registry)
@@ -657,8 +534,7 @@ def stage_to_jdbc_distributed(
     def run(batches):
         pid = TaskContext.get().partitionId()
         staged = stage_partition(
-            batches, pid, connect_fn, layouts, stage_schema, stage_rows,
-            paramstyle, batch_size,
+            batches, pid, connect_fn, layouts, stage_schema, stage_rows, paramstyle
         )
         yield pa.RecordBatch.from_pylist(
             [{"table": t, "pid": p, "rows": n} for t, p, n in staged],
@@ -695,7 +571,7 @@ def stage_to_jdbc_distributed(
     cur = driver_conn.cursor()
     try:
         for table, cols in registry.items():
-            _prepare_target(cur, table, cols, [], comments, schema)
+            _prepare_target(cur, table, cols, comments, schema)
         delete_by_key_set(cur, registry, pcr_keys, schema, paramstyle)
         for table, refs in sources.items():
             collist = ", ".join(f'"{c}"' for c in registry[table])
@@ -705,7 +581,7 @@ def stage_to_jdbc_distributed(
     except Exception:
         driver_conn.rollback()
         raise
-    if cleanup and _default_ref:
+    if default_ref:
         for table, pid, _ in staged:
             cur.execute(f"DROP TABLE IF EXISTS {stage_ref(table, pid)};")
         driver_conn.commit()

@@ -257,7 +257,7 @@ def _ppr_local(tagged: DataFrame, iters: int, damping: float) -> DataFrame:
 
         em = pdf["_k"].to_numpy() == 0
         src = pdf["src"].to_numpy(dtype=np.int64)[em]
-        dst = pdf["dst"].to_numpy()[em].astype(np.int64)
+        dst = pdf["dst"].to_numpy(dtype=np.int64)[em]
         seed_ids = set(int(x) for x in pdf["src"].to_numpy()[~em])
         # seeds outside the graph's node set are dropped by the
         # distributed join too; ValueError parity when none intersect
@@ -309,7 +309,9 @@ def personalized_pagerank(
     sd0 = seeds.select(F.col(seed_col).cast("long").alias("node")).distinct()
     # one pinned tag-union carries edges (_k=0) AND seed ids (_k=1) so
     # the single-task endgame sees both inputs in one Arrow batch; the
-    # edge count rides the pin via observe
+    # edge count rides the pin via observe.  A seed row's dst is its own
+    # id, never NULL: a nullable long column reaches pandas as float64,
+    # which rounds ids above 2^53 (every reader filters _k == 0 first)
     obs_e = Observation()
     tagged = (
         e.select(
@@ -320,7 +322,7 @@ def personalized_pagerank(
         .unionByName(
             sd0.select(
                 F.col("node").alias("src"),
-                F.lit(None).cast("long").alias("dst"),
+                F.col("node").alias("dst"),
                 F.lit(1).alias("_k"),
             )
         )

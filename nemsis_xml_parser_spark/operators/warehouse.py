@@ -24,13 +24,9 @@ Spark-first redesign:
   streaming ingest write; only the batch's new rows go through the flat
   layout, the write tasks copy the lake's kept rows file by file) and
   ``jdbc_sink.stage_to_jdbc_distributed`` (the JDBC target's stage
-  tables);
-* ``write_warehouse`` is the partitioned alternative: ONE shuffle-free
-  write of the canonical schema ``partitionBy("table_name")``; ``read_table``
-  projects any table back into the reference's exact pivoted shape via a
-  partition-pruned scan.
+  tables).
 
-Neither layout runs a job per tag: ingest cost is one write job per batch
+Neither sink runs a job per tag: ingest cost is one write job per batch
 regardless of tag count (NEMSIS has hundreds of tags — per-tag jobs would
 mean hundreds of scheduler round-trips per batch), and every consumer read
 is pruned to its table's directory.
@@ -46,8 +42,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..naming import COMMON_COLUMNS, table_name_for_tag, value_column_name
-
-COMMON_5_PREFIX = list(COMMON_COLUMNS)  # + the per-table value column
 
 # flat-layout columns besides the 4 common ones: table tag, value, and
 # attribute slots "_a0".."_aN" (named by position, so no attribute name can
@@ -84,7 +78,7 @@ def attribute_columns_per_table(elements: DataFrame) -> dict[str, list[str]]:
     for r in rows:
         out.setdefault(r["t"], []).append(r["attr"])
     for t, attrs in out.items():
-        reserved = set(COMMON_5_PREFIX) | {value_column_name(t)}
+        reserved = set(COMMON_COLUMNS) | {value_column_name(t)}
         out[t] = sorted(a for a in attrs if a not in reserved)
     return out
 
@@ -194,82 +188,6 @@ def table_comments(elements: DataFrame) -> dict[str, str]:
         .collect()
     )
     return {r["t"]: r["path"] for r in rows}
-
-
-def write_warehouse(elements: DataFrame, lake_dir: str) -> dict[str, list[str]]:
-    """Materialize the partitioned warehouse under ``lake_dir``: ONE write
-    job of the canonical element schema ``partitionBy("table_name")`` — no
-    per-tag job fan-out, no shuffle (partitioning is directory layout, not
-    an Exchange), and every per-table read is partition-pruned.  The
-    reference's exact per-table shape (value column renamed, attributes
-    pivoted) is a lazy projection applied at read time by ``read_table``.
-    Atomicity of the whole fan-out is the single job commit — closer to the
-    reference's one-transaction-per-file guarantee (main_ingest.py:500-642)
-    than N independent per-tag jobs.
-
-    Returns {table: [columns...]} — the warehouse schema registry, in the
-    reference's pivoted shape.
-    """
-    elements = elements.cache()
-    try:
-        attr_map = attribute_columns_per_table(elements)
-        registry: dict[str, list[str]] = {
-            t: COMMON_5_PREFIX
-            + [value_column_name(t)]
-            + attr_map.get(t, [])
-            for t in table_names(elements)
-        }
-        (
-            elements.select(
-                F.lower(F.col("table_name")).alias("table_name"),
-                F.col("element_id"),
-                F.col("parent_element_id"),
-                F.col("pcr_uuid").alias("pcr_uuid_context"),
-                F.col("element_tag").alias("original_tag_name"),
-                F.col("value"),
-                F.col("attributes"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("table_name")
-            .parquet(lake_dir)
-        )
-        return registry
-    finally:
-        elements.unpersist()
-
-
-def read_table(
-    spark, lake_dir: str, table: str, attr_cols: list[str] | None = None
-) -> DataFrame:
-    """Read one table from a ``write_warehouse`` lake in the reference's
-    exact pivoted shape (FIXTURES.md F3).
-
-    The ``table_name`` filter is partition pruning (a directory pick, zero
-    data read outside the table); the value-column rename and attribute
-    pivot are narrow projections — the whole thing stays a single
-    partition-pruned scan at any corpus size.
-    """
-    table = table_name_for_tag(table).lower()
-    part = spark.read.parquet(lake_dir).where(F.col("table_name") == table)
-    if attr_cols is None:
-        rows = (
-            part.select(F.explode_outer(F.map_keys("attributes")).alias("attr"))
-            .where(F.col("attr").isNotNull())
-            .select(F.lower(F.col("attr")).alias("attr"))
-            .distinct()
-            .collect()
-        )
-        reserved = set(COMMON_5_PREFIX) | {value_column_name(table)}
-        attr_cols = sorted(r["attr"] for r in rows if r["attr"] not in reserved)
-    lower_map = lowered_attributes()
-    return part.select(
-        F.col("element_id"),
-        F.col("parent_element_id"),
-        F.col("pcr_uuid_context"),
-        F.col("original_tag_name"),
-        F.col("value").alias(value_column_name(table)),
-        *[lower_map.getItem(a).alias(a) for a in attr_cols],
-    )
 
 
 def orphan_check(child: DataFrame, parent: DataFrame) -> DataFrame:

@@ -66,11 +66,10 @@ def exactly_once_batch_writer(
     staging, one driver promote txn, identical crash semantics), the
     recommended entry for any real deployment.
 
-    ``max_collect_rows`` is the driver-funnel guard (the streaming twin
-    of ``stage_to_warehouse``'s ≥100k distributed dispatcher): a
-    microbatch larger than this raises instead of silently pulling the
-    rows through the driver — the error tells the caller to switch to
-    the distributed writer.  The guard is enforced via ``limit(n+1)``
+    ``max_collect_rows`` is the driver-funnel guard: a microbatch larger
+    than this raises instead of silently pulling the rows through the
+    driver — the error tells the caller to switch to the distributed
+    writer.  The guard is enforced via ``limit(n+1)``
     so driver memory is capped even on the failing batch.
 
     ``conn_factory`` opens a DBAPI connection per batch (qmark style —

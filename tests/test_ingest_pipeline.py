@@ -7,11 +7,17 @@ import pyspark.sql.functions as F
 
 from nemsis_xml_parser_spark.operators.bookkeeping import (
     file_md5,
+    files_processed_path,
     files_to_process,
     ingest_xml_files,
+    log_processed_files,
     read_files_processed,
 )
-from nemsis_xml_parser_spark.schema import STATUS_ERROR_PARSE, STATUS_OK
+from nemsis_xml_parser_spark.schema import (
+    FILES_PROCESSED_SCHEMA,
+    STATUS_ERROR_PARSE,
+    STATUS_OK,
+)
 from tests.conftest import NEMSIS_XML
 
 
@@ -88,6 +94,35 @@ def test_files_to_process_runs_no_spark_job(spark, tmp_path):
     assert max(tracker.getJobIdsForGroup(None) or [-1]) == before
     assert skipped == [seen]
     assert todo == {failed: file_md5(failed), new: file_md5(new)}
+
+
+def test_log_processed_files_runs_no_spark_job(spark, tmp_path):
+    """The bookkeeping log is appended with pyarrow: no Spark job, one new
+    file per batch, and both readers see the new records next to the
+    ones an older Spark write left in the log."""
+    wh = str(tmp_path / "wh")
+    older = [("old-id", "old.xml", "0" * 32, "2024-01-01T00:00:00+00:00",
+              STATUS_OK, "v0")]
+    spark.createDataFrame(older, FILES_PROCESSED_SCHEMA).coalesce(1).write.parquet(
+        files_processed_path(wh)
+    )
+    new = _write(tmp_path, "new.xml", NEMSIS_XML)
+
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None) or [-1])
+    log_processed_files(wh, [("new.xml", file_md5(new), STATUS_OK)])
+    log_processed_files(wh, [("bad.xml", None, STATUS_ERROR_PARSE)])
+    assert max(tracker.getJobIdsForGroup(None) or [-1]) == before
+
+    parts = [f for f in os.listdir(files_processed_path(wh)) if f.endswith(".parquet")]
+    assert len(parts) == 3
+    recs = {r["original_file_name"]: r for r in read_files_processed(spark, wh).collect()}
+    assert sorted(recs) == ["bad.xml", "new.xml", "old.xml"]
+    assert recs["new.xml"]["md5_hash"] == file_md5(new)
+    assert recs["bad.xml"]["md5_hash"] is None
+    assert recs["bad.xml"]["status"] == STATUS_ERROR_PARSE
+    # the MD5 skip reads the same log
+    assert files_to_process(wh, [new]) == ({}, [new])
 
 
 def test_md5_matches_hashlib(tmp_path):

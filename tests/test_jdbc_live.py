@@ -5,8 +5,8 @@ executed against DuckDB — a real SQL engine with a Postgres-flavored
 dialect and an information_schema — through a thin DBAPI adapter.  This
 covers what the fake-connection tests cannot: the DDL actually parses and
 runs, COMMENT ON TABLE persists, ALTER TABLE widening works on a live
-catalog, batched INSERT/DELETE round-trip real rows, and a mid-batch
-failure rolls back the whole per-file transaction (D6,
+catalog, staged rows and the key-set DELETE round-trip real rows, and a
+failure at any step rolls back the whole per-file transaction (D6,
 /root/reference/main_ingest.py:644).  The one statement DuckDB cannot run
 is ALTER TABLE ADD CONSTRAINT (unsupported there); its information_schema
 existence probe is executed live instead.
@@ -28,9 +28,9 @@ from tests.conftest import NEMSIS_XML
 
 class DuckDBAPIConn:
     """Adapter: DuckDB autocommits and `.cursor()` opens a separate
-    transaction context, so bridge to the psycopg2-style contract
-    stage_to_jdbc expects (shared transaction, commit/rollback on the
-    connection)."""
+    transaction context, so bridge to the psycopg2-style contract the
+    promote transaction of ``stage_to_jdbc_distributed`` expects (shared
+    transaction, commit/rollback on the connection)."""
 
     def __init__(self):
         self._c = duckdb.connect()
@@ -102,13 +102,11 @@ def staged(spark):
     return _batch(spark, NEMSIS_XML)
 
 
-def test_stage_roundtrip_and_idempotent_restage(spark, staged):
+def test_stage_roundtrip_and_idempotent_restage(spark, staged, tmp_path):
     els, registry, frames, keys = staged
     conn = DuckDBAPIConn()
     comments = table_comments(els)
-    inserted = J.stage_to_jdbc(
-        conn, registry, frames, keys, comments, paramstyle="qmark"
-    )
+    inserted = _stage(conn, tmp_path / "v1", registry, frames, keys, comments=comments)
     assert inserted["evitals_01"] >= 1
     for t, n in inserted.items():
         assert conn.q(f'SELECT COUNT(*) FROM "public"."{t}"')[0][0] == n
@@ -131,7 +129,7 @@ def test_stage_roundtrip_and_idempotent_restage(spark, staged):
     )  # fresh parse = fresh uuids, like the reference's second ingest
     frames2 = {t: table_frame(els2, t, [c for c in registry[t] if c not in
                COMMON_COLUMNS and c != value_column_name(t)]) for t in registry}
-    J.stage_to_jdbc(conn, registry, frames2, keys, comments, paramstyle="qmark")
+    _stage(conn, tmp_path / "v2", registry, frames2, keys, comments=comments)
     for t in inserted:
         [(total,)] = conn.q(f'SELECT COUNT(*) FROM "public"."{t}"')
         [(nulls,)] = conn.q(
@@ -158,24 +156,6 @@ def test_widen_table_executes_live():
     )
     conn.commit()
     assert conn.q('SELECT "newattr" FROM "public"."header"') == [("v1",)]
-
-
-def test_midbatch_failure_rolls_back_everything(spark, staged):
-    els, registry, frames, keys = staged
-    # poison one table with a duplicate PRIMARY KEY row
-    t = "evitals_01"
-    bad = frames[t].union(frames[t].limit(1))
-    frames = dict(frames, **{t: bad})
-    conn = DuckDBAPIConn()
-    with pytest.raises(Exception):
-        J.stage_to_jdbc(conn, registry, frames, keys, paramstyle="qmark")
-    # transactional DDL: nothing from the failed file survives, matching the
-    # reference's conn.rollback() per-file guarantee
-    left = conn.q(
-        "SELECT table_name FROM information_schema.tables "
-        "WHERE table_schema = 'public'"
-    )
-    assert left == []
 
 
 def _duckdb_file_hooks(tmp_path):
@@ -209,6 +189,33 @@ def _duckdb_file_hooks(tmp_path):
     )
 
 
+def _stage(conn, stage_dir, registry, frames, keys, **kwargs):
+    """Stage a batch through the DuckDB file hooks into a fresh
+    ``stage_dir``, then detach its stage files, so the next batch on
+    ``conn`` can stage again."""
+    stage_dir.mkdir()
+    inserted = J.stage_to_jdbc_distributed(
+        conn, registry=registry, frames=frames, pcr_keys=keys,
+        **_duckdb_file_hooks(stage_dir), **kwargs,
+    )
+    for (name,) in conn.q(
+        "SELECT database_name FROM duckdb_databases() WHERE database_name LIKE 'stg%'"
+    ):
+        conn._c.execute(f"DETACH {name};")
+    return inserted
+
+
+def _frame_rows(frames, tables):
+    """Test-side oracle: each table's rows as its frame holds them, sorted."""
+    return {t: sorted(map(tuple, frames[t].collect()), key=str) for t in tables}
+
+
+def _target_rows(conn, tables):
+    return {
+        t: sorted(conn.q(f'SELECT * FROM "public"."{t}"'), key=str) for t in tables
+    }
+
+
 def test_distributed_stage_roundtrip_no_driver_collect(
     spark, staged, tmp_path, monkeypatch
 ):
@@ -239,12 +246,10 @@ def test_distributed_stage_roundtrip_no_driver_collect(
         "SELECT comment FROM duckdb_tables() WHERE table_name = 'evitals_01'"
     )
     assert comment == comments["evitals_01"]
-    # parity with the single-connection path on identical input
-    ref_conn = DuckDBAPIConn()
-    ref = J.stage_to_jdbc(
-        ref_conn, registry, frames, keys, comments, paramstyle="qmark"
-    )
-    assert inserted == ref
+    # the target holds exactly the rows of the batch's table frames
+    want = _frame_rows(frames, registry)
+    assert inserted == {t: len(rows) for t, rows in want.items()}
+    assert _target_rows(conn, registry) == want
 
 
 def test_distributed_promote_failure_rolls_back(spark, staged, tmp_path):
@@ -289,71 +294,10 @@ def test_distributed_executor_failure_leaves_target_untouched(
     assert left == []
 
 
-def test_stage_to_warehouse_routes_large_batches_distributed(
-    spark, staged, tmp_path, monkeypatch
-):
-    """The pipeline default: at or above the row threshold the dispatcher
-    must take the distributed path end-to-end — proven by poisoning
-    DataFrame.collect (the single-connection path's first move) — and a
-    promote failure must roll the target back to empty."""
-    els, registry, frames, keys = staged
-    comments = table_comments(els)
-    conn = DuckDBAPIConn()
-    hooks = _duckdb_file_hooks(tmp_path)
-
-    import pyspark.sql as psql
-
-    real_collect = psql.DataFrame.collect
-
-    def _no_collect(self):
-        raise AssertionError("driver-side DataFrame.collect in staging path")
-
-    # threshold=0: any batch counts as "at size" → distributed required
-    monkeypatch.setattr(psql.DataFrame, "collect", _no_collect)
-    inserted = J.stage_to_warehouse(
-        conn, registry, frames, keys, comments,
-        row_threshold=0, **hooks,
-    )
-    monkeypatch.setattr(psql.DataFrame, "collect", real_collect)
-    assert inserted["evitals_01"] >= 1
-    for t, n in inserted.items():
-        assert conn.q(f'SELECT COUNT(*) FROM "public"."{t}"')[0][0] == n
-
-    # rollback through the dispatcher: poisoned promote leaves nothing
-    bad = frames["evitals_01"].union(frames["evitals_01"].limit(1))
-    conn2 = DuckDBAPIConn()
-    with pytest.raises(Exception):
-        J.stage_to_warehouse(
-            conn2, registry, dict(frames, evitals_01=bad), keys,
-            row_threshold=0, **_duckdb_file_hooks(tmp_path),
-        )
-    assert conn2.q(
-        "SELECT table_name FROM information_schema.tables "
-        "WHERE table_schema = 'public'"
-    ) == []
-
-
-def test_stage_to_warehouse_small_batch_compat_and_large_guard(
-    spark, staged, tmp_path
-):
-    els, registry, frames, keys = staged
-    # small batch, no connect_fn: the single-connection compat path
-    conn = DuckDBAPIConn()
-    inserted = J.stage_to_warehouse(conn, registry, frames, keys,
-                                    paramstyle="qmark")
-    assert inserted["evitals_01"] >= 1
-    # large batch without connect_fn must refuse, not silently collect
-    with pytest.raises(ValueError, match="distributed staging path"):
-        J.stage_to_warehouse(
-            DuckDBAPIConn(), registry, frames, keys,
-            row_threshold=0, paramstyle="qmark",
-        )
-
-
-def test_fk_probe_runs_against_live_information_schema(staged):
+def test_fk_probe_runs_against_live_information_schema(staged, tmp_path):
     els, registry, frames, keys = staged
     conn = DuckDBAPIConn()
-    J.stage_to_jdbc(conn, registry, frames, keys, paramstyle="qmark")
+    _stage(conn, tmp_path / "v1", registry, frames, keys)
     for child, parent in J.fk_pairs(els):
         probe, ddl = J.fk_constraint_sql(child, parent)
         assert conn.q(probe) == []  # no FK yet — probe parses + runs
@@ -368,7 +312,6 @@ def test_distributed_stage_rows_bulk_hook_parity(spark, staged, tmp_path):
     (measured ~150x the DBAPI row-binding rate; BENCH_ingest_r14)."""
     els, registry, frames, keys = staged
     comments = table_comments(els)
-    hooks = _duckdb_file_hooks(tmp_path)
 
     def stage_rows(conn, stage, schema, cols, rows):
         import pyarrow as pa
@@ -380,44 +323,27 @@ def test_distributed_stage_rows_bulk_hook_parity(spark, staged, tmp_path):
         conn.unregister("_stg_src")
 
     conn = DuckDBAPIConn()
-    inserted = J.stage_to_jdbc_distributed(
-        conn, registry=registry, frames=frames, pcr_keys=keys,
-        comments=comments, stage_rows=stage_rows, **hooks,
+    inserted = _stage(
+        conn, tmp_path / "hook", registry, frames, keys,
+        comments=comments, stage_rows=stage_rows,
     )
     ref_conn = DuckDBAPIConn()
-    ref = J.stage_to_jdbc(
-        ref_conn, registry, frames, keys, comments, paramstyle="qmark"
-    )
-    assert inserted == ref
-    for t in inserted:
-        got = sorted(conn.q(f'SELECT * FROM "public"."{t}"'))
-        want = sorted(ref_conn.q(f'SELECT * FROM "public"."{t}"'))
-        assert got == want, t
+    ref = _stage(ref_conn, tmp_path / "executemany", registry, frames, keys,
+                 comments=comments)
+    want = _frame_rows(frames, registry)
+    assert inserted == ref == {t: len(rows) for t, rows in want.items()}
+    assert _target_rows(conn, registry) == _target_rows(ref_conn, registry) == want
 
 
-@pytest.mark.parametrize("distributed", [False, True])
-def test_restage_widens_existing_table(spark, tmp_path, distributed):
-    """A batch bringing an attribute the target table lacks: both staging
-    paths add the column (ALTER ... ADD COLUMN IF NOT EXISTS) in the same
+def test_restage_widens_existing_table(spark, tmp_path):
+    """A batch bringing an attribute the target table lacks: the promote
+    adds the column (ALTER ... ADD COLUMN IF NOT EXISTS) in the same
     transaction as the DELETE and INSERT, and its values land."""
     conn = DuckDBAPIConn()
 
     def stage(xml, n):
         _, registry, frames, keys = _batch(spark, xml)
-        if not distributed:
-            return J.stage_to_jdbc(conn, registry, frames, keys, paramstyle="qmark")
-        stage_dir = tmp_path / f"batch{n}"
-        stage_dir.mkdir()
-        inserted = J.stage_to_jdbc_distributed(
-            conn, registry=registry, frames=frames, pcr_keys=keys,
-            **_duckdb_file_hooks(stage_dir),
-        )
-        for (name,) in conn.q(
-            "SELECT database_name FROM duckdb_databases() "
-            "WHERE database_name LIKE 'stg%'"
-        ):
-            conn._c.execute(f"DETACH {name};")
-        return inserted
+        return _stage(conn, tmp_path / f"batch{n}", registry, frames, keys)
 
     def columns():
         return [r[0] for r in conn.q(
@@ -611,37 +537,11 @@ def test_distributed_correction_drops_tables_it_no_longer_has(spark, tmp_path):
     (delete from every dynamic table) do."""
     _, registry, frames, keys = _batch(spark, NEMSIS_XML)
     conn = DuckDBAPIConn()
-    for v in ("v1", "v2"):
-        (tmp_path / v).mkdir()
-    J.stage_to_jdbc_distributed(
-        conn, registry=registry, frames=frames, pcr_keys=keys,
-        **_duckdb_file_hooks(tmp_path / "v1"),
-    )
+    _stage(conn, tmp_path / "v1", registry, frames, keys)
     assert conn.q('SELECT count(*) FROM "public"."evitals_06"') == [(1,)]
-    for (name,) in conn.q(
-        "SELECT database_name FROM duckdb_databases() WHERE database_name LIKE 'stg%'"
-    ):
-        conn._c.execute(f"DETACH {name};")
     start = NEMSIS_XML.index("      <eVitals>")
     end = NEMSIS_XML.index("</eVitals>") + len("</eVitals>\n")
     _, registry2, frames2, keys2 = _batch(spark, NEMSIS_XML[:start] + NEMSIS_XML[end:])
     assert "evitals_06" not in registry2 and PCR1 in keys2
-    J.stage_to_jdbc_distributed(
-        conn, registry=registry2, frames=frames2, pcr_keys=keys2,
-        **_duckdb_file_hooks(tmp_path / "v2"),
-    )
+    _stage(conn, tmp_path / "v2", registry2, frames2, keys2)
     assert conn.q('SELECT count(*) FROM "public"."evitals_06"') == [(0,)]
-
-
-def test_stage_to_warehouse_sizes_batch_in_one_job(spark, staged, monkeypatch):
-    """Routing a batch by size counts its rows in one Spark job, whatever
-    the number of tables."""
-    els, registry, frames, keys = staged
-    three = dict(sorted(registry.items())[:3])
-    routed = []
-    monkeypatch.setattr(J, "stage_to_jdbc", lambda *a, **k: routed.append(a[1]) or {})
-    tracker = spark.sparkContext.statusTracker()
-    before = max(tracker.getJobIdsForGroup(None) or [-1])
-    J.stage_to_warehouse(DuckDBAPIConn(), three, frames, keys)
-    assert max(tracker.getJobIdsForGroup(None) or [-1]) - before == 1
-    assert routed == [three]

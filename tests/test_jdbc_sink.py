@@ -1,47 +1,10 @@
-"""JDBC sink DDL generation + staging transaction against a DBAPI stub
-(no PostgreSQL in this container — the SQL strings are the parity artifact)."""
-
-import pytest
+"""JDBC sink DDL generation (no PostgreSQL in this container — the SQL
+strings are the parity artifact; tests/test_jdbc_live.py runs the staging
+transaction on DuckDB)."""
 
 from nemsis_xml_parser_spark.operators import jdbc_sink as J
 from nemsis_xml_parser_spark.operators.flatten import flatten_xml_strings
-from nemsis_xml_parser_spark.operators.warehouse import (
-    attribute_columns_per_table,
-    table_comments,
-    table_frame,
-)
 from tests.conftest import NEMSIS_XML
-
-
-class StubCursor:
-    def __init__(self, log, fail_on=None):
-        self.log = log
-        self.fail_on = fail_on
-
-    def execute(self, sql, params=None):
-        if self.fail_on and self.fail_on in sql:
-            raise RuntimeError(f"injected failure on: {self.fail_on}")
-        self.log.append(("execute", sql, params))
-
-    def executemany(self, sql, rows):
-        self.log.append(("executemany", sql, list(rows)))
-
-
-class StubConn:
-    def __init__(self, fail_on=None):
-        self.log = []
-        self.committed = False
-        self.rolled_back = False
-        self.fail_on = fail_on
-
-    def cursor(self):
-        return StubCursor(self.log, self.fail_on)
-
-    def commit(self):
-        self.committed = True
-
-    def rollback(self):
-        self.rolled_back = True
 
 
 def test_create_table_sql_shape():
@@ -96,29 +59,3 @@ def test_fk_constraint_name_original_case_parity():
     name = ddl_long.split('ADD CONSTRAINT "')[1].split('"')[0]
     assert len(name) <= 63
     assert name.endswith(hashlib.md5(f"fk_{child}_{parent}".encode()).hexdigest()[:6])
-
-
-def test_stage_to_jdbc_transaction(spark):
-    els = flatten_xml_strings(spark, [("f.xml", NEMSIS_XML)])
-    attr = attribute_columns_per_table(els)
-    frames = {"evitals_06": table_frame(els, "evitals_06", attr["evitals_06"])}
-    registry = {"evitals_06": frames["evitals_06"].columns}
-    conn = StubConn()
-    out = J.stage_to_jdbc(
-        conn, registry, frames, ["P1"], comments=table_comments(els)
-    )
-    assert out == {"evitals_06": 1}
-    assert conn.committed and not conn.rolled_back
-    kinds = [k for k, *_ in conn.log]
-    assert "executemany" in kinds  # batched, not per-row execute
-    deletes = [s for k, s, _ in conn.log if k == "execute" and s.startswith("DELETE")]
-    assert deletes == ['DELETE FROM "public"."evitals_06" WHERE "pcr_uuid_context" IN (\'P1\');']
-
-
-def test_stage_to_jdbc_rollback_on_failure(spark):
-    els = flatten_xml_strings(spark, [("f.xml", NEMSIS_XML)])
-    frames = {"evitals_06": table_frame(els, "evitals_06", ["nv"])}
-    conn = StubConn(fail_on="DELETE")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        J.stage_to_jdbc(conn, {"evitals_06": frames["evitals_06"].columns}, frames, ["P1"])
-    assert conn.rolled_back and not conn.committed

@@ -95,6 +95,23 @@ def test_no_seed_in_graph_raises(spark):
         )
 
 
+def test_local_path_keeps_ids_above_2_53(spark):
+    """Node ids near 2^62 come out of the single-task local path exactly
+    as the distributed path gives them (a float64 hop would merge ids
+    that differ below 1024)."""
+    base = 1 << 62
+    pairs = [(base + 12345, base + 1), (base + 1, base + 2),
+             (base + 2, base + 12345), (base + 3, base + 1)]
+    edges, seeds = _edges(spark, pairs), _seeds(spark, {base + 12345})
+    local = {tuple(r) for r in personalized_pagerank(edges, seeds).collect()}
+    dist = {
+        tuple(r)
+        for r in personalized_pagerank(edges, seeds, local_finish_max=0).collect()
+    }
+    assert local == dist
+    assert {r[0] for r in local} == {n for e in pairs for n in e}
+
+
 def test_trend_break_explains_structure(spark):
     row = QUERIES["events_trend_break"].spark(spark, SF_DIR).collect()[0]
     assert row.n_left >= 5 and row.n_right >= 5

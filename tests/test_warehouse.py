@@ -2,7 +2,6 @@
 
 import os
 
-import pyspark.sql.functions as F
 import pytest
 
 from nemsis_xml_parser_spark.catalog import list_table_dirs
@@ -11,11 +10,9 @@ from nemsis_xml_parser_spark.operators.flatten import flatten_xml_strings
 from nemsis_xml_parser_spark.operators.warehouse import (
     attribute_columns_per_table,
     orphan_check,
-    read_table,
     table_comments,
     table_frame,
     table_names,
-    write_warehouse,
 )
 from tests.conftest import NEMSIS_XML
 
@@ -80,41 +77,22 @@ def test_table_comments(elements):
     assert comments["evitals_01"].endswith("eVitals/eVitals_VitalGroup/eVitals_01")
 
 
-def test_write_warehouse_partitioned_single_pass(elements, spark, tmp_path):
-    """Default layout: one partitionBy(table_name) write; read_table
-    projects the reference's pivoted shape through a pruned scan."""
-    lake = str(tmp_path / "lake")
-    registry = write_warehouse(elements, lake)
-    assert "evitals_01" in registry
-    dirs = sorted(
-        d.split("=", 1)[1] for d in os.listdir(lake) if d.startswith("table_name=")
-    )
-    assert dirs == sorted(registry.keys())
-    tf = read_table(spark, lake, "eVitals_01")
-    assert tf.columns == registry["evitals_01"]
-    row = tf.collect()[0]
-    assert row["evitals_01_value"] == "2025-02-15T12:15:00-05:00"
-    assert row["original_tag_name"] == "eVitals.01"
-    # attr pivot through read_table matches table_frame's
-    pat = read_table(spark, lake, "epatient_15")
-    assert pat.columns[-1] == "codetype"
-    assert pat.collect()[0]["codetype"] == "ICD10"
-    # the table_name filter must reach the scan as a partition filter
-    plan = pat._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    child = read_table(spark, lake, "evitals_vitalgroup")
-    parent = read_table(spark, lake, "evitals")
-    assert orphan_check(child, parent).count() == 0
-
-
 def test_ingested_lake_orphan_check(elements, spark, tmp_path):
-    """The per-tag lake batch ingest writes: one directory per table, and
-    the orphan check holds on it."""
+    """The per-tag lake batch ingest writes: one directory per table in
+    the reference's shape (FIXTURES.md F3), and the orphan check holds on
+    it."""
     src = tmp_path / "f.xml"
     src.write_text(NEMSIS_XML)
     lake = str(tmp_path / "lake")
     ingest_xml_files(spark, [str(src)], lake, deterministic_ids=True)
     assert list_table_dirs(lake) == table_names(elements)
+    row = spark.read.parquet(os.path.join(lake, "evitals_01")).collect()[0]
+    assert row["evitals_01_value"] == "2025-02-15T12:15:00-05:00"
+    assert row["original_tag_name"] == "eVitals.01"
+    # the attribute pivot: codetype is the last column of epatient_15
+    pat = spark.read.parquet(os.path.join(lake, "epatient_15"))
+    assert pat.columns[-1] == "codetype"
+    assert pat.collect()[0]["codetype"] == "ICD10"
     child = spark.read.parquet(os.path.join(lake, "evitals_vitalgroup"))
     parent = spark.read.parquet(os.path.join(lake, "evitals"))
     assert orphan_check(child, parent).count() == 0
