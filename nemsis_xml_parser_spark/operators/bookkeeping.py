@@ -147,11 +147,13 @@ def ingest_xml_files(
     routing.  Returns {file: status}.
 
     Unlike the reference's file-at-a-time loop, the whole batch flattens in
-    ONE distributed pass; per-file statuses are derived from the parse
-    results.  Files that parse to zero elements get Error_Parsing_Empty and
+    ONE distributed pass, which caches the elements and folds the batch
+    summary (``flatten.flatten_batch``); the overwrite's write is the only
+    other Spark job.  Per-file statuses come from the summary's files:
+    files that parse to zero elements get Error_Parsing_Empty and
     error-dir routing (parity: main_ingest.py:386-397).
     """
-    from .flatten import flatten_xml_files
+    from .flatten import flatten_batch
     from .overwrite import overwrite_pcrs
 
     statuses: dict[str, str] = {}
@@ -165,17 +167,13 @@ def ingest_xml_files(
     if not todo:
         return statuses
 
-    elements = flatten_xml_files(spark, list(todo), deterministic_ids=deterministic_ids)
-    elements = elements.cache()
+    elements, summary = flatten_batch(spark, list(todo), deterministic_ids=deterministic_ids)
     try:
-        parsed_files = {
-            r["file"] for r in elements.select("file").distinct().collect()
-        }
-        overwrite_pcrs(elements, warehouse_dir)
+        overwrite_pcrs(elements, warehouse_dir, summary)
 
         records = []
         for p, md5 in todo.items():
-            ok = "file:" + os.path.abspath(p) in parsed_files
+            ok = "file:" + os.path.abspath(p) in summary.files
             status = STATUS_OK if ok else STATUS_ERROR_PARSE
             statuses[p] = status
             records.append((os.path.basename(p), md5, status))

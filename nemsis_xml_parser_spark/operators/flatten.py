@@ -21,22 +21,46 @@ Semantics parity checklist (tests/test_flatten.py):
   PatientCareReport's own attributes when absent (xml_handler.py:83-88)
 * parent links + parent table suggestion (xml_handler.py:95,103,107-115)
 * malformed XML → zero rows for that file (xml_handler.py:132-134)
+
+Batch summary: the reference learns a file's tables, columns and PCR keys
+as it walks the XML, one catalog probe per element (main_ingest.py:252-271,
+400-403).  Here the flatten tasks fold the same facts from the rows they
+emit (``summary_entries``) into one set-valued accumulator while the batch
+cache materializes (``flatten_batch``), so the sinks need no further Spark
+pass to learn them.  A task retry or a cache recompute adds the same
+entries again, which a set union absorbs.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import uuid
 import xml.etree.ElementTree as ET
 from collections.abc import Iterable, Iterator
+from dataclasses import dataclass
 
 import pandas as pd
+from pyspark import Accumulator
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 
 from ..naming import sanitize_name, strip_namespace
 from ..schema import ELEMENT_SCHEMA
+from .warehouse import attribute_columns
 
 _COLUMNS = [f.name for f in ELEMENT_SCHEMA.fields]
+# tags of the summary entries: a file parsed, a table, a (table, attribute)
+# pair and a PCR key
+_FILE, _TABLE, _ATTRIBUTE, _KEY = "f", "t", "a", "k"
+
+
+@functools.lru_cache(maxsize=1 << 16)
+def _names(raw: str) -> tuple[str, str]:
+    """(local name, sanitized name) of a raw tag or attribute key, mapped
+    once per distinct raw name rather than once per element."""
+    local = strip_namespace(raw)
+    return local, sanitize_name(local)
 
 
 def _new_element_id(deterministic_seed: str | None, idx: int) -> str:
@@ -75,18 +99,15 @@ def flatten_xml_document(
         element_id = _new_element_id(seed, idx)
 
         raw_tag = element.tag
-        local_tag = strip_namespace(raw_tag)
-        sanitized_tag = sanitize_name(local_tag)
+        local_tag, sanitized_tag = _names(raw_tag)
         cur_path = path_parts + (sanitized_tag,)
 
-        attributes = {
-            sanitize_name(strip_namespace(k)): v for k, v in element.attrib.items()
-        }
+        attributes = {_names(k)[1]: v for k, v in element.attrib.items()}
         # PCR UUID capture + fill-down + self-attribute injection
         # (xml_handler.py:83-88)
         if local_tag == "PatientCareReport" and element.get("UUID"):
             pcr_uuid = element.get("UUID")
-            attributes.setdefault(sanitize_name("UUID"), pcr_uuid)
+            attributes.setdefault(_names("UUID")[1], pcr_uuid)
 
         rows.append(
             {
@@ -112,9 +133,67 @@ def flatten_xml_document(
     return rows
 
 
+def summary_entries(rows: Iterable) -> set[tuple]:
+    """The summary entries of flattened element rows (dicts or Rows of
+    the canonical columns): each row's file, its lowercased table, its
+    (table, lowercased attribute) pairs and its PCR key when not NULL."""
+    entries: set[tuple] = set()
+    add = entries.add
+    for r in rows:
+        t = r["table_name"].lower()
+        add((_FILE, r["file"]))
+        add((_TABLE, t))
+        for a in r["attributes"] or ():
+            add((_ATTRIBUTE, t, a.lower()))
+        if r["pcr_uuid"] is not None:
+            add((_KEY, r["pcr_uuid"]))
+    return entries
+
+
+@dataclass(frozen=True)
+class BatchSummary:
+    """What a flattened batch holds: the files that gave at least one row,
+    the lowercased table names (sorted), each table's attribute columns
+    (``warehouse.attribute_columns``) and the non-NULL PCR keys (sorted)."""
+
+    files: frozenset[str]
+    tables: list[str]
+    attributes: dict[str, list[str]]
+    keys: list[str]
+
+    @classmethod
+    def from_entries(cls, entries: Iterable[tuple]) -> BatchSummary:
+        parts: dict[str, set] = {_FILE: set(), _TABLE: set(), _ATTRIBUTE: set(), _KEY: set()}
+        for tag, *value in entries:
+            parts[tag].add(tuple(value) if tag == _ATTRIBUTE else value[0])
+        return cls(
+            files=frozenset(parts[_FILE]),
+            tables=sorted(parts[_TABLE]),
+            attributes=attribute_columns(parts[_ATTRIBUTE]),
+            keys=sorted(parts[_KEY]),
+        )
+
+
+class _SetUnion(AccumulatorParam):
+    def zero(self, value: set) -> set:
+        return set()
+
+    def addInPlace(self, value1: set, value2: set) -> set:
+        value1 |= value2
+        return value1
+
+
+def summary_accumulator(spark: SparkSession) -> Accumulator:
+    """A set-valued accumulator for the flatten tasks' summary entries."""
+    return spark.sparkContext.accumulator(set(), _SetUnion())
+
+
 def _flatten_partition(
-    batches: Iterator[pd.DataFrame], deterministic_ids: bool
+    batches: Iterator[pd.DataFrame],
+    deterministic_ids: bool,
+    summary: Accumulator | None,
 ) -> Iterator[pd.DataFrame]:
+    entries: set[tuple] = set()
     for pdf in batches:
         out: list[dict] = []
         for path, content in zip(pdf["path"], pdf["content"]):
@@ -124,7 +203,23 @@ def _flatten_partition(
                 )
             )
         if out:
+            if summary is not None:
+                entries |= summary_entries(out)
             yield pd.DataFrame(out, columns=_COLUMNS)
+    if summary is not None:
+        summary.add(entries)
+
+
+def flatten_frame(
+    binary: DataFrame, deterministic_ids: bool, summary: Accumulator | None = None
+) -> DataFrame:
+    """Canonical elements of a (path, content) frame of XML documents; with
+    a ``summary`` accumulator, each task adds its rows' summary entries to
+    it once, when its last row is out."""
+    return binary.select("path", "content").mapInPandas(
+        lambda it: _flatten_partition(it, deterministic_ids, summary),
+        schema=ELEMENT_SCHEMA,
+    )
 
 
 def flatten_xml_files(
@@ -136,10 +231,36 @@ def flatten_xml_files(
     (A2) → canonical elements DataFrame.  Narrow map — no shuffle.
     """
     paths = [path] if isinstance(path, str) else list(path)
-    binary = spark.read.format("binaryFile").load(paths).select("path", "content")
-    return binary.mapInPandas(
-        lambda it: _flatten_partition(it, deterministic_ids), schema=ELEMENT_SCHEMA
-    )
+    return flatten_frame(spark.read.format("binaryFile").load(paths), deterministic_ids)
+
+
+def cache_with_summary(
+    elements: DataFrame, summary: Accumulator
+) -> tuple[DataFrame, BatchSummary]:
+    """Cache ``elements``, a flatten that feeds ``summary``, and materialize
+    the cache in ONE Spark job; returns the cached frame and the summary
+    its tasks folded.  The accumulator is emptied before the job, so a
+    failed batch leaves no entry to the next one, and after it, so it
+    holds no batch's entries once read.  The caller unpersists the frame."""
+    summary.value = set()
+    elements = elements.cache()
+    try:
+        elements.write.format("noop").mode("overwrite").save()
+    except BaseException:
+        elements.unpersist()
+        raise
+    entries, summary.value = summary.value, set()
+    return elements, BatchSummary.from_entries(entries)
+
+
+def flatten_batch(
+    spark: SparkSession, paths: list[str], deterministic_ids: bool = False
+) -> tuple[DataFrame, BatchSummary]:
+    """Flatten ``paths`` into cached canonical elements and the batch's
+    summary, in one Spark job.  The caller unpersists the elements."""
+    summary = summary_accumulator(spark)
+    binary = spark.read.format("binaryFile").load(paths)
+    return cache_with_summary(flatten_frame(binary, deterministic_ids, summary), summary)
 
 
 def flatten_xml_strings(

@@ -24,7 +24,10 @@ a scheduler round-trip per table, and NEMSIS has hundreds of tags.
 
 ``overwrite_pcrs`` is the one place the lake applies this rule; batch
 ingest (``bookkeeping.ingest_xml_files``) and the streaming ``foreachBatch``
-(``streaming.ingest.start_warehouse_stream``) both call it.  On
+(``streaming.ingest.start_warehouse_stream``) both call it.  The batch's
+tables, attribute columns and key set come from the summary the flatten
+tasks folded while the batch cache materialized
+(``flatten.BatchSummary``), so the write job is the only Spark job here.  On
 Delta/Iceberg this function becomes ``MERGE``/``replaceWhere``.  Tasks read
 and write with plain file-system calls, so the lake must be a path every
 executor sees (local or a shared mount).
@@ -46,22 +49,13 @@ from pyspark.sql import DataFrame
 from .. import catalog
 from ..naming import COMMON_COLUMNS, value_column_name
 from . import warehouse
+from .flatten import BatchSummary
 from .warehouse import TABLE, VALUE
 
 WRITTEN_SCHEMA = "table string, rows long"
 PCR = "pcr_uuid_context"
 # rows a task buffers per table before writing them as a parquet row group
 ROW_GROUP_ROWS = 1 << 20
-
-
-def distinct_pcr_uuids(elements: DataFrame) -> DataFrame:
-    """Distinct non-null PCR UUIDs in the incoming batch
-    (parity: main_ingest.py:400-403)."""
-    return (
-        elements.select(F.col("pcr_uuid"))
-        .where(F.col("pcr_uuid").isNotNull())
-        .distinct()
-    )
 
 
 def part_file_name(pid: int) -> str:
@@ -141,7 +135,7 @@ def _write_task(layouts, assigned, keys):
     return run
 
 
-def overwrite_pcrs(elements: DataFrame, warehouse_dir: str) -> None:
+def overwrite_pcrs(elements: DataFrame, warehouse_dir: str, summary: BatchSummary) -> None:
     """Apply one batch of canonical elements to the per-tag lake under
     ``warehouse_dir``: every existing table loses the rows of every PCR in
     the batch, then each table gains its new rows — in one Spark write job.
@@ -155,19 +149,20 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str) -> None:
     batch without rows touches nothing.  An existing table keeps its
     columns in order and gains the batch's new attribute columns at the
     end; a new table gets ``warehouse.table_frame``'s columns.  Every
-    column is a string.  ``elements`` should be cached: the table list,
-    attribute pass, key set and write each read it.
+    column is a string.
+
+    ``summary`` is ``elements``' ``flatten.BatchSummary``: its tables,
+    attribute columns and PCR keys (parity: main_ingest.py:400-403).  The
+    write job is the one Spark job, and the only read of ``elements``.
     """
     spark = elements.sparkSession
-    incoming = warehouse.table_names(elements)
-    attr_map = warehouse.attribute_columns_per_table(elements)
+    incoming = summary.tables
+    attr_map = summary.attributes
     # drop crashed-rewrite leftovers first so a staging dir is never
     # treated as a real dynamic table, then list survivors
     catalog.clean_scratch_dirs(warehouse_dir)
     existing = catalog.list_table_dirs(warehouse_dir)
-    keys = (
-        sorted(r[0] for r in distinct_pcr_uuids(elements).collect()) if existing else []
-    )
+    keys = summary.keys if existing else []
     rewritten = set(incoming) | (set(existing) if keys else set())
     if not rewritten:
         return
@@ -196,8 +191,9 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str) -> None:
     )
     # the kept rows never enter the plan: the write tasks read the old part
     # files themselves, dealt round-robin (largest first) over the job's
-    # tasks, and a batch of fewer partitions is spread over that many, so
-    # a one-file batch still rewrites the lake on every core
+    # tasks, and a batch of fewer partitions gains empty ones up to that
+    # many, so a one-file batch still rewrites the lake on every core (a
+    # shuffle would spread it too, but costs a job of its own under AQE)
     n_tasks = spark.sparkContext.defaultParallelism
     old_files = sorted(
         ((t, p) for t in columns if t in existing
@@ -205,8 +201,11 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str) -> None:
         key=lambda f: -os.path.getsize(f[1]),
     )
     assigned = [old_files[pid::n_tasks] for pid in range(n_tasks)]
-    if old_files and elements.rdd.getNumPartitions() < n_tasks:
-        flat = flat.repartition(n_tasks)
+    short = n_tasks - elements.rdd.getNumPartitions()
+    if old_files and short > 0:
+        pad = spark.range(0, short, 1, short).where(F.col("id") < 0)
+        null = F.lit(None).cast("string")
+        flat = flat.union(pad.select(*[null.alias(c) for c in flat.columns]))
     else:
         flat = flat.coalesce(n_tasks)
 

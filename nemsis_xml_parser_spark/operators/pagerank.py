@@ -306,7 +306,13 @@ def personalized_pagerank(
     iteration, seed flags ride the (node)-sized rank vector.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    sd0 = seeds.select(F.col(seed_col).cast("long").alias("node")).distinct()
+    # a NULL id is no seed (a NULL src would reach the local path's
+    # int64 cast as NaN)
+    sd0 = (
+        seeds.select(F.col(seed_col).cast("long").alias("node"))
+        .where(F.col("node").isNotNull())
+        .distinct()
+    )
     # one pinned tag-union carries edges (_k=0) AND seed ids (_k=1) so
     # the single-task endgame sees both inputs in one Arrow batch; the
     # edge count rides the pin via observe.  A seed row's dst is its own

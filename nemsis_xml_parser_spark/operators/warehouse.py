@@ -8,9 +8,12 @@ new attributes appear (:252-271) and inserting row-at-a-time (:466-495).
 Spark-first redesign:
 
 * the canonical elements DataFrame keeps attributes in a MAP column;
-* ``attribute_columns_per_table`` derives the full column set per tag in ONE
-  distributed pass (replaces per-element catalog probes — the reference's
-  main scalability anti-pattern, SURVEY §4);
+* ``attribute_columns`` turns a batch's (table, attribute) pairs into each
+  tag's attribute columns (replaces per-element catalog probes — the
+  reference's main scalability anti-pattern, SURVEY §4).  Ingest gets the
+  pairs from the flatten tasks (``flatten.BatchSummary``);
+  ``attribute_columns_per_table`` derives them in a distributed pass of
+  its own, for callers that hold only a frame of elements;
 * ``table_frame`` produces the exact reference table shape (FIXTURES.md F3):
   ``element_id, parent_element_id, pcr_uuid_context, original_tag_name,
   {table}_value`` + attribute columns, names lowercased, attr names that
@@ -35,6 +38,7 @@ is pruned to its table's directory.
 from __future__ import annotations
 
 from collections import Counter
+from collections.abc import Iterable
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -57,13 +61,24 @@ def table_names(elements: DataFrame) -> list[str]:
     return sorted(r["t"] for r in rows)
 
 
+def attribute_columns(pairs: Iterable[tuple[str, str]]) -> dict[str, list[str]]:
+    """{table: sorted attribute columns} from lowercased (table, attribute)
+    pairs.  Collision rule parity: attribute names equal to a common column
+    or to the table's value column are dropped (main_ingest.py:479-483)."""
+    out: dict[str, set[str]] = {}
+    for t, a in pairs:
+        out.setdefault(t, set()).add(a)
+    return {
+        t: sorted(a for a in attrs if a not in COMMON_COLUMNS and a != value_column_name(t))
+        for t, attrs in out.items()
+    }
+
+
 def attribute_columns_per_table(elements: DataFrame) -> dict[str, list[str]]:
     """One distributed pass: per tag, the set of sanitized+lowercased
     attribute names ever observed (schema-evolution-by-widening collapsed
-    into a single aggregation; replaces main_ingest.py:252-271).
-    Collision rule parity: attribute names equal to a common column are
-    dropped (main_ingest.py:479-483).
-    """
+    into a single aggregation; replaces main_ingest.py:252-271), filtered
+    by ``attribute_columns``."""
     rows = (
         elements.select(
             F.lower(F.col("table_name")).alias("t"),
@@ -74,13 +89,7 @@ def attribute_columns_per_table(elements: DataFrame) -> dict[str, list[str]]:
         .distinct()
         .collect()
     )
-    out: dict[str, list[str]] = {}
-    for r in rows:
-        out.setdefault(r["t"], []).append(r["attr"])
-    for t, attrs in out.items():
-        reserved = set(COMMON_COLUMNS) | {value_column_name(t)}
-        out[t] = sorted(a for a in attrs if a not in reserved)
-    return out
+    return attribute_columns((r["t"], r["attr"]) for r in rows)
 
 
 def lowered_attributes() -> Column:

@@ -7,27 +7,33 @@ microbatch flattens its files (same mapInPandas flatten as batch) and
 applies the PCR-scoped overwrite via ``foreachBatch`` — giving exactly-once
 file tracking (checkpointed source) where the reference only had an
 unchecked MD5 log.  ``cleanSource='archive'`` reproduces the
-processed_xml_archive/ behavior natively.
+processed_xml_archive/ behavior natively.  As in batch ingest, the flatten
+tasks fold the batch summary into an accumulator while each microbatch's
+cache materializes, and the overwrite takes that summary: two Spark jobs
+per microbatch.
 """
 
 from __future__ import annotations
 
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.flatten import _flatten_partition
+from ..operators.flatten import cache_with_summary, flatten_frame, summary_accumulator
 from ..operators.overwrite import overwrite_pcrs
-from ..schema import ELEMENT_SCHEMA
 
 
 def stream_elements(
     spark: SparkSession,
     watch_dir: str,
+    summary: Accumulator,
     glob: str = "*.xml",
     archive_dir: str | None = None,
     deterministic_ids: bool = False,
 ) -> DataFrame:
-    """Streaming canonical elements DataFrame from a watched directory."""
+    """Streaming canonical elements DataFrame from a watched directory; its
+    tasks add their summary entries to ``summary``
+    (``flatten.summary_accumulator``)."""
     reader = (
         spark.readStream.format("binaryFile")
         # streaming sources require an explicit schema; this is binaryFile's
@@ -42,10 +48,7 @@ def stream_elements(
         reader = reader.option("cleanSource", "archive").option(
             "sourceArchiveDir", archive_dir
         )
-    binary = reader.load(watch_dir).select("path", "content")
-    return binary.mapInPandas(
-        lambda it: _flatten_partition(it, deterministic_ids), schema=ELEMENT_SCHEMA
-    )
+    return flatten_frame(reader.load(watch_dir), deterministic_ids, summary)
 
 
 def start_warehouse_stream(
@@ -58,17 +61,18 @@ def start_warehouse_stream(
 ) -> StreamingQuery:
     """Microbatch EP1: each batch of files goes through the same PCR-scoped
     overwrite as batch ingest (``overwrite.overwrite_pcrs``; foreachBatch
-    bridges the streaming plan to the batch sink)."""
+    bridges the streaming plan to the batch sink).  ``foreachBatch`` runs
+    one microbatch at a time, so one accumulator serves them all."""
+    summary = summary_accumulator(spark)
     elements_stream = stream_elements(
-        spark, watch_dir, glob=glob, deterministic_ids=deterministic_ids
+        spark, watch_dir, summary, glob=glob, deterministic_ids=deterministic_ids
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df = batch_df.cache()
+        batch_df, batch = cache_with_summary(batch_df, summary)
         try:
-            overwrite_pcrs(batch_df, warehouse_dir)
+            if batch.files:
+                overwrite_pcrs(batch_df, warehouse_dir, batch)
         finally:
             batch_df.unpersist()
 

@@ -162,3 +162,101 @@ def test_crashed_staging_dir_not_treated_as_table(spark, tmp_path):
     assert not os.path.exists(stale_mig)
     v = spark.read.parquet(os.path.join(wh, "evitals_01"))
     assert v.count() == 2
+
+
+def _mixed_batch(tmp_path):
+    """Six files: mixed-case tags of one table, attributes named like a
+    common column and like the table's value column, rows outside any
+    report (NULL PCR), and one malformed file."""
+    docs = {
+        "a.xml": NEMSIS_XML,
+        "b.xml": '<r><PatientCareReport UUID="B"><x element_id="1" x_value="2" '
+                 'Code="3">v</x><X code="4"/></PatientCareReport><loose y="5"/></r>',
+        "c.xml": '<r><patientcarereport UUID="lower-is-no-pcr"><X X_Value="6"/>'
+                 "</patientcarereport></r>",
+        "d.xml": '<r><PatientCareReport UUID="D"><eVitals.01>1</eVitals.01>'
+                 '</PatientCareReport><PatientCareReport UUID="B"/></r>',
+        "e.xml": "<open><unclosed>",
+        "f.xml": '<R><Header><PARENT_ELEMENT_ID a="1"/></Header></R>',
+    }
+    return [_write(tmp_path, name, text) for name, text in docs.items()]
+
+
+def test_batch_summary_matches_spark_passes(spark, tmp_path):
+    """The summary the flatten tasks fold while the cache materializes
+    equals what the separate Spark passes over the cached batch return:
+    tables, attribute columns, distinct non-NULL PCR keys and files."""
+    from nemsis_xml_parser_spark.operators.flatten import flatten_batch
+    from nemsis_xml_parser_spark.operators.warehouse import (
+        attribute_columns_per_table,
+        table_names,
+    )
+
+    paths = _mixed_batch(tmp_path)
+    elements, summary = flatten_batch(spark, paths)
+    try:
+        assert elements.rdd.getNumPartitions() > 1
+        keys = {r[0] for r in elements.where(F.col("pcr_uuid").isNotNull())
+                .select("pcr_uuid").distinct().collect()}
+        files = {r[0] for r in elements.select("file").distinct().collect()}
+        assert summary.tables == table_names(elements)
+        assert summary.attributes == attribute_columns_per_table(elements)
+        assert summary.keys == sorted(keys)
+        assert summary.files == files
+    finally:
+        elements.unpersist()
+    # the pins the passes agree on
+    assert summary.keys == ["6e5d2c1a-0000-4000-8000-000000000001",
+                            "6e5d2c1a-0000-4000-8000-000000000002", "B", "D"]
+    assert summary.attributes["x"] == ["code"]
+    assert summary.attributes["parent_element_id"] == ["a"]
+    assert len(summary.files) == 5
+    assert not any(f.endswith("e.xml") for f in summary.files)
+
+
+def test_batch_summary_survives_a_retried_fold(spark, tmp_path):
+    """A retried task (or a recomputed cache partition) adds its summary
+    entries again: a partition folded twice into the accumulator gives
+    the summary of the distributed batch."""
+    import pandas as pd
+
+    from nemsis_xml_parser_spark.operators.flatten import (
+        BatchSummary,
+        _flatten_partition,
+        flatten_batch,
+        summary_accumulator,
+    )
+
+    paths = _mixed_batch(tmp_path)
+    elements, summary = flatten_batch(spark, paths, deterministic_ids=True)
+    elements.unpersist()
+    batch = pd.DataFrame({
+        "path": ["file:" + p for p in paths],
+        "content": [open(p, "rb").read() for p in paths],
+    })
+    acc = summary_accumulator(spark)
+    for _ in range(2):
+        list(_flatten_partition(iter([batch]), True, acc))
+    assert BatchSummary.from_entries(acc.value) == summary
+
+
+def test_ingest_runs_two_spark_jobs(spark, tmp_path):
+    """A batch into an existing lake runs one job that flattens, caches
+    and summarizes it, and one write job: the batch's tables, attribute
+    columns, PCR keys and parsed files cost no Spark pass of their own."""
+    wh = str(tmp_path / "wh")
+    ingest_xml_files(spark, [_write(tmp_path, "first.xml", NEMSIS_XML)], wh,
+                     deterministic_ids=True)
+    batch = [
+        _write(tmp_path, "fix.xml", NEMSIS_XML.replace("rec-1", "rec-1-v2")),
+        _write(tmp_path, "new.xml", NEMSIS_XML.replace("6e5d2c1a-", "7e5d2c1a-")),
+    ]
+
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None) or [-1])
+    statuses = ingest_xml_files(spark, batch, wh, deterministic_ids=True)
+    assert max(tracker.getJobIdsForGroup(None) or [-1]) - before <= 2
+    assert set(statuses.values()) == {STATUS_OK}
+    rec = spark.read.parquet(os.path.join(wh, "erecord_01"))
+    assert sorted(r["erecord_01_value"] for r in rec.collect()) == [
+        "rec-1", "rec-1-v2", "rec-2", "rec-2"]

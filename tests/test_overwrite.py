@@ -10,13 +10,12 @@ from nemsis_xml_parser_spark.catalog import list_table_dirs
 from nemsis_xml_parser_spark.naming import value_column_name
 from nemsis_xml_parser_spark.operators.bookkeeping import ingest_xml_files
 from nemsis_xml_parser_spark.operators.flatten import (
-    flatten_xml_files,
+    BatchSummary,
+    flatten_batch,
     flatten_xml_strings,
+    summary_entries,
 )
-from nemsis_xml_parser_spark.operators.overwrite import (
-    distinct_pcr_uuids,
-    overwrite_pcrs,
-)
+from nemsis_xml_parser_spark.operators.overwrite import overwrite_pcrs
 from nemsis_xml_parser_spark.schema import STATUS_ERROR_PARSE, STATUS_OK
 from tests.conftest import NEMSIS_XML
 
@@ -40,10 +39,14 @@ def _lake(spark, lake):
     return out
 
 
-def test_distinct_pcr_uuids(spark):
-    els = flatten_xml_strings(spark, [("f.xml", NEMSIS_XML)])
-    got = {r["pcr_uuid"] for r in distinct_pcr_uuids(els).collect()}
-    assert got == {PCR1, "6e5d2c1a-0000-4000-8000-000000000002"}
+def summarize(els):
+    """The batch summary of ``els``, from the flatten tasks' fold run over
+    its rows on the driver."""
+    return BatchSummary.from_entries(summary_entries(els.collect()))
+
+
+def overwrite(els, lake):
+    overwrite_pcrs(els, lake, summarize(els))
 
 
 def test_reingest_same_keys_replaces(spark, tmp_path):
@@ -51,8 +54,8 @@ def test_reingest_same_keys_replaces(spark, tmp_path):
     els = flatten_xml_strings(spark, [("f.xml", NEMSIS_XML)]).cache()
     n_keyed = els.where(F.col("pcr_uuid").isNotNull()).count()
     n_null = els.where(F.col("pcr_uuid").isNull()).count()
-    overwrite_pcrs(els, lake)
-    overwrite_pcrs(els, lake)
+    overwrite(els, lake)
+    overwrite(els, lake)
     twice = _lake(spark, lake)
     # keyed rows are replaced, not duplicated
     assert twice.where(F.col("pcr_uuid").isNotNull()).count() == n_keyed
@@ -79,7 +82,7 @@ def test_overwrite_keeps_other_keys_and_nulls(spark, tmp_path):
     xml_b = '<r><PatientCareReport UUID="A"><x>2</x></PatientCareReport></r>'
     xml_c = '<r><PatientCareReport UUID="C"><x>3</x></PatientCareReport></r>'
     for name, xml in (("a.xml", xml_a), ("c.xml", xml_c), ("b.xml", xml_b)):
-        overwrite_pcrs(flatten_xml_strings(spark, [(name, xml)]), lake)
+        overwrite(flatten_xml_strings(spark, [(name, xml)]), lake)
     merged = _lake(spark, lake)
     vals = {
         (r["pcr_uuid"], r["value"])
@@ -130,38 +133,39 @@ def _jobs_per_overwrite(spark, lake, n_tables):
     of ``n_tables`` tables (root + report + leaf tags)."""
     tags = [f"x{i}" for i in range(n_tables - 2)]
     first = f"<r>{_report('A', tags, 1)}{_report('B', tags, 1)}</r>"
-    overwrite_pcrs(flatten_xml_strings(spark, [("a.xml", first)]), lake)
+    overwrite(flatten_xml_strings(spark, [("a.xml", first)]), lake)
     assert len(list_table_dirs(lake)) == n_tables
     batch = flatten_xml_strings(spark, [("b.xml", f"<r>{_report('A', tags, 2)}</r>")])
     batch = batch.cache()
-    batch.count()
+    summary = summarize(batch)
     tracker = spark.sparkContext.statusTracker()
     before = max(tracker.getJobIdsForGroup(None) or [-1])
-    overwrite_pcrs(batch, lake)
+    overwrite_pcrs(batch, lake, summary)
     jobs = max(tracker.getJobIdsForGroup(None) or [-1]) - before
     batch.unpersist()
     return jobs
 
 
 def test_job_count_does_not_grow_with_table_count(spark, tmp_path):
-    """Every table's rewrite runs in one write job, so a lake of 12 tables
-    costs the same jobs per batch as a lake of 3."""
+    """Every table's rewrite runs in one write job, and the batch summary
+    is given, so a lake of 12 tables costs one job per batch, as a lake of
+    3 does."""
     small = _jobs_per_overwrite(spark, str(tmp_path / "small"), 3)
     large = _jobs_per_overwrite(spark, str(tmp_path / "large"), 12)
-    assert small == large, (small, large)
+    assert small == large == 1, (small, large)
 
 
 def test_new_attribute_widens_existing_table(spark, tmp_path):
     lake = str(tmp_path / "lake")
     first = '<r><PatientCareReport UUID="A"><x a="1">v</x><y>w</y></PatientCareReport></r>'
     second = '<r><PatientCareReport UUID="B"><x b="2">u</x></PatientCareReport></r>'
-    overwrite_pcrs(flatten_xml_strings(spark, [("1.xml", first)]), lake)
+    overwrite(flatten_xml_strings(spark, [("1.xml", first)]), lake)
     x_cols = spark.read.parquet(os.path.join(lake, "x")).columns
     y_cols = spark.read.parquet(os.path.join(lake, "y")).columns
     assert x_cols == ["element_id", "parent_element_id", "pcr_uuid_context",
                       "original_tag_name", "x_value", "a"]
 
-    overwrite_pcrs(flatten_xml_strings(spark, [("2.xml", second)]), lake)
+    overwrite(flatten_xml_strings(spark, [("2.xml", second)]), lake)
     x = spark.read.parquet(os.path.join(lake, "x"))
     assert x.columns == x_cols + ["b"]
     got = {(r["pcr_uuid_context"], r["x_value"], r["a"], r["b"]) for r in x.collect()}
@@ -275,18 +279,19 @@ def test_one_file_batch_spreads_old_files_over_all_tasks(spark, tmp_path):
     n = spark.sparkContext.defaultParallelism
     tags = ["x0", "x1", "x2"]
     reports = "".join(_report(f"P{i}", tags, 1) for i in range(4 * n))
-    overwrite_pcrs(flatten_xml_strings(spark, [("a.xml", f"<r>{reports}</r>")]), lake)
+    overwrite(flatten_xml_strings(spark, [("a.xml", f"<r>{reports}</r>")]), lake)
     assert len([f for f in _inodes(lake) if f[1].endswith(".parquet")]) >= n
 
     path = tmp_path / "b.xml"
     path.write_text(f"<r>{_report('P0', tags, 2)}</r>")
-    batch = flatten_xml_files(spark, [str(path)], deterministic_ids=True).cache()
+    batch, summary = flatten_batch(spark, [str(path)], deterministic_ids=True)
     assert batch.rdd.getNumPartitions() == 1
-    batch.count()
     tracker = spark.sparkContext.statusTracker()
-    overwrite_pcrs(batch, lake)
+    before = max(tracker.getJobIdsForGroup(None))
+    overwrite_pcrs(batch, lake, summary)
     batch.unpersist()
-    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(None)))
+    assert max(tracker.getJobIdsForGroup(None)) == before + 1
+    write_job = tracker.getJobInfo(before + 1)
     assert tracker.getStageInfo(max(write_job.stageIds)).numTasks == n
     x0 = spark.read.parquet(os.path.join(lake, "x0"))
     assert x0.count() == 4 * n

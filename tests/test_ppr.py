@@ -112,6 +112,24 @@ def test_local_path_keeps_ids_above_2_53(spark):
     assert {r[0] for r in local} == {n for e in pairs for n in e}
 
 
+def test_null_seed_id_is_ignored_on_both_paths(spark):
+    """A NULL in the seeds frame is no seed: the single-task local path
+    and the distributed path rank a 3-node cycle seeded {1, NULL} alike,
+    and as seeded {1} alone."""
+    pairs = [(1, 2), (2, 3), (3, 1)]
+    edges, seeds = _edges(spark, pairs), _seeds(spark, [1, None])
+    local = {tuple(r) for r in personalized_pagerank(edges, seeds).collect()}
+    dist = {
+        tuple(r)
+        for r in personalized_pagerank(edges, seeds, local_finish_max=0).collect()
+    }
+    assert local == dist
+    assert local == {
+        tuple(r)
+        for r in personalized_pagerank(edges, _seeds(spark, [1])).collect()
+    }
+
+
 def test_trend_break_explains_structure(spark):
     row = QUERIES["events_trend_break"].spark(spark, SF_DIR).collect()[0]
     assert row.n_left >= 5 and row.n_right >= 5
