@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import os
 import uuid
 import xml.etree.ElementTree as ET
 from collections.abc import Iterable, Iterator
@@ -63,13 +64,25 @@ def _names(raw: str) -> tuple[str, str]:
     return local, sanitize_name(local)
 
 
-def _new_element_id(deterministic_seed: str | None, idx: int) -> str:
-    if deterministic_seed is None:
-        return str(uuid.uuid4())
-    # UUID shaped from md5(file || preorder index): stable across re-ingest,
-    # used by tests and by idempotent pipelines.
-    digest = hashlib.md5(f"{deterministic_seed}#{idx}".encode()).hexdigest()
-    return str(uuid.UUID(digest))
+def _element_ids(deterministic_seed: str | None, n: int) -> list[str]:
+    """The ids of a document's ``n`` elements, in preorder."""
+    if deterministic_seed is not None:
+        # UUID shaped from md5(file || preorder index): stable across
+        # re-ingest, used by tests and by idempotent pipelines.
+        return [
+            str(uuid.UUID(hashlib.md5(f"{deterministic_seed}#{i}".encode()).hexdigest()))
+            for i in range(n)
+        ]
+    # random uuid4s drawn in one call: set the version (4) and the RFC 4122
+    # variant bits of each 16 bytes, then format the canonical strings
+    raw = bytearray(os.urandom(16 * n))
+    raw[6::16] = bytes(b & 0x0F | 0x40 for b in raw[6::16])
+    raw[8::16] = bytes(b & 0x3F | 0x80 for b in raw[8::16])
+    h = raw.hex()
+    return [
+        f"{h[o:o + 8]}-{h[o + 8:o + 12]}-{h[o + 12:o + 16]}-{h[o + 16:o + 20]}-{h[o + 20:o + 32]}"
+        for o in range(0, 32 * n, 32)
+    ]
 
 
 def flatten_xml_document(
@@ -89,14 +102,15 @@ def flatten_xml_document(
     except ET.ParseError:
         return []
 
-    seed = file_name if deterministic_ids else None
+    ids = _element_ids(file_name if deterministic_ids else None,
+                       sum(1 for _ in root.iter()))
     rows: list[dict] = []
     # stack entries: (element, parent_id, pcr_uuid, path_parts, parent_table, depth)
     stack: list[tuple] = [(root, None, None, (), None, 0)]
     idx = 0
     while stack:
         element, parent_id, pcr_uuid, path_parts, parent_table, depth = stack.pop()
-        element_id = _new_element_id(seed, idx)
+        element_id = ids[idx]
 
         raw_tag = element.tag
         local_tag, sanitized_tag = _names(raw_tag)

@@ -1,9 +1,13 @@
 """Flatten parity tests (FIXTURES.md F1 expected behaviors)."""
 
+import hashlib
+import uuid
+
 import pyspark.sql.functions as F
 import pytest
 
 from nemsis_xml_parser_spark.operators.flatten import (
+    flatten_batch,
     flatten_xml_document,
     flatten_xml_strings,
 )
@@ -103,6 +107,32 @@ def test_deterministic_ids_stable():
     a = flatten_xml_document(NEMSIS_XML, "f.xml", deterministic_ids=True)
     b = flatten_xml_document(NEMSIS_XML, "f.xml", deterministic_ids=True)
     assert [r["element_id"] for r in a] == [r["element_id"] for r in b]
+    # the UUID shaped from md5(file || preorder index)
+    assert [r["element_id"] for r in a] == [
+        str(uuid.UUID(hashlib.md5(f"f.xml#{i}".encode()).hexdigest()))
+        for i in range(len(a))
+    ]
+
+
+def test_random_ids_are_distinct_canonical_uuid4s(spark, tmp_path):
+    paths = []
+    for i in range(3):
+        p = tmp_path / f"doc{i}.xml"
+        p.write_text(NEMSIS_XML)
+        paths.append(str(p))
+    elements, _ = flatten_batch(spark, paths)
+    try:
+        got = elements.select("element_id", "parent_element_id").collect()
+    finally:
+        elements.unpersist()
+    ids = [r["element_id"] for r in got]
+    assert len(ids) == 3 * len(flatten_xml_document(NEMSIS_XML))
+    assert len(set(ids)) == len(ids)
+    for x in ids:
+        u = uuid.UUID(x)
+        assert (u.version, u.variant, str(u)) == (4, uuid.RFC_4122, x)
+    parents = {r["parent_element_id"] for r in got} - {None}
+    assert len(parents) > 3 and parents <= set(ids)
 
 
 def test_distributed_flatten_matches_local(spark):
