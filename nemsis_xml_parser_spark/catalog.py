@@ -2,18 +2,19 @@
 
 The reference probes PostgreSQL's information_schema per table
 (/root/reference/main_ingest.py:147-166,296-305,586-603); the lake
-equivalent reads directory + parquet footer metadata, and the Spark-session
-equivalent wraps ``spark.catalog``.  All return DataFrames so catalog
-joins (SURVEY A9/F4) are ordinary joins.
+equivalent lists the table directories and reads one parquet footer per
+table with pyarrow on the driver, so no catalog question costs a Spark
+job.  The catalog join of SURVEY A9/F4 is ``tables_with_column``.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
+import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
 
 BOOKKEEPING_PREFIX = "_"
 
@@ -80,37 +81,27 @@ def footer_columns(table_dir: str) -> list[str]:
     return pq.read_schema(part_files(table_dir)[0]).names
 
 
-def list_tables(spark: SparkSession, warehouse_dir: str) -> DataFrame:
-    """Dynamic tables in the lake, excluding bookkeeping (C10 parity:
-    main_ingest.py:296-305 excludes pg_% + SchemaVersions/XMLFilesProcessed)."""
-    names = list_table_dirs(warehouse_dir)
-    return spark.createDataFrame([(n,) for n in names], "table_name string")
+def append_part_file(directory: str, table: pa.Table) -> None:
+    """Add ``table`` to the parquet directory ``directory`` (made if absent)
+    as one new part file, written under a hidden name, which readers skip,
+    and then renamed into place: a reader never sees half a file."""
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(directory, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(directory, name))
 
 
-def list_columns(spark: SparkSession, warehouse_dir: str, table: str) -> set[str]:
+def list_columns(warehouse_dir: str, table: str) -> set[str]:
     """Column set of one lake table (A6 parity: get_table_columns), read
     from a parquet footer without a Spark job."""
     return set(footer_columns(os.path.join(warehouse_dir, table)))
 
 
-def columns_frame(spark: SparkSession, warehouse_dir: str) -> DataFrame:
-    """(table_name, column_name) over the whole lake — the
-    information_schema.columns analogue used by the migration's catalog join
-    (A9 parity: alembic 1941212973eb:51-67)."""
-    rows = []
-    for r in list_tables(spark, warehouse_dir).collect():
-        for c in list_columns(spark, warehouse_dir, r["table_name"]):
-            rows.append((r["table_name"], c))
-    return spark.createDataFrame(rows, "table_name string, column_name string")
-
-
-def tables_with_column(
-    spark: SparkSession, warehouse_dir: str, column: str
-) -> list[str]:
-    """Catalog join: tables owning a given column (the migration's discovery
-    query)."""
-    df = columns_frame(spark, warehouse_dir)
-    return sorted(
-        r["table_name"]
-        for r in df.where(df.column_name == column).select("table_name").collect()
-    )
+def tables_with_column(warehouse_dir: str, column: str) -> list[str]:
+    """Catalog join: the dynamic tables owning a given column, sorted (the
+    migration's discovery query over information_schema.columns, A9
+    parity: alembic 1941212973eb:51-67), from one parquet footer per
+    table; bookkeeping tables are not dynamic tables (C10 parity:
+    main_ingest.py:296-305)."""
+    return [t for t in list_table_dirs(warehouse_dir) if column in list_columns(warehouse_dir, t)]

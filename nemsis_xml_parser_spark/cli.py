@@ -61,8 +61,8 @@ def main(argv: list[str] | None = None) -> int:
             from .operators.migration import bootstrap_schema, require_schema_version
 
             if args.skip_version_gate:
-                bootstrap_schema(spark, args.warehouse)
-            require_schema_version(spark, args.warehouse)  # G2 gate
+                bootstrap_schema(args.warehouse)
+            require_schema_version(args.warehouse)  # G2 gate
             statuses = ingest_xml_files(
                 spark,
                 args.files,
@@ -102,7 +102,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.command == "bootstrap":
             from .operators.migration import bootstrap_schema
 
-            bootstrap_schema(spark, args.warehouse)
+            bootstrap_schema(args.warehouse)
             print("schema version seeded")
             return 0
 

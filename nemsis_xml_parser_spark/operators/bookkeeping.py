@@ -29,16 +29,21 @@ import uuid
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from .. import catalog
 from ..schema import (
     FILES_PROCESSED_SCHEMA,
     INGESTION_LOGIC_VERSION,
     STATUS_ERROR_NOT_FOUND,
     STATUS_ERROR_PARSE,
     STATUS_OK,
+    STATUS_SKIPPED,
 )
+from .flatten import BatchSummary, flatten_batch
+from .overwrite import overwrite_pcrs
 
 
 def file_md5(path: str) -> str | None:
@@ -61,23 +66,18 @@ def log_processed_files(
     """Append (file_name, md5, status) records to the bookkeeping table
     (parity: main_ingest.py:67-98 + database_setup.py:80-95) as ONE parquet
     file written with pyarrow on the driver (no Spark job), so the log
-    every later ``files_to_process`` lists grows by one file per batch.
-    The file is written under a hidden name, which both readers skip, and
-    then renamed into place."""
+    every later ``files_to_process`` lists grows by one file per batch
+    (``catalog.append_part_file``)."""
     now = dt.datetime.now(dt.timezone.utc).isoformat()
     names = FILES_PROCESSED_SCHEMA.fieldNames()
     rows = [
         dict(zip(names, (str(uuid.uuid4()), name, md5, now, status, INGESTION_LOGIC_VERSION)))
         for name, md5, status in records
     ]
-    path = files_processed_path(warehouse_dir)
-    os.makedirs(path, exist_ok=True)
-    name = f"part-{uuid.uuid4()}.parquet"
-    tmp = os.path.join(path, f".{name}.tmp")
-    pq.write_table(
-        pa.Table.from_pylist(rows, schema=to_arrow_schema(FILES_PROCESSED_SCHEMA)), tmp
+    catalog.append_part_file(
+        files_processed_path(warehouse_dir),
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(FILES_PROCESSED_SCHEMA)),
     )
-    os.replace(tmp, os.path.join(path, name))
 
 
 def read_files_processed(spark: SparkSession, warehouse_dir: str) -> DataFrame:
@@ -89,13 +89,16 @@ def read_files_processed(spark: SparkSession, warehouse_dir: str) -> DataFrame:
 
 def files_to_process(
     warehouse_dir: str, file_paths: list[str]
-) -> tuple[dict[str, str | None], list[str]]:
-    """Split incoming files into ({todo: md5}, skipped) by MD5 anti-join
+) -> tuple[dict[str, str | None], dict[str, str]]:
+    """Split incoming files into ({todo: md5}, {skipped: md5}) by MD5 anti-join
     against previously-succeeded files (SURVEY D5 — the check the reference
-    records data for but never performs).  Each file is hashed once; the
-    todo hash is the one the log records.  The log's two columns are read
-    with pyarrow: the set ends up on the driver anyway, so it costs no
-    Spark job."""
+    records data for but never performs) and against the earlier todo
+    files of the same batch, so a byte-identical copy in one batch is
+    skipped as it would be in the next one.  A file that cannot be read
+    (MD5 None) is never a duplicate.  Each file is hashed once; the todo
+    hash is the one the log records.  The log's two columns are read with
+    pyarrow: the set ends up on the driver anyway, so it costs no Spark
+    job."""
     path = files_processed_path(warehouse_dir)
     seen = set()
     if os.path.isdir(path):  # no directory on the first run
@@ -104,13 +107,14 @@ def files_to_process(
             path, schema=pa.schema([("md5_hash", pa.string()), ("status", pa.string())])
         )
         seen = set(log.filter(pc.equal(log["status"], STATUS_OK))["md5_hash"].to_pylist())
-    todo, skipped = {}, []
+    todo, skipped = {}, {}
     for p in file_paths:
         md5 = file_md5(p)
-        if md5 in seen:
-            skipped.append(p)
+        if md5 is not None and md5 in seen:
+            skipped[p] = md5
         else:
             todo[p] = md5
+            seen.add(md5)
     return todo, skipped
 
 
@@ -132,6 +136,31 @@ def move_to_error_directory(path: str, error_dir: str) -> str:
     return archive_file(path, error_dir)
 
 
+def _row_file(path: str) -> str:
+    """The ``file`` of a local path's element rows: binaryFile's path, which
+    is "file:" + the unencoded absolute path."""
+    return "file:" + os.path.abspath(path)
+
+
+def last_version_only(
+    elements: DataFrame, summary: BatchSummary, order: list[str]
+) -> DataFrame:
+    """``elements`` without the rows of a PCR that a later file of ``order``
+    (the batch's paths, in the caller's order) also carries: each PCR keeps
+    the rows of its last file, as when the files are ingested one at a
+    time.  Rows with a NULL PCR are kept.  Without such a PCR, ``elements``
+    itself."""
+    rank = {_row_file(p): i for i, p in enumerate(order)}
+    last = {
+        k: max(files, key=rank.__getitem__)
+        for k, files in summary.key_files.items() if len(files) > 1
+    }
+    if not last:
+        return elements
+    owner = F.create_map(*[F.lit(x) for kv in sorted(last.items()) for x in kv])
+    return elements.where(F.coalesce(owner[F.col("pcr_uuid")] == F.col("file"), F.lit(True)))
+
+
 def ingest_xml_files(
     spark: SparkSession,
     file_paths: list[str],
@@ -144,46 +173,42 @@ def ingest_xml_files(
 
     md5-skip → flatten → PCR-scoped overwrite of the per-tag lake
     (``overwrite.overwrite_pcrs``) → bookkeeping log → archive/error
-    routing.  Returns {file: status}.
+    routing.  Returns {file: status}.  It is the one ingest path: the CLI
+    calls it per batch, and the watched-directory stream
+    (``streaming.ingest.start_warehouse_stream``) per microbatch.
 
     Unlike the reference's file-at-a-time loop, the whole batch flattens in
     ONE distributed pass, which caches the elements and folds the batch
     summary (``flatten.flatten_batch``); the overwrite's write is the only
-    other Spark job.  Per-file statuses come from the summary's files:
-    files that parse to zero elements get Error_Parsing_Empty and
-    error-dir routing (parity: main_ingest.py:386-397).
+    other Spark job.  The batch ends as the file-at-a-time loop would: a
+    byte-identical copy of an earlier file is skipped, and a PCR that
+    several files carry keeps only the last one's rows
+    (``last_version_only``).  Per-file statuses come from the summary's
+    files: files that parse to zero elements get Error_Parsing_Empty and
+    error-dir routing (parity: main_ingest.py:386-397).  Every file of the
+    batch, skipped and missing ones too, gets its status and MD5 in the
+    log, as each file does in the reference (main_ingest.py:648-688).
     """
-    from .flatten import flatten_batch
-    from .overwrite import overwrite_pcrs
-
-    statuses: dict[str, str] = {}
     todo, skipped = files_to_process(warehouse_dir, file_paths)
-    for p in skipped:
-        statuses[p] = "Skipped_MD5_Seen"
-
+    records = [(p, md5, STATUS_SKIPPED) for p, md5 in skipped.items()]
     for p in [p for p in todo if not os.path.exists(p)]:
-        statuses[p] = STATUS_ERROR_NOT_FOUND
-        del todo[p]
-    if not todo:
-        return statuses
-
-    elements, summary = flatten_batch(spark, list(todo), deterministic_ids=deterministic_ids)
-    try:
-        overwrite_pcrs(elements, warehouse_dir, summary)
-
-        records = []
-        for p, md5 in todo.items():
-            ok = "file:" + os.path.abspath(p) in summary.files
-            status = STATUS_OK if ok else STATUS_ERROR_PARSE
-            statuses[p] = status
-            records.append((os.path.basename(p), md5, status))
-        log_processed_files(warehouse_dir, records)
-
-        for p in todo:
-            if statuses[p] == STATUS_OK and archive_dir:
-                archive_file(p, archive_dir)
-            elif statuses[p] != STATUS_OK and error_dir:
-                move_to_error_directory(p, error_dir)
-        return statuses
-    finally:
-        elements.unpersist()
+        records.append((p, todo.pop(p), STATUS_ERROR_NOT_FOUND))
+    if todo:
+        elements, summary = flatten_batch(spark, list(todo), deterministic_ids=deterministic_ids)
+        try:
+            overwrite_pcrs(last_version_only(elements, summary, list(todo)), warehouse_dir, summary)
+        finally:
+            elements.unpersist()
+        records += [
+            (p, md5, STATUS_OK if _row_file(p) in summary.files else STATUS_ERROR_PARSE)
+            for p, md5 in todo.items()
+        ]
+    if records:
+        log_processed_files(warehouse_dir, [(os.path.basename(p), m, s) for p, m, s in records])
+    statuses = {p: s for p, _, s in records}
+    for p in todo:
+        if statuses[p] == STATUS_OK and archive_dir:
+            archive_file(p, archive_dir)
+        elif statuses[p] != STATUS_OK and error_dir:
+            move_to_error_directory(p, error_dir)
+    return statuses

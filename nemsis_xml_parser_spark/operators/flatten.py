@@ -27,8 +27,9 @@ as it walks the XML, one catalog probe per element (main_ingest.py:252-271,
 400-403).  Here the flatten tasks fold the same facts from the rows they
 emit (``summary_entries``) into one set-valued accumulator while the batch
 cache materializes (``flatten_batch``), so the sinks need no further Spark
-pass to learn them.  A task retry or a cache recompute adds the same
-entries again, which a set union absorbs.
+pass to learn them.  Each PCR key is folded with its file, so ingest can
+tell a PCR that several files of the batch carry.  A task retry or a cache
+recompute adds the same entries again, which a set union absorbs.
 """
 
 from __future__ import annotations
@@ -52,7 +53,7 @@ from .warehouse import attribute_columns
 
 _COLUMNS = [f.name for f in ELEMENT_SCHEMA.fields]
 # tags of the summary entries: a file parsed, a table, a (table, attribute)
-# pair and a PCR key
+# pair and a (PCR key, file) pair
 _FILE, _TABLE, _ATTRIBUTE, _KEY = "f", "t", "a", "k"
 
 
@@ -150,7 +151,8 @@ def flatten_xml_document(
 def summary_entries(rows: Iterable) -> set[tuple]:
     """The summary entries of flattened element rows (dicts or Rows of
     the canonical columns): each row's file, its lowercased table, its
-    (table, lowercased attribute) pairs and its PCR key when not NULL."""
+    (table, lowercased attribute) pairs and its (PCR key, file) when the
+    key is not NULL."""
     entries: set[tuple] = set()
     add = entries.add
     for r in rows:
@@ -160,7 +162,7 @@ def summary_entries(rows: Iterable) -> set[tuple]:
         for a in r["attributes"] or ():
             add((_ATTRIBUTE, t, a.lower()))
         if r["pcr_uuid"] is not None:
-            add((_KEY, r["pcr_uuid"]))
+            add((_KEY, r["pcr_uuid"], r["file"]))
     return entries
 
 
@@ -168,23 +170,30 @@ def summary_entries(rows: Iterable) -> set[tuple]:
 class BatchSummary:
     """What a flattened batch holds: the files that gave at least one row,
     the lowercased table names (sorted), each table's attribute columns
-    (``warehouse.attribute_columns``) and the non-NULL PCR keys (sorted)."""
+    (``warehouse.attribute_columns``), the non-NULL PCR keys (sorted) and
+    the files each key came from."""
 
     files: frozenset[str]
     tables: list[str]
     attributes: dict[str, list[str]]
     keys: list[str]
+    key_files: dict[str, frozenset[str]]
 
     @classmethod
     def from_entries(cls, entries: Iterable[tuple]) -> BatchSummary:
-        parts: dict[str, set] = {_FILE: set(), _TABLE: set(), _ATTRIBUTE: set(), _KEY: set()}
+        parts: dict[str, set] = {_FILE: set(), _TABLE: set(), _ATTRIBUTE: set()}
+        key_files: dict[str, set] = {}
         for tag, *value in entries:
-            parts[tag].add(tuple(value) if tag == _ATTRIBUTE else value[0])
+            if tag == _KEY:
+                key_files.setdefault(value[0], set()).add(value[1])
+            else:
+                parts[tag].add(tuple(value) if tag == _ATTRIBUTE else value[0])
         return cls(
             files=frozenset(parts[_FILE]),
             tables=sorted(parts[_TABLE]),
             attributes=attribute_columns(parts[_ATTRIBUTE]),
-            keys=sorted(parts[_KEY]),
+            keys=sorted(key_files),
+            key_files={k: frozenset(f) for k, f in key_files.items()},
         )
 
 
@@ -248,33 +257,26 @@ def flatten_xml_files(
     return flatten_frame(spark.read.format("binaryFile").load(paths), deterministic_ids)
 
 
-def cache_with_summary(
-    elements: DataFrame, summary: Accumulator
+def flatten_batch(
+    spark: SparkSession, paths: list[str], deterministic_ids: bool = False
 ) -> tuple[DataFrame, BatchSummary]:
-    """Cache ``elements``, a flatten that feeds ``summary``, and materialize
-    the cache in ONE Spark job; returns the cached frame and the summary
-    its tasks folded.  The accumulator is emptied before the job, so a
-    failed batch leaves no entry to the next one, and after it, so it
-    holds no batch's entries once read.  The caller unpersists the frame."""
-    summary.value = set()
-    elements = elements.cache()
+    """Flatten ``paths`` into cached canonical elements and the batch's
+    summary, in ONE Spark job that materializes the cache while its tasks
+    fold the summary.  The accumulator is emptied once read: PySpark's
+    driver keeps every accumulator it made, so a read one would otherwise
+    hold its batch's entries for the life of the process.  The caller
+    unpersists the elements."""
+    summary = summary_accumulator(spark)
+    binary = spark.read.format("binaryFile").load(paths)
+    elements = flatten_frame(binary, deterministic_ids, summary).cache()
     try:
         elements.write.format("noop").mode("overwrite").save()
     except BaseException:
         elements.unpersist()
         raise
-    entries, summary.value = summary.value, set()
+    finally:
+        entries, summary.value = summary.value, set()
     return elements, BatchSummary.from_entries(entries)
-
-
-def flatten_batch(
-    spark: SparkSession, paths: list[str], deterministic_ids: bool = False
-) -> tuple[DataFrame, BatchSummary]:
-    """Flatten ``paths`` into cached canonical elements and the batch's
-    summary, in one Spark job.  The caller unpersists the elements."""
-    summary = summary_accumulator(spark)
-    binary = spark.read.format("binaryFile").load(paths)
-    return cache_with_summary(flatten_frame(binary, deterministic_ids, summary), summary)
 
 
 def flatten_xml_strings(

@@ -22,9 +22,9 @@ into the table's staging directory.  The driver then swaps the staging
 directories in (``catalog.swap_in_scratch_dir``).  Per-tag jobs would cost
 a scheduler round-trip per table, and NEMSIS has hundreds of tags.
 
-``overwrite_pcrs`` is the one place the lake applies this rule; batch
-ingest (``bookkeeping.ingest_xml_files``) and the streaming ``foreachBatch``
-(``streaming.ingest.start_warehouse_stream``) both call it.  The batch's
+``overwrite_pcrs`` is the one place the lake applies this rule; its one
+caller is ``bookkeeping.ingest_xml_files``, which CLI batches and each
+microbatch of ``streaming.ingest.start_warehouse_stream`` run.  The batch's
 tables, attribute columns and key set come from the summary the flatten
 tasks folded while the batch cache materialized
 (``flatten.BatchSummary``), so the write job is the only Spark job here.  On

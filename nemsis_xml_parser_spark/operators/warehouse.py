@@ -23,8 +23,8 @@ Spark-first redesign:
   ``split_by_table``) carries every table of a batch in one frame — table
   tag, the 4 common columns, the value, one slot per attribute column — so
   both sinks move a batch in ONE Spark job: ``overwrite.overwrite_pcrs``
-  (the per-tag lake, one parquet directory per table, that batch and
-  streaming ingest write; only the batch's new rows go through the flat
+  (the per-tag lake, one parquet directory per table, that
+  ``bookkeeping.ingest_xml_files`` writes; only the batch's new rows go through the flat
   layout, the write tasks copy the lake's kept rows file by file) and
   ``jdbc_sink.stage_to_jdbc_distributed`` (the JDBC target's stage
   tables).

@@ -61,6 +61,7 @@ FILES_PROCESSED_SCHEMA = StructType(
 
 # Status vocabulary parity (/root/reference/main_ingest.py:366,379,393,653,669,684)
 STATUS_OK = "Staged_Dynamic_Spark_V1"
+STATUS_SKIPPED = "Skipped_MD5_Seen"
 STATUS_ERROR_MD5 = "Error_MD5"
 STATUS_ERROR_NOT_FOUND = "Error_FileNotFound"
 STATUS_ERROR_PARSE = "Error_Parsing_Empty"

@@ -7,6 +7,8 @@ import pytest
 from nemsis_xml_parser_spark.cli import build_parser, main
 from tests.conftest import NEMSIS_XML
 
+pytestmark = pytest.mark.etl
+
 
 def test_parser_shapes():
     p = build_parser()

@@ -11,6 +11,8 @@ import pytest
 
 from nemsis_xml_parser_spark.operators import jdbc_sink as J
 
+pytestmark = pytest.mark.etl
+
 
 def test_postgres_bookkeeping_ddl_matches_reference_shapes():
     sv, xfp = J.bookkeeping_ddl("public", J.POSTGRES)

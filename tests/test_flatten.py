@@ -13,6 +13,8 @@ from nemsis_xml_parser_spark.operators.flatten import (
 )
 from tests.conftest import NEMSIS_XML
 
+pytestmark = pytest.mark.etl
+
 
 @pytest.fixture(scope="module")
 def rows():

@@ -3,11 +3,14 @@ through the flatten with structural invariants intact (SURVEY §5.4)."""
 
 from xml.sax.saxutils import escape, quoteattr
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from nemsis_xml_parser_spark.naming import sanitize_name, strip_namespace
 from nemsis_xml_parser_spark.operators.flatten import flatten_xml_document
+
+pytestmark = pytest.mark.etl
 
 TAGS = ["Node", "a.b", "Data1", "x", "PatientCareReport", "weird-tag"]
 # XML tag names cannot start with a digit/hyphen — keep raw tags legal XML,

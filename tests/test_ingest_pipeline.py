@@ -4,6 +4,7 @@ archive/error routing → md5-skip idempotency."""
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from nemsis_xml_parser_spark.operators.bookkeeping import (
     file_md5,
@@ -19,6 +20,8 @@ from nemsis_xml_parser_spark.schema import (
     STATUS_OK,
 )
 from tests.conftest import NEMSIS_XML
+
+pytestmark = pytest.mark.etl
 
 
 def _write(tmp_path, name, content):
@@ -92,7 +95,7 @@ def test_files_to_process_runs_no_spark_job(spark, tmp_path):
     before = max(tracker.getJobIdsForGroup(None) or [-1])
     todo, skipped = files_to_process(wh, [seen, failed, new])
     assert max(tracker.getJobIdsForGroup(None) or [-1]) == before
-    assert skipped == [seen]
+    assert skipped == {seen: file_md5(seen)}
     assert todo == {failed: file_md5(failed), new: file_md5(new)}
 
 
@@ -122,7 +125,7 @@ def test_log_processed_files_runs_no_spark_job(spark, tmp_path):
     assert recs["bad.xml"]["md5_hash"] is None
     assert recs["bad.xml"]["status"] == STATUS_ERROR_PARSE
     # the MD5 skip reads the same log
-    assert files_to_process(wh, [new]) == ({}, [new])
+    assert files_to_process(wh, [new]) == ({}, {new: file_md5(new)})
 
 
 def test_md5_matches_hashlib(tmp_path):
@@ -260,3 +263,34 @@ def test_ingest_runs_two_spark_jobs(spark, tmp_path):
     rec = spark.read.parquet(os.path.join(wh, "erecord_01"))
     assert sorted(r["erecord_01_value"] for r in rec.collect()) == [
         "rec-1", "rec-1-v2", "rec-2", "rec-2"]
+
+
+@pytest.mark.parametrize(
+    "second, table, values",
+    [
+        # a byte-identical copy: skipped by MD5, the PCR's rows stay single
+        (NEMSIS_XML, "evitals_01", ["2025-02-15T12:15:00-05:00"]),
+        # a later version of the same PCRs: only its rows stay
+        (NEMSIS_XML.replace("98", "99"), "evitals_10", ["99"]),
+    ],
+    ids=["identical-copy", "later-version"],
+)
+def test_one_batch_ends_like_one_file_at_a_time(spark, tmp_path, second, table, values):
+    """Two files of one batch that carry the same PCRs leave the lake as
+    ingesting them one after the other would: one copy of each PCR, from
+    the later file; rows outside any report are kept from both."""
+    wh = str(tmp_path / "wh")
+    first = _write(tmp_path, "v1.xml", NEMSIS_XML)
+    later = _write(tmp_path, "v2.xml", second)
+
+    statuses = ingest_xml_files(spark, [first, later], wh, deterministic_ids=True)
+    skipped = second == NEMSIS_XML
+    assert statuses == {first: STATUS_OK,
+                        later: "Skipped_MD5_Seen" if skipped else STATUS_OK}
+    assert sorted(r[f"{table}_value"] for r in
+                  spark.read.parquet(os.path.join(wh, table)).collect()) == values
+    rec = spark.read.parquet(os.path.join(wh, "erecord_01")).collect()
+    assert sorted(r["erecord_01_value"] for r in rec) == ["rec-1", "rec-2"]
+    # the NULL-PCR header rows of every ingested file are kept
+    agency = spark.read.parquet(os.path.join(wh, "dagency_01")).collect()
+    assert len(agency) == (1 if skipped else 2)

@@ -25,6 +25,8 @@ from nemsis_xml_parser_spark.operators.warehouse import (
 from nemsis_xml_parser_spark.naming import COMMON_COLUMNS, value_column_name
 from tests.conftest import NEMSIS_XML
 
+pytestmark = pytest.mark.etl
+
 
 class DuckDBAPIConn:
     """Adapter: DuckDB autocommits and `.cursor()` opens a separate

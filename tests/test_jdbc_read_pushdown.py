@@ -16,6 +16,8 @@ import pytest
 
 from nemsis_xml_parser_spark.operators.jdbc_sink import read_jdbc_table
 
+pytestmark = pytest.mark.etl
+
 DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 

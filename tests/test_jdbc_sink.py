@@ -2,9 +2,13 @@
 strings are the parity artifact; tests/test_jdbc_live.py runs the staging
 transaction on DuckDB)."""
 
+import pytest
+
 from nemsis_xml_parser_spark.operators import jdbc_sink as J
 from nemsis_xml_parser_spark.operators.flatten import flatten_xml_strings
 from tests.conftest import NEMSIS_XML
+
+pytestmark = pytest.mark.etl
 
 
 def test_create_table_sql_shape():

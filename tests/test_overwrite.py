@@ -5,6 +5,7 @@ streaming ingest run."""
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from nemsis_xml_parser_spark.catalog import list_table_dirs
 from nemsis_xml_parser_spark.naming import value_column_name
@@ -18,6 +19,8 @@ from nemsis_xml_parser_spark.operators.flatten import (
 from nemsis_xml_parser_spark.operators.overwrite import overwrite_pcrs
 from nemsis_xml_parser_spark.schema import STATUS_ERROR_PARSE, STATUS_OK
 from tests.conftest import NEMSIS_XML
+
+pytestmark = pytest.mark.etl
 
 PCR1 = "6e5d2c1a-0000-4000-8000-000000000001"
 

@@ -4,16 +4,20 @@ event-stream windowed operators fed from a file stream."""
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from nemsis_xml_parser_spark.streaming.events import (
     dedup_within_watermark,
     session_windows,
     tumbling_counts,
 )
+from nemsis_xml_parser_spark.operators.bookkeeping import read_files_processed
+from nemsis_xml_parser_spark.schema import STATUS_ERROR_PARSE, STATUS_OK, STATUS_SKIPPED
 from nemsis_xml_parser_spark.streaming.ingest import start_warehouse_stream
 from tests.conftest import NEMSIS_XML
 
 
+@pytest.mark.etl
 def test_streaming_xml_ingest(spark, tmp_path):
     watch = tmp_path / "drop"
     watch.mkdir()
@@ -35,6 +39,39 @@ def test_streaming_xml_ingest(spark, tmp_path):
     q2.awaitTermination(120)
     v10 = spark.read.parquet(os.path.join(wh, "evitals_10"))
     assert {r["evitals_10_value"] for r in v10.collect()} == {"99"}
+
+
+@pytest.mark.etl
+def test_stream_microbatches_are_ingest_batches(spark, tmp_path):
+    """Each microbatch is one ``ingest_xml_files`` batch: every file gets a
+    status in the ``_files_processed`` log, a malformed file is logged as
+    failed, a byte-identical copy in a later microbatch is skipped by MD5,
+    a name with '#' ingests, and a corrected version replaces its PCR."""
+    watch = tmp_path / "drop"
+    watch.mkdir()
+    wh = str(tmp_path / "wh")
+    ckpt = str(tmp_path / "ckpt")
+    other = NEMSIS_XML.replace("6e5d2c1a-", "7e5d2c1a-")
+    (watch / "good.xml").write_text(NEMSIS_XML)
+    (watch / "bad.xml").write_text("<open><unclosed>")
+    (watch / "hash#1.xml").write_text(other)
+    start_warehouse_stream(spark, str(watch), wh, ckpt, deterministic_ids=True
+                           ).awaitTermination(120)
+
+    (watch / "copy.xml").write_text(NEMSIS_XML)
+    (watch / "fixed.xml").write_text(NEMSIS_XML.replace("98", "99"))
+    start_warehouse_stream(spark, str(watch), wh, ckpt, deterministic_ids=True
+                           ).awaitTermination(120)
+
+    log = {r["original_file_name"]: r["status"]
+           for r in read_files_processed(spark, wh).collect()}
+    assert log == {"good.xml": STATUS_OK, "bad.xml": STATUS_ERROR_PARSE,
+                   "hash#1.xml": STATUS_OK, "copy.xml": STATUS_SKIPPED,
+                   "fixed.xml": STATUS_OK}
+    v10 = {(r["pcr_uuid_context"], r["evitals_10_value"])
+           for r in spark.read.parquet(os.path.join(wh, "evitals_10")).collect()}
+    assert v10 == {("6e5d2c1a-0000-4000-8000-000000000001", "99"),
+                   ("7e5d2c1a-0000-4000-8000-000000000001", "98")}
 
 
 def _event_stream(spark, tmp_path):

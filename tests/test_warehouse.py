@@ -16,6 +16,8 @@ from nemsis_xml_parser_spark.operators.warehouse import (
 )
 from tests.conftest import NEMSIS_XML
 
+pytestmark = pytest.mark.etl
+
 
 @pytest.fixture(scope="module")
 def elements(spark):
