@@ -75,6 +75,13 @@ def part_files(table_dir: str) -> list[str]:
     ]
 
 
+def deal_by_size(files: list, n: int, path=lambda f: f) -> list[list]:
+    """Deal ``files`` over ``n`` tasks, largest first and round-robin;
+    ``path`` maps an item to the file whose size ranks it."""
+    ordered = sorted(files, key=lambda f: -os.path.getsize(path(f)))
+    return [ordered[i::n] for i in range(n)]
+
+
 def footer_columns(table_dir: str) -> list[str]:
     """Column list of a lake table, in order, from one parquet footer (every
     part file of a table has the same columns)."""

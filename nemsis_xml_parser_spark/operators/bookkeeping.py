@@ -7,7 +7,8 @@ Reference behavior: every processed XML file gets a row in
 never checked — re-ingest is only neutralized by the PCR-scoped overwrite.
 The rebuild records the same log AND uses it: ``files_to_process`` anti-joins
 incoming files against already-succeeded MD5s, giving true skip-if-seen
-idempotency on top of the overwrite semantics.
+idempotency on top of the overwrite semantics.  A file's element rows
+carry ``flatten.row_file`` of its path, which matches statuses to files.
 
 The lake layout is plain parquet directories under a warehouse root:
 
@@ -42,7 +43,7 @@ from ..schema import (
     STATUS_OK,
     STATUS_SKIPPED,
 )
-from .flatten import BatchSummary, flatten_batch
+from .flatten import BatchSummary, flatten_batch, row_file
 from .overwrite import overwrite_pcrs
 
 
@@ -119,27 +120,19 @@ def files_to_process(
 
 
 def archive_file(path: str, archive_dir: str) -> str:
-    """Move a processed file to the archive (parity: main_ingest.py:101-116;
-    timestamp-uniquified on collision like move_to_error_directory)."""
+    """Move a processed file to the archive or error directory (parity:
+    main_ingest.py:101-139), never over a file already there: a taken name
+    gets a timestamp, and a taken timestamped name a counter as well."""
     os.makedirs(archive_dir, exist_ok=True)
-    dest = os.path.join(archive_dir, os.path.basename(path))
-    if os.path.exists(dest):
-        stamp = dt.datetime.now().strftime("%Y%m%d%H%M%S")
-        root, ext = os.path.splitext(os.path.basename(path))
-        dest = os.path.join(archive_dir, f"{root}_{stamp}{ext}")
+    name = os.path.basename(path)
+    root, ext = os.path.splitext(name)
+    stamp = dt.datetime.now().strftime("%Y%m%d%H%M%S")
+    dest, n = os.path.join(archive_dir, name), 0
+    while os.path.exists(dest):
+        dest = os.path.join(archive_dir, f"{root}_{stamp}{f'_{n}' if n else ''}{ext}")
+        n += 1
     shutil.move(path, dest)
     return dest
-
-
-def move_to_error_directory(path: str, error_dir: str) -> str:
-    """Failure routing (parity: main_ingest.py:119-139)."""
-    return archive_file(path, error_dir)
-
-
-def _row_file(path: str) -> str:
-    """The ``file`` of a local path's element rows: binaryFile's path, which
-    is "file:" + the unencoded absolute path."""
-    return "file:" + os.path.abspath(path)
 
 
 def last_version_only(
@@ -150,7 +143,7 @@ def last_version_only(
     the rows of its last file, as when the files are ingested one at a
     time.  Rows with a NULL PCR are kept.  Without such a PCR, ``elements``
     itself."""
-    rank = {_row_file(p): i for i, p in enumerate(order)}
+    rank = {row_file(p): i for i, p in enumerate(order)}
     last = {
         k: max(files, key=rank.__getitem__)
         for k, files in summary.key_files.items() if len(files) > 1
@@ -179,15 +172,18 @@ def ingest_xml_files(
 
     Unlike the reference's file-at-a-time loop, the whole batch flattens in
     ONE distributed pass, which caches the elements and folds the batch
-    summary (``flatten.flatten_batch``); the overwrite's write is the only
-    other Spark job.  The batch ends as the file-at-a-time loop would: a
-    byte-identical copy of an earlier file is skipped, and a PCR that
-    several files carry keeps only the last one's rows
-    (``last_version_only``).  Per-file statuses come from the summary's
-    files: files that parse to zero elements get Error_Parsing_Empty and
-    error-dir routing (parity: main_ingest.py:386-397).  Every file of the
-    batch, skipped and missing ones too, gets its status and MD5 in the
-    log, as each file does in the reference (main_ingest.py:648-688).
+    summary (``flatten.flatten_batch``): its tasks read exactly the batch's
+    files, by path, so a name is never a glob or a URI.  The overwrite's
+    write is the only other Spark job.  The batch ends as the
+    file-at-a-time loop would: a byte-identical copy of an earlier file is
+    skipped, and a PCR that several files carry keeps only the last one's
+    rows (``last_version_only``).  Per-file statuses come from the
+    summary's files: files that parse to zero elements get
+    Error_Parsing_Empty and error-dir routing (parity:
+    main_ingest.py:386-397); routing never moves a file over one already
+    there (``archive_file``).  Every file of the batch, skipped and missing
+    ones too, gets its status and MD5 in the log, as each file does in the
+    reference (main_ingest.py:648-688).
     """
     todo, skipped = files_to_process(warehouse_dir, file_paths)
     records = [(p, md5, STATUS_SKIPPED) for p, md5 in skipped.items()]
@@ -200,7 +196,7 @@ def ingest_xml_files(
         finally:
             elements.unpersist()
         records += [
-            (p, md5, STATUS_OK if _row_file(p) in summary.files else STATUS_ERROR_PARSE)
+            (p, md5, STATUS_OK if row_file(p) in summary.files else STATUS_ERROR_PARSE)
             for p, md5 in todo.items()
         ]
     if records:
@@ -210,5 +206,5 @@ def ingest_xml_files(
         if statuses[p] == STATUS_OK and archive_dir:
             archive_file(p, archive_dir)
         elif statuses[p] != STATUS_OK and error_dir:
-            move_to_error_directory(p, error_dir)
+            archive_file(p, error_dir)
     return statuses

@@ -3,14 +3,16 @@
 Reference behavior: ``_traverse_element_recursive``
 (/root/reference/xml_handler.py:22-115) + ``parse_xml_file``
 (/root/reference/xml_handler.py:118-141).  Spark SQL has no unbounded
-recursion, so the flatten runs inside ``mapInPandas`` over
-``binaryFile``-scanned documents — each task parses its files and emits
-fixed-schema element rows; everything downstream is pure Catalyst.
+recursion, so the flatten runs inside ``mapInArrow``: the driver deals the
+batch's files out over the tasks, and each task reads its own files by
+path, parses them and emits fixed-schema element rows; everything
+downstream is pure Catalyst.
 
-Scale design: one XML document is one row of the binaryFile scan, so a
-100 TB corpus of NEMSIS files parallelizes per-file across executors with
-no shuffle at all (narrow map).  The flatten is iterative (explicit stack),
-so tree depth is bounded by memory, not Python's recursion limit.
+Scale design: no file source lists, globs or URI-parses the paths, and no
+file's bytes pass through the JVM; a corpus parallelizes per file with no
+shuffle (narrow map), on a path every executor sees.  The flatten is
+iterative (explicit stack), so tree depth is bounded by memory, not
+Python's recursion limit.
 
 Semantics parity checklist (tests/test_flatten.py):
 * namespace strip on tags and attribute keys (xml_handler.py:59-62,76-79)
@@ -39,19 +41,19 @@ import hashlib
 import os
 import uuid
 import xml.etree.ElementTree as ET
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 from dataclasses import dataclass
 
-import pandas as pd
+import pyarrow as pa
 from pyspark import Accumulator
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import catalog
 from ..naming import sanitize_name, strip_namespace
-from ..schema import ELEMENT_SCHEMA
+from ..schema import ELEMENT_ARROW_SCHEMA, ELEMENT_SCHEMA
 from .warehouse import attribute_columns
 
-_COLUMNS = [f.name for f in ELEMENT_SCHEMA.fields]
 # tags of the summary entries: a file parsed, a table, a (table, attribute)
 # pair and a (PCR key, file) pair
 _FILE, _TABLE, _ATTRIBUTE, _KEY = "f", "t", "a", "k"
@@ -211,50 +213,51 @@ def summary_accumulator(spark: SparkSession) -> Accumulator:
     return spark.sparkContext.accumulator(set(), _SetUnion())
 
 
-def _flatten_partition(
-    batches: Iterator[pd.DataFrame],
-    deterministic_ids: bool,
-    summary: Accumulator | None,
-) -> Iterator[pd.DataFrame]:
-    entries: set[tuple] = set()
-    for pdf in batches:
-        out: list[dict] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            out.extend(
-                flatten_xml_document(
-                    bytes(content), file_name=path, deterministic_ids=deterministic_ids
-                )
-            )
-        if out:
-            if summary is not None:
-                entries |= summary_entries(out)
-            yield pd.DataFrame(out, columns=_COLUMNS)
-    if summary is not None:
-        summary.add(entries)
+def row_file(path: str) -> str:
+    """The ``file`` of a local path's element rows: "file:" + the
+    unencoded absolute path."""
+    return "file:" + os.path.abspath(path)
 
 
-def flatten_frame(
-    binary: DataFrame, deterministic_ids: bool, summary: Accumulator | None = None
-) -> DataFrame:
-    """Canonical elements of a (path, content) frame of XML documents; with
-    a ``summary`` accumulator, each task adds its rows' summary entries to
-    it once, when its last row is out."""
-    return binary.select("path", "content").mapInPandas(
-        lambda it: _flatten_partition(it, deterministic_ids, summary),
-        schema=ELEMENT_SCHEMA,
-    )
+def _flatten_task(
+    assigned: list[list[str]], deterministic_ids: bool, summary: Accumulator | None
+):
+    """Task side of ``flatten_xml_files``: the task given the id ``i``
+    flattens the files ``assigned[i]`` into one Arrow batch per file, and
+    adds its rows' summary entries to ``summary`` (if any) once, at its end."""
+
+    def run(ids):
+        entries: set[tuple] = set()
+        for batch in ids:
+            for i in batch.column(0).to_pylist():
+                for path in assigned[i]:
+                    with open(path, "rb") as f:
+                        rows = flatten_xml_document(f.read(), row_file(path), deterministic_ids)
+                    if rows:
+                        if summary is not None:
+                            entries |= summary_entries(rows)
+                        yield pa.RecordBatch.from_pylist(rows, schema=ELEMENT_ARROW_SCHEMA)
+        if summary is not None:
+            summary.add(entries)
+
+    return run
 
 
 def flatten_xml_files(
     spark: SparkSession,
-    path: str | Iterable[str],
+    paths: Iterable[str],
     deterministic_ids: bool = False,
+    summary: Accumulator | None = None,
 ) -> DataFrame:
-    """Distributed flatten: binaryFile scan (SURVEY A1/A5) → per-file parse
-    (A2) → canonical elements DataFrame.  Narrow map — no shuffle.
-    """
-    paths = [path] if isinstance(path, str) else list(path)
-    return flatten_frame(spark.read.format("binaryFile").load(paths), deterministic_ids)
+    """Distributed flatten of exactly the local files ``paths`` (SURVEY
+    A1/A2) → canonical elements in ``defaultParallelism`` partitions, with
+    no shuffle and no file listing: the driver deals the files out
+    (``catalog.deal_by_size``) and each task reads its own."""
+    n = spark.sparkContext.defaultParallelism
+    assigned = catalog.deal_by_size([os.path.abspath(p) for p in paths], n)
+    return spark.range(0, n, 1, n).mapInArrow(
+        _flatten_task(assigned, deterministic_ids, summary), ELEMENT_SCHEMA
+    )
 
 
 def flatten_batch(
@@ -267,8 +270,7 @@ def flatten_batch(
     hold its batch's entries for the life of the process.  The caller
     unpersists the elements."""
     summary = summary_accumulator(spark)
-    binary = spark.read.format("binaryFile").load(paths)
-    elements = flatten_frame(binary, deterministic_ids, summary).cache()
+    elements = flatten_xml_files(spark, paths, deterministic_ids, summary).cache()
     try:
         elements.write.format("noop").mode("overwrite").save()
     except BaseException:

@@ -15,7 +15,8 @@ whatever the number of tables.  Only the new rows pass through Spark's
 plan, as one projection of the batch in ``warehouse``'s flat layout —
 table tag, the 4 common columns, the value, one slot per attribute
 column.  The old rows never do: the driver lists each rewritten table's
-part files and deals them out over the job's tasks, and each task streams
+part files and deals them out, largest first, over the job's tasks
+(``catalog.deal_by_size``), and each task streams
 its old files by row group with pyarrow, drops the rows of the key set and
 writes the rest, with its new rows of the same table, as one parquet file
 into the table's staging directory.  The driver then swaps the staging
@@ -153,7 +154,8 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str, summary: BatchSummar
 
     ``summary`` is ``elements``' ``flatten.BatchSummary``: its tables,
     attribute columns and PCR keys (parity: main_ingest.py:400-403).  The
-    write job is the one Spark job, and the only read of ``elements``.
+    write job is the one Spark job, and the only read of ``elements``, in
+    one task per partition of ``elements`` (at most ``defaultParallelism``).
     """
     spark = elements.sparkSession
     incoming = summary.tables
@@ -190,24 +192,13 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str, summary: BatchSummar
         *[lower_map.getItem(c).alias(s) for c, s in slots.items()],
     )
     # the kept rows never enter the plan: the write tasks read the old part
-    # files themselves, dealt round-robin (largest first) over the job's
-    # tasks, and a batch of fewer partitions gains empty ones up to that
-    # many, so a one-file batch still rewrites the lake on every core (a
-    # shuffle would spread it too, but costs a job of its own under AQE)
-    n_tasks = spark.sparkContext.defaultParallelism
-    old_files = sorted(
-        ((t, p) for t in columns if t in existing
-         for p in catalog.part_files(os.path.join(warehouse_dir, t))),
-        key=lambda f: -os.path.getsize(f[1]),
-    )
-    assigned = [old_files[pid::n_tasks] for pid in range(n_tasks)]
-    short = n_tasks - elements.rdd.getNumPartitions()
-    if old_files and short > 0:
-        pad = spark.range(0, short, 1, short).where(F.col("id") < 0)
-        null = F.lit(None).cast("string")
-        flat = flat.union(pad.select(*[null.alias(c) for c in flat.columns]))
-    else:
-        flat = flat.coalesce(n_tasks)
+    # files themselves; ``flatten.flatten_batch`` gives a batch one partition
+    # per core, so even a one-file batch rewrites the lake on every core
+    n_tasks = min(spark.sparkContext.defaultParallelism, elements.rdd.getNumPartitions())
+    flat = flat.coalesce(n_tasks)
+    old_files = [(t, p) for t in columns if t in existing
+                 for p in catalog.part_files(os.path.join(warehouse_dir, t))]
+    assigned = catalog.deal_by_size(old_files, n_tasks, path=lambda f: f[1])
 
     layouts = {
         t: (

@@ -24,8 +24,9 @@ Spark-first redesign:
   tag, the 4 common columns, the value, one slot per attribute column — so
   both sinks move a batch in ONE Spark job: ``overwrite.overwrite_pcrs``
   (the per-tag lake, one parquet directory per table, that
-  ``bookkeeping.ingest_xml_files`` writes; only the batch's new rows go through the flat
-  layout, the write tasks copy the lake's kept rows file by file) and
+  ``bookkeeping.ingest_xml_files`` writes; only the batch's new rows go
+  through the flat layout, and the write tasks copy the lake's kept rows
+  from the part files the driver deals them) and
   ``jdbc_sink.stage_to_jdbc_distributed`` (the JDBC target's stage
   tables).
 

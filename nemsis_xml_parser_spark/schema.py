@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
 ELEMENT_SCHEMA = StructType(
     [
@@ -47,6 +48,8 @@ ELEMENT_SCHEMA = StructType(
         StructField("file", StringType(), True),
     ]
 )
+# the same rows as Arrow, for tasks that emit them as record batches
+ELEMENT_ARROW_SCHEMA = to_arrow_schema(ELEMENT_SCHEMA)
 
 FILES_PROCESSED_SCHEMA = StructType(
     [

@@ -1,12 +1,18 @@
 """End-to-end EP1 pipeline (SURVEY G3): files → warehouse → bookkeeping →
 archive/error routing → md5-skip idempotency."""
 
+import datetime as dt
 import os
+import types
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
+from nemsis_xml_parser_spark.catalog import list_table_dirs
+from nemsis_xml_parser_spark.operators import bookkeeping
 from nemsis_xml_parser_spark.operators.bookkeeping import (
+    archive_file,
     file_md5,
     files_processed_path,
     files_to_process,
@@ -219,13 +225,13 @@ def test_batch_summary_matches_spark_passes(spark, tmp_path):
 
 def test_batch_summary_survives_a_retried_fold(spark, tmp_path):
     """A retried task (or a recomputed cache partition) adds its summary
-    entries again: a partition folded twice into the accumulator gives
-    the summary of the distributed batch."""
-    import pandas as pd
+    entries again: a flatten task run twice over one assignment, folding
+    into one accumulator, gives the summary of the distributed batch."""
+    import pyarrow as pa
 
     from nemsis_xml_parser_spark.operators.flatten import (
         BatchSummary,
-        _flatten_partition,
+        _flatten_task,
         flatten_batch,
         summary_accumulator,
     )
@@ -233,20 +239,19 @@ def test_batch_summary_survives_a_retried_fold(spark, tmp_path):
     paths = _mixed_batch(tmp_path)
     elements, summary = flatten_batch(spark, paths, deterministic_ids=True)
     elements.unpersist()
-    batch = pd.DataFrame({
-        "path": ["file:" + p for p in paths],
-        "content": [open(p, "rb").read() for p in paths],
-    })
     acc = summary_accumulator(spark)
+    task = _flatten_task([paths], True, acc)
     for _ in range(2):
-        list(_flatten_partition(iter([batch]), True, acc))
+        list(task(iter([pa.record_batch({"id": [0]})])))
     assert BatchSummary.from_entries(acc.value) == summary
 
 
 def test_ingest_runs_two_spark_jobs(spark, tmp_path):
     """A batch into an existing lake runs one job that flattens, caches
     and summarizes it, and one write job: the batch's tables, attribute
-    columns, PCR keys and parsed files cost no Spark pass of their own."""
+    columns, PCR keys and parsed files cost no Spark pass of their own.
+    A batch of 40 files, above Spark's 32-path parallel-listing
+    threshold, runs no file-listing job either."""
     wh = str(tmp_path / "wh")
     ingest_xml_files(spark, [_write(tmp_path, "first.xml", NEMSIS_XML)], wh,
                      deterministic_ids=True)
@@ -263,6 +268,61 @@ def test_ingest_runs_two_spark_jobs(spark, tmp_path):
     rec = spark.read.parquet(os.path.join(wh, "erecord_01"))
     assert sorted(r["erecord_01_value"] for r in rec.collect()) == [
         "rec-1", "rec-1-v2", "rec-2", "rec-2"]
+
+    forty = [_write(tmp_path, f"more{i}.xml", NEMSIS_XML.replace("6e5d2c1a-", f"{i:08d}-"))
+             for i in range(40)]
+    before = max(tracker.getJobIdsForGroup(None))
+    statuses = ingest_xml_files(spark, forty, wh, deterministic_ids=True)
+    assert max(tracker.getJobIdsForGroup(None)) - before <= 2
+    assert set(statuses.values()) == {STATUS_OK}
+    assert spark.read.parquet(os.path.join(wh, "erecord_01")).count() == 4 + 2 * 40
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["q?.xml", "run[1].xml", "set{a,b}.xml", "2024-01-01T10:00:00.xml"],
+    ids=["glob-wildcard", "glob-brackets", "glob-braces", "colons"],
+)
+def test_batch_reads_exactly_its_named_files(spark, tmp_path, name):
+    """A batch reads the files it names, whatever characters their names
+    hold: a name is neither a glob pattern nor a URI, so a file next to it
+    that the name would match as a glob is not read."""
+    wh = str(tmp_path / "wh")
+    good = _write(tmp_path, "good.xml", NEMSIS_XML)
+    odd = _write(tmp_path, name, NEMSIS_XML.replace("6e5d2c1a-", "7e5d2c1a-"))
+    # "q?.xml" would match it as a glob; no batch names it
+    _write(tmp_path, "qa.xml", NEMSIS_XML.replace("6e5d2c1a-", "9e5d2c1a-"))
+
+    statuses = ingest_xml_files(spark, [good, odd], wh, deterministic_ids=True)
+    assert statuses == {good: STATUS_OK, odd: STATUS_OK}
+    pcrs = set()
+    for t in list_table_dirs(wh):
+        pcrs |= set(pq.read_table(os.path.join(wh, t), columns=["pcr_uuid_context"])
+                    .column(0).to_pylist())
+    assert pcrs - {None} == {f"{p}5d2c1a-0000-4000-8000-00000000000{i}"
+                             for p in ("6e", "7e") for i in (1, 2)}
+    log = [r["original_file_name"] for r in read_files_processed(spark, wh).collect()]
+    assert sorted(log) == sorted(["good.xml", name])
+
+
+def test_archive_never_replaces_an_archived_file(tmp_path, monkeypatch):
+    """Files of one name from several directories, archived in the same
+    second, each keep a file of their own in the archive."""
+    class _Frozen(dt.datetime):
+        @classmethod
+        def now(cls, tz=None):
+            return cls(2024, 1, 1, 10, 0, 0, tzinfo=tz)
+
+    monkeypatch.setattr(bookkeeping, "dt", types.SimpleNamespace(
+        datetime=_Frozen, timezone=dt.timezone))
+    archive = str(tmp_path / "archive")
+    for d in "abc":
+        (tmp_path / d).mkdir()
+        archive_file(_write(tmp_path / d, "export.xml", d), archive)
+    assert sorted(os.listdir(archive)) == [
+        "export.xml", "export_20240101100000.xml", "export_20240101100000_1.xml"]
+    assert sorted(open(os.path.join(archive, f)).read() for f in os.listdir(archive)) == [
+        "a", "b", "c"]
 
 
 @pytest.mark.parametrize(

@@ -275,9 +275,10 @@ def test_batch_without_keys_rewrites_only_its_own_tables(spark, tmp_path):
 
 
 def test_one_file_batch_spreads_old_files_over_all_tasks(spark, tmp_path):
-    """The write tasks read the lake's old part files themselves, so a
-    one-file batch (one partition) still rewrites the lake in
-    defaultParallelism tasks, not in one."""
+    """The write tasks read the lake's old part files themselves, and a
+    batch has one partition per core however few files it holds, so a
+    one-file batch still rewrites the lake in defaultParallelism tasks,
+    not in one."""
     lake = str(tmp_path / "lake")
     n = spark.sparkContext.defaultParallelism
     tags = ["x0", "x1", "x2"]
@@ -288,7 +289,7 @@ def test_one_file_batch_spreads_old_files_over_all_tasks(spark, tmp_path):
     path = tmp_path / "b.xml"
     path.write_text(f"<r>{_report('P0', tags, 2)}</r>")
     batch, summary = flatten_batch(spark, [str(path)], deterministic_ids=True)
-    assert batch.rdd.getNumPartitions() == 1
+    assert batch.rdd.getNumPartitions() == n
     tracker = spark.sparkContext.statusTracker()
     before = max(tracker.getJobIdsForGroup(None))
     overwrite_pcrs(batch, lake, summary)

@@ -46,7 +46,8 @@ def test_stream_microbatches_are_ingest_batches(spark, tmp_path):
     """Each microbatch is one ``ingest_xml_files`` batch: every file gets a
     status in the ``_files_processed`` log, a malformed file is logged as
     failed, a byte-identical copy in a later microbatch is skipped by MD5,
-    a name with '#' ingests, and a corrected version replaces its PCR."""
+    names with '#' or '[1]' ingest, and a corrected version replaces its
+    PCR."""
     watch = tmp_path / "drop"
     watch.mkdir()
     wh = str(tmp_path / "wh")
@@ -55,6 +56,7 @@ def test_stream_microbatches_are_ingest_batches(spark, tmp_path):
     (watch / "good.xml").write_text(NEMSIS_XML)
     (watch / "bad.xml").write_text("<open><unclosed>")
     (watch / "hash#1.xml").write_text(other)
+    (watch / "run[1].xml").write_text(NEMSIS_XML.replace("6e5d2c1a-", "8e5d2c1a-"))
     start_warehouse_stream(spark, str(watch), wh, ckpt, deterministic_ids=True
                            ).awaitTermination(120)
 
@@ -66,12 +68,14 @@ def test_stream_microbatches_are_ingest_batches(spark, tmp_path):
     log = {r["original_file_name"]: r["status"]
            for r in read_files_processed(spark, wh).collect()}
     assert log == {"good.xml": STATUS_OK, "bad.xml": STATUS_ERROR_PARSE,
-                   "hash#1.xml": STATUS_OK, "copy.xml": STATUS_SKIPPED,
+                   "hash#1.xml": STATUS_OK, "run[1].xml": STATUS_OK,
+                   "copy.xml": STATUS_SKIPPED,
                    "fixed.xml": STATUS_OK}
     v10 = {(r["pcr_uuid_context"], r["evitals_10_value"])
            for r in spark.read.parquet(os.path.join(wh, "evitals_10")).collect()}
     assert v10 == {("6e5d2c1a-0000-4000-8000-000000000001", "99"),
-                   ("7e5d2c1a-0000-4000-8000-000000000001", "98")}
+                   ("7e5d2c1a-0000-4000-8000-000000000001", "98"),
+                  ("8e5d2c1a-0000-4000-8000-000000000001", "98")}
 
 
 def _event_stream(spark, tmp_path):

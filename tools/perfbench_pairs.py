@@ -13,8 +13,9 @@ existing directory holding the parent's files.
 For every end-to-end metric of ``BENCHMARK.json`` it prints the pairs the
 change won, both medians, the parent's interquartile range and the median
 change relative to the metric's bound.  A pair in which either run failed
-or was incorrect counts as a loss.  A speed claim holds when at least 9 of
-at least 10 pairs are won and the medians differ by more than the parent's
+or was incorrect counts as a loss, and a tie is no win.  A speed claim
+holds when at least 10 pairs ran, the change won at least nine tenths of
+all of them, and the medians differ by more than the parent's
 interquartile range.  The last stdout line is the summary as JSON.
 """
 
@@ -77,7 +78,7 @@ def summarize(pairs: list[dict], metrics: list[dict]) -> dict:
             "parent_iqr": iqr(par),
             "worse_by": round(worse, 4),
             "within_bound": worse <= m["bound"],
-            "claim_holds": len(pairs) >= 10 and wins >= 9
+            "claim_holds": len(pairs) >= 10 and 10 * wins >= 9 * len(pairs)
             and abs(mc - mp) > iqr(par),
         }
     return out
