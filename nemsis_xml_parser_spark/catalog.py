@@ -5,6 +5,12 @@ The reference probes PostgreSQL's information_schema per table
 equivalent lists the table directories and reads one parquet footer per
 table with pyarrow on the driver, so no catalog question costs a Spark
 job.  The catalog join of SURVEY A9/F4 is ``tables_with_column``.
+
+The catalog also names the lake's scratch directories (``SCRATCH_SUFFIXES``):
+a rewrite's staging copy of a table, a table parked aside while its
+rewrite is swapped in, and the spool of Arrow files that holds a batch's
+flattened rows between ingest's two Spark jobs.  No table listing shows
+them, and each batch starts by cleaning up what a crashed one left.
 """
 
 from __future__ import annotations
@@ -18,23 +24,37 @@ import pyarrow.parquet as pq
 
 BOOKKEEPING_PREFIX = "_"
 
-# Scratch-directory suffixes of the rewrite paths: the PCR-scoped overwrite
-# writes ``{table}__staging``, the structural migration ``{table}__migrating``.
-# A crash between scratch write and swap must not leave a directory that
-# later scans mistake for a real dynamic table.
+# Scratch-directory suffixes.  The PCR-scoped overwrite writes
+# ``{table}__staging`` and the structural migration ``{table}__migrating``;
+# a swap parks the live table as ``{table}__old`` until its replacement is
+# in place; ingest spools a batch's flattened rows into ``SPOOL_DIR``.  A
+# crash must not leave a directory that later scans mistake for a real
+# dynamic table, and the next batch's ``clean_scratch_dirs`` removes them.
 STAGING_SUFFIX = "__staging"
 MIGRATING_SUFFIX = "__migrating"
-SCRATCH_SUFFIXES = (STAGING_SUFFIX, MIGRATING_SUFFIX)
+OLD_SUFFIX = "__old"
+SPOOL_SUFFIX = "__spool"
+SCRATCH_SUFFIXES = (STAGING_SUFFIX, MIGRATING_SUFFIX, OLD_SUFFIX, SPOOL_SUFFIX)
+SPOOL_DIR = BOOKKEEPING_PREFIX + "batch" + SPOOL_SUFFIX
 
 
 def swap_in_scratch_dir(path: str, scratch_suffix: str) -> None:
     """Replace the table directory ``path`` (if any) with its fully written
     scratch directory ``path + scratch_suffix``.  Rewrites that read
     ``path`` itself cannot write it in place, so they write the scratch
-    directory first and call this once the write has finished."""
+    directory first and call this once the write has finished.
+
+    The live directory is renamed aside to ``path + OLD_SUFFIX`` and
+    deleted only after the scratch directory took its name, so a crash at
+    any step leaves a full copy of the table: ``clean_scratch_dirs`` puts a
+    parked directory back when ``path`` is missing."""
+    old = path + OLD_SUFFIX
     if os.path.isdir(path):
-        shutil.rmtree(path)
+        # a parked copy next to a live table is a leftover, not the table
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(path, old)
     os.rename(path + scratch_suffix, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def is_table_dir(name: str) -> bool:
@@ -51,17 +71,20 @@ def list_table_dirs(warehouse_dir: str) -> list[str]:
     return sorted(d for d in os.listdir(warehouse_dir) if is_table_dir(d))
 
 
-def clean_scratch_dirs(warehouse_dir: str) -> list[str]:
-    """Remove leftover scratch directories (``SCRATCH_SUFFIXES``) of a
-    crashed rewrite (the subsequent re-ingest regenerates them).  Returns the
-    removed names."""
-    removed = []
-    if os.path.isdir(warehouse_dir):
-        for d in os.listdir(warehouse_dir):
-            if d.endswith(SCRATCH_SUFFIXES):
-                shutil.rmtree(os.path.join(warehouse_dir, d), ignore_errors=True)
-                removed.append(d)
-    return removed
+def clean_scratch_dirs(warehouse_dir: str) -> None:
+    """Undo what a crashed batch left: a table parked by an interrupted
+    ``swap_in_scratch_dir`` (``{table}__old`` without ``{table}``) is
+    renamed back, then every scratch directory (``SCRATCH_SUFFIXES``) is
+    removed (the re-ingest regenerates them)."""
+    if not os.path.isdir(warehouse_dir):
+        return
+    for d in os.listdir(warehouse_dir):
+        live = os.path.join(warehouse_dir, d.removesuffix(OLD_SUFFIX))
+        if d.endswith(OLD_SUFFIX) and not os.path.exists(live):
+            os.rename(os.path.join(warehouse_dir, d), live)
+    for d in os.listdir(warehouse_dir):
+        if d.endswith(SCRATCH_SUFFIXES):
+            shutil.rmtree(os.path.join(warehouse_dir, d), ignore_errors=True)
 
 
 def part_files(table_dir: str) -> list[str]:

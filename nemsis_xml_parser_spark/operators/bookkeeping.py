@@ -30,7 +30,6 @@ import uuid
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -43,7 +42,7 @@ from ..schema import (
     STATUS_OK,
     STATUS_SKIPPED,
 )
-from .flatten import BatchSummary, flatten_batch, row_file
+from .flatten import BatchSummary, row_file, spool_xml_files
 from .overwrite import overwrite_pcrs
 
 
@@ -135,23 +134,16 @@ def archive_file(path: str, archive_dir: str) -> str:
     return dest
 
 
-def last_version_only(
-    elements: DataFrame, summary: BatchSummary, order: list[str]
-) -> DataFrame:
-    """``elements`` without the rows of a PCR that a later file of ``order``
-    (the batch's paths, in the caller's order) also carries: each PCR keeps
-    the rows of its last file, as when the files are ingested one at a
-    time.  Rows with a NULL PCR are kept.  Without such a PCR, ``elements``
-    itself."""
+def last_versions(summary: BatchSummary, order: list[str]) -> dict[str, str]:
+    """The owner file of each PCR that several files of ``order`` (the
+    batch's paths, in the caller's order) carry: the last of them, so each
+    PCR keeps the rows of its last file, as when the files are ingested
+    one at a time (``overwrite.overwrite_pcrs`` drops the others)."""
     rank = {row_file(p): i for i, p in enumerate(order)}
-    last = {
+    return {
         k: max(files, key=rank.__getitem__)
         for k, files in summary.key_files.items() if len(files) > 1
     }
-    if not last:
-        return elements
-    owner = F.create_map(*[F.lit(x) for kv in sorted(last.items()) for x in kv])
-    return elements.where(F.coalesce(owner[F.col("pcr_uuid")] == F.col("file"), F.lit(True)))
 
 
 def ingest_xml_files(
@@ -164,20 +156,26 @@ def ingest_xml_files(
 ) -> dict[str, str]:
     """EP1 pipeline (SURVEY G3) over a batch of XML files:
 
-    md5-skip → flatten → PCR-scoped overwrite of the per-tag lake
-    (``overwrite.overwrite_pcrs``) → bookkeeping log → archive/error
-    routing.  Returns {file: status}.  It is the one ingest path: the CLI
-    calls it per batch, and the watched-directory stream
-    (``streaming.ingest.start_warehouse_stream``) per microbatch.
+    scratch clean-up → md5-skip → flatten into the spool → PCR-scoped
+    overwrite of the per-tag lake (``overwrite.overwrite_pcrs``) →
+    bookkeeping log → archive/error routing.  Returns {file: status}.  It
+    is the one ingest path: the CLI calls it per batch, and the
+    watched-directory stream (``streaming.ingest.start_warehouse_stream``)
+    per microbatch.
 
     Unlike the reference's file-at-a-time loop, the whole batch flattens in
-    ONE distributed pass, which caches the elements and folds the batch
-    summary (``flatten.flatten_batch``): its tasks read exactly the batch's
-    files, by path, so a name is never a glob or a URI.  The overwrite's
-    write is the only other Spark job.  The batch ends as the
+    ONE distributed pass, which writes the batch's rows as Arrow files
+    into the lake's spool directory (``catalog.SPOOL_DIR``) and folds the
+    batch summary (``flatten.spool_xml_files``): its tasks read exactly the
+    batch's files, by path, so a name is never a glob or a URI.  The
+    overwrite's write, which reads the spool, is the only other Spark job,
+    and no row of the batch enters the JVM.  The spool is deleted when the
+    batch ends, failed or not; scratch directories a killed batch left
+    behind, the spool among them, are cleaned up first
+    (``catalog.clean_scratch_dirs``).  The batch ends as the
     file-at-a-time loop would: a byte-identical copy of an earlier file is
     skipped, and a PCR that several files carry keeps only the last one's
-    rows (``last_version_only``).  Per-file statuses come from the
+    rows (``last_versions``).  Per-file statuses come from the
     summary's files: files that parse to zero elements get
     Error_Parsing_Empty and error-dir routing (parity:
     main_ingest.py:386-397); routing never moves a file over one already
@@ -185,16 +183,19 @@ def ingest_xml_files(
     ones too, gets its status and MD5 in the log, as each file does in the
     reference (main_ingest.py:648-688).
     """
+    catalog.clean_scratch_dirs(warehouse_dir)
     todo, skipped = files_to_process(warehouse_dir, file_paths)
     records = [(p, md5, STATUS_SKIPPED) for p, md5 in skipped.items()]
     for p in [p for p in todo if not os.path.exists(p)]:
         records.append((p, todo.pop(p), STATUS_ERROR_NOT_FOUND))
     if todo:
-        elements, summary = flatten_batch(spark, list(todo), deterministic_ids=deterministic_ids)
+        spool = os.path.join(warehouse_dir, catalog.SPOOL_DIR)
         try:
-            overwrite_pcrs(last_version_only(elements, summary, list(todo)), warehouse_dir, summary)
+            spooled, summary = spool_xml_files(spark, list(todo), spool, deterministic_ids)
+            overwrite_pcrs(spark, spooled, warehouse_dir, summary,
+                           last_versions(summary, list(todo)))
         finally:
-            elements.unpersist()
+            shutil.rmtree(spool, ignore_errors=True)
         records += [
             (p, md5, STATUS_OK if row_file(p) in summary.files else STATUS_ERROR_PARSE)
             for p, md5 in todo.items()

@@ -1,12 +1,17 @@
-"""Recursive XML tree flatten → canonical elements DataFrame.
+"""Recursive XML tree flatten → canonical element rows.
 
 Reference behavior: ``_traverse_element_recursive``
 (/root/reference/xml_handler.py:22-115) + ``parse_xml_file``
 (/root/reference/xml_handler.py:118-141).  Spark SQL has no unbounded
-recursion, so the flatten runs inside ``mapInArrow``: the driver deals the
-batch's files out over the tasks, and each task reads its own files by
-path, parses them and emits fixed-schema element rows; everything
-downstream is pure Catalyst.
+recursion, so the flatten runs inside ``mapInArrow`` over
+``spark.range``: the driver deals the batch's files out over the tasks,
+and each task reads its own files by path and parses them.  Ingest
+spools each task's rows to one Arrow IPC file (``spool_xml_files``), which
+the lake's write tasks read back, so a batch's rows stay in Arrow from
+parse to parquet and never enter the JVM — the reference, too, holds a
+file's elements as one in-memory list from parse to insert.
+``flatten_xml_files`` returns the same rows as a DataFrame, for callers
+that query them with Spark.
 
 Scale design: no file source lists, globs or URI-parses the paths, and no
 file's bytes pass through the JVM; a corpus parallelizes per file with no
@@ -27,11 +32,11 @@ Semantics parity checklist (tests/test_flatten.py):
 Batch summary: the reference learns a file's tables, columns and PCR keys
 as it walks the XML, one catalog probe per element (main_ingest.py:252-271,
 400-403).  Here the flatten tasks fold the same facts from the rows they
-emit (``summary_entries``) into one set-valued accumulator while the batch
-cache materializes (``flatten_batch``), so the sinks need no further Spark
-pass to learn them.  Each PCR key is folded with its file, so ingest can
-tell a PCR that several files of the batch carry.  A task retry or a cache
-recompute adds the same entries again, which a set union absorbs.
+emit (``summary_entries``) into one set-valued accumulator while they
+write the spool (``spool_xml_files``), so the lake's write needs no
+further Spark pass to learn them.  Each PCR key is folded with its file,
+so ingest can tell a PCR that several files of the batch carry.  A task
+retry adds the same entries again, which a set union absorbs.
 """
 
 from __future__ import annotations
@@ -53,6 +58,13 @@ from .. import catalog
 from ..naming import sanitize_name, strip_namespace
 from ..schema import ELEMENT_ARROW_SCHEMA, ELEMENT_SCHEMA
 from .warehouse import attribute_columns
+
+# the element columns a spool file keeps: those the lake's write reads
+SPOOL_SCHEMA = pa.schema([
+    ELEMENT_ARROW_SCHEMA.field(c)
+    for c in ("table_name", "element_id", "parent_element_id", "pcr_uuid",
+              "element_tag", "value", "attributes", "file")
+])
 
 # tags of the summary entries: a file parsed, a table, a (table, attribute)
 # pair and a (PCR key, file) pair
@@ -219,35 +231,30 @@ def row_file(path: str) -> str:
     return "file:" + os.path.abspath(path)
 
 
-def _flatten_task(
-    assigned: list[list[str]], deterministic_ids: bool, summary: Accumulator | None
-):
+def _flattened(paths: list[str], deterministic_ids: bool):
+    """The element rows of each of ``paths`` that parses to any."""
+    for path in paths:
+        with open(path, "rb") as f:
+            rows = flatten_xml_document(f.read(), row_file(path), deterministic_ids)
+        if rows:
+            yield rows
+
+
+def _flatten_task(assigned: list[list[str]], deterministic_ids: bool):
     """Task side of ``flatten_xml_files``: the task given the id ``i``
-    flattens the files ``assigned[i]`` into one Arrow batch per file, and
-    adds its rows' summary entries to ``summary`` (if any) once, at its end."""
+    flattens the files ``assigned[i]`` into one Arrow batch per file."""
 
     def run(ids):
-        entries: set[tuple] = set()
         for batch in ids:
             for i in batch.column(0).to_pylist():
-                for path in assigned[i]:
-                    with open(path, "rb") as f:
-                        rows = flatten_xml_document(f.read(), row_file(path), deterministic_ids)
-                    if rows:
-                        if summary is not None:
-                            entries |= summary_entries(rows)
-                        yield pa.RecordBatch.from_pylist(rows, schema=ELEMENT_ARROW_SCHEMA)
-        if summary is not None:
-            summary.add(entries)
+                for rows in _flattened(assigned[i], deterministic_ids):
+                    yield pa.RecordBatch.from_pylist(rows, schema=ELEMENT_ARROW_SCHEMA)
 
     return run
 
 
 def flatten_xml_files(
-    spark: SparkSession,
-    paths: Iterable[str],
-    deterministic_ids: bool = False,
-    summary: Accumulator | None = None,
+    spark: SparkSession, paths: Iterable[str], deterministic_ids: bool = False
 ) -> DataFrame:
     """Distributed flatten of exactly the local files ``paths`` (SURVEY
     A1/A2) → canonical elements in ``defaultParallelism`` partitions, with
@@ -256,29 +263,69 @@ def flatten_xml_files(
     n = spark.sparkContext.defaultParallelism
     assigned = catalog.deal_by_size([os.path.abspath(p) for p in paths], n)
     return spark.range(0, n, 1, n).mapInArrow(
-        _flatten_task(assigned, deterministic_ids, summary), ELEMENT_SCHEMA
+        _flatten_task(assigned, deterministic_ids), ELEMENT_SCHEMA
     )
 
 
-def flatten_batch(
-    spark: SparkSession, paths: list[str], deterministic_ids: bool = False
-) -> tuple[DataFrame, BatchSummary]:
-    """Flatten ``paths`` into cached canonical elements and the batch's
-    summary, in ONE Spark job that materializes the cache while its tasks
-    fold the summary.  The accumulator is emptied once read: PySpark's
-    driver keeps every accumulator it made, so a read one would otherwise
-    hold its batch's entries for the life of the process.  The caller
-    unpersists the elements."""
+def spool_file_name(task: int) -> str:
+    return f"part-{task:05d}.arrow"
+
+
+def _spool_task(
+    assigned: list[list[str]], deterministic_ids: bool, spool_dir: str, summary: Accumulator
+):
+    """Task side of ``spool_xml_files``: the task given the id ``i``
+    flattens the files ``assigned[i]`` into ONE Arrow IPC file
+    ``spool_file_name(i)`` of ``spool_dir`` (one record batch per file,
+    ``SPOOL_SCHEMA``), written under a hidden temp name and renamed into
+    place, so a retried task replaces its own file.  It adds its rows'
+    summary entries to ``summary`` once, at its end, and yields the file's
+    path, if it wrote one."""
+
+    def run(ids):
+        entries: set[tuple] = set()
+        for batch in ids:
+            for i in batch.column(0).to_pylist():
+                name = spool_file_name(i)
+                tmp = os.path.join(spool_dir, f".{name}-{uuid.uuid4().hex}.tmp")
+                writer = None
+                for rows in _flattened(assigned[i], deterministic_ids):
+                    entries |= summary_entries(rows)
+                    if writer is None:
+                        writer = pa.ipc.new_file(tmp, SPOOL_SCHEMA)
+                    writer.write_batch(pa.RecordBatch.from_pylist(rows, schema=SPOOL_SCHEMA))
+                if writer is not None:
+                    writer.close()
+                    os.replace(tmp, os.path.join(spool_dir, name))
+                    yield pa.RecordBatch.from_pydict({"path": [os.path.join(spool_dir, name)]})
+        summary.add(entries)
+
+    return run
+
+
+def spool_xml_files(
+    spark: SparkSession, paths: list[str], spool_dir: str, deterministic_ids: bool = False
+) -> tuple[list[str], BatchSummary]:
+    """Flatten ``paths`` into Arrow IPC spool files under ``spool_dir``
+    (made if absent) and the batch's summary, in ONE Spark job of
+    ``defaultParallelism`` tasks that each read the files the driver deals
+    them (``catalog.deal_by_size``).  Only the spool files' paths come back
+    through Spark: no element row enters the JVM.  Returns the spool files,
+    sorted, and the summary.  The accumulator is emptied once read:
+    PySpark's driver keeps every accumulator it made, so a read one would
+    otherwise hold its batch's entries for the life of the process."""
+    n = spark.sparkContext.defaultParallelism
+    assigned = catalog.deal_by_size([os.path.abspath(p) for p in paths], n)
+    os.makedirs(spool_dir, exist_ok=True)
     summary = summary_accumulator(spark)
-    elements = flatten_xml_files(spark, paths, deterministic_ids, summary).cache()
     try:
-        elements.write.format("noop").mode("overwrite").save()
-    except BaseException:
-        elements.unpersist()
-        raise
+        spooled = spark.range(0, n, 1, n).mapInArrow(
+            _spool_task(assigned, deterministic_ids, os.path.abspath(spool_dir), summary),
+            "path string",
+        ).collect()
     finally:
         entries, summary.value = summary.value, set()
-    return elements, BatchSummary.from_entries(entries)
+    return sorted(r["path"] for r in spooled), BatchSummary.from_entries(entries)
 
 
 def flatten_xml_strings(

@@ -11,27 +11,28 @@ set of the whole batch, file by file:
     kept = old rows whose PCR is not in keys ;  result = kept ∪ new
 
 and every table's result goes out in ONE Spark write job per batch,
-whatever the number of tables.  Only the new rows pass through Spark's
-plan, as one projection of the batch in ``warehouse``'s flat layout —
-table tag, the 4 common columns, the value, one slot per attribute
-column.  The old rows never do: the driver lists each rewritten table's
-part files and deals them out, largest first, over the job's tasks
-(``catalog.deal_by_size``), and each task streams
-its old files by row group with pyarrow, drops the rows of the key set and
-writes the rest, with its new rows of the same table, as one parquet file
-into the table's staging directory.  The driver then swaps the staging
-directories in (``catalog.swap_in_scratch_dir``).  Per-tag jobs would cost
-a scheduler round-trip per table, and NEMSIS has hundreds of tags.
+whatever the number of tables.  No row passes through Spark's plan: the
+job runs over ``spark.range``, and the driver deals each task its share
+of the batch's spool files (``flatten.spool_xml_files``) and of each
+rewritten table's part files, largest first (``catalog.deal_by_size``).
+Each task pivots its spooled rows with pyarrow into ``warehouse``'s flat
+layout (``pivot``: table tag, the 4 common columns, the value, one slot
+per attribute column), streams its old files by row group, drops the rows
+of the key set and writes the rest, with its new rows of the same table,
+as one parquet file into the table's staging directory.  The driver then
+swaps the staging directories in (``catalog.swap_in_scratch_dir``).
+Per-tag jobs would cost a scheduler round-trip per table, and NEMSIS has
+hundreds of tags.
 
 ``overwrite_pcrs`` is the one place the lake applies this rule; its one
 caller is ``bookkeeping.ingest_xml_files``, which CLI batches and each
 microbatch of ``streaming.ingest.start_warehouse_stream`` run.  The batch's
 tables, attribute columns and key set come from the summary the flatten
-tasks folded while the batch cache materialized
-(``flatten.BatchSummary``), so the write job is the only Spark job here.  On
-Delta/Iceberg this function becomes ``MERGE``/``replaceWhere``.  Tasks read
-and write with plain file-system calls, so the lake must be a path every
-executor sees (local or a shared mount).
+tasks folded while they wrote the spool (``flatten.BatchSummary``), so the
+write job is the only Spark job here.  On Delta/Iceberg this function
+becomes ``MERGE``/``replaceWhere``.  Tasks read and write with plain
+file-system calls, so the lake must be a path every executor sees (local
+or a shared mount).
 """
 
 from __future__ import annotations
@@ -40,12 +41,11 @@ import os
 import uuid
 from collections import Counter
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-import pyspark.sql.functions as F
-from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import SparkSession
 
 from .. import catalog
 from ..naming import COMMON_COLUMNS, value_column_name
@@ -124,22 +124,99 @@ def write_partition(
     return sorted(rows.items())
 
 
-def _write_task(layouts, assigned, keys):
-    def run(batches):
-        pid = TaskContext.get().partitionId()
-        written = write_partition(batches, layouts, pid, assigned[pid], keys)
-        yield pa.RecordBatch.from_pylist(
-            [{"table": t, "rows": n} for t, n in written],
-            schema=pa.schema([("table", pa.string()), ("rows", pa.int64())]),
-        )
+def _lowered(strings: pa.Array) -> pa.Array:
+    """``strings`` lowercased by ``str.lower``, the rule of the batch
+    summary's names, applied once per distinct string."""
+    distinct = pc.unique(strings)
+    lowered = pa.array([x.lower() for x in distinct.to_pylist()], pa.string())
+    return pc.take(lowered, pc.index_in(strings, value_set=distinct))
+
+
+def pivot(spooled: pa.RecordBatch, slots: dict[str, str], owners: dict[str, str]) -> pa.RecordBatch:
+    """Spool rows (``flatten.SPOOL_SCHEMA``) in ``warehouse``'s flat
+    layout: the lowercased table tag, the 4 common columns, the value and
+    one slot per attribute column of ``slots``, holding the value of the
+    row's attribute whose lowercased key is that column.  When several
+    keys of a row lower to one column, the later key wins, as in the
+    reference's row dict (main_ingest.py:466-476).  A row whose PCR is a
+    key of ``owners`` is dropped unless its file is that PCR's owner."""
+    if owners:
+        at = pc.index_in(spooled.column("pcr_uuid"), value_set=pa.array(list(owners)))
+        owner = pc.take(pa.array(list(owners.values()), pa.string()), at)
+        spooled = spooled.filter(pc.fill_null(pc.equal(spooled.column("file"), owner), True))
+    n = spooled.num_rows
+    attributes = spooled.column("attributes")
+    # a map's entries are offsets[i]:offsets[i + 1] of its flattened keys
+    # and items, whatever slice of them the array is
+    offsets = attributes.offsets.to_numpy()
+    first, count = int(offsets[0]), int(offsets[-1] - offsets[0])
+    items = attributes.items.slice(first, count)
+    slot = pc.index_in(_lowered(attributes.keys.slice(first, count)),
+                       value_set=pa.array(list(slots), pa.string()))
+    slot = pc.fill_null(slot, -1).to_numpy()
+    entry = np.flatnonzero(slot >= 0)
+    # each entry's (slot, row) cell; a stable sort keeps a cell's entries
+    # in document order, so the last of each run is the later key
+    cell = slot[entry].astype(np.int64) * n + np.repeat(np.arange(n), np.diff(offsets))[entry]
+    order = np.argsort(cell, kind="stable")
+    cell, entry = cell[order], entry[order]
+    last = np.ones(len(cell), dtype=bool)
+    last[:-1] = cell[1:] != cell[:-1]
+    cell, entry = cell[last], entry[last]
+    bounds = np.searchsorted(cell, np.arange(len(slots) + 1) * n)
+    columns = [
+        _lowered(spooled.column("table_name")),
+        spooled.column("element_id"),
+        spooled.column("parent_element_id"),
+        spooled.column("pcr_uuid"),
+        spooled.column("element_tag"),
+        spooled.column("value"),
+    ]
+    for k in range(len(slots)):
+        # the cells are unique now: each row gets at most one entry
+        at = np.full(n, -1, dtype=np.int64)
+        at[cell[bounds[k]:bounds[k + 1]] - k * n] = entry[bounds[k]:bounds[k + 1]]
+        columns.append(pc.take(items, pa.array(at, mask=at < 0)))
+    return pa.RecordBatch.from_arrays(
+        columns, names=[TABLE, *COMMON_COLUMNS, VALUE, *slots.values()]
+    )
+
+
+def _spooled(path: str):
+    """The record batches of one spool file."""
+    reader = pa.ipc.open_file(pa.memory_map(path))
+    for i in range(reader.num_record_batches):
+        yield reader.get_batch(i)
+
+
+def _write_task(layouts, old_files, spool_files, slots, owners, keys):
+    """Task side of the write job: the task given the id ``i`` pivots the
+    rows of its spool files ``spool_files[i]`` and writes them, with the
+    kept rows of ``old_files[i]``, as part file ``i`` of each table."""
+
+    def run(ids):
+        for batch in ids:
+            for i in batch.column(0).to_pylist():
+                new = (pivot(b, slots, owners) for p in spool_files[i] for b in _spooled(p))
+                written = write_partition(new, layouts, i, old_files[i], keys)
+                yield pa.RecordBatch.from_pylist(
+                    [{"table": t, "rows": n} for t, n in written],
+                    schema=pa.schema([("table", pa.string()), ("rows", pa.int64())]),
+                )
 
     return run
 
 
-def overwrite_pcrs(elements: DataFrame, warehouse_dir: str, summary: BatchSummary) -> None:
-    """Apply one batch of canonical elements to the per-tag lake under
-    ``warehouse_dir``: every existing table loses the rows of every PCR in
-    the batch, then each table gains its new rows — in one Spark write job.
+def overwrite_pcrs(
+    spark: SparkSession,
+    spool_files: list[str],
+    warehouse_dir: str,
+    summary: BatchSummary,
+    owners: dict[str, str],
+) -> None:
+    """Apply one spooled batch to the per-tag lake under ``warehouse_dir``:
+    every existing table loses the rows of every PCR in the batch, then
+    each table gains its new rows — in one Spark write job.
 
     The key set is the whole batch's, not each table's own: a correction
     that drops a repeating group still deletes that PCR's old rows from the
@@ -152,17 +229,14 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str, summary: BatchSummar
     end; a new table gets ``warehouse.table_frame``'s columns.  Every
     column is a string.
 
-    ``summary`` is ``elements``' ``flatten.BatchSummary``: its tables,
-    attribute columns and PCR keys (parity: main_ingest.py:400-403).  The
-    write job is the one Spark job, and the only read of ``elements``, in
-    one task per partition of ``elements`` (at most ``defaultParallelism``).
+    ``spool_files`` and ``summary`` are what ``flatten.spool_xml_files``
+    returned: the batch's rows, and its tables, attribute columns and PCR
+    keys (parity: main_ingest.py:400-403).  ``owners`` maps a PCR that
+    several files of the batch carry to the one file whose rows it keeps.
+    The write job is the one Spark job, in ``defaultParallelism`` tasks.
     """
-    spark = elements.sparkSession
     incoming = summary.tables
     attr_map = summary.attributes
-    # drop crashed-rewrite leftovers first so a staging dir is never
-    # treated as a real dynamic table, then list survivors
-    catalog.clean_scratch_dirs(warehouse_dir)
     existing = catalog.list_table_dirs(warehouse_dir)
     keys = summary.keys if existing else []
     rewritten = set(incoming) | (set(existing) if keys else set())
@@ -179,27 +253,15 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str, summary: BatchSummar
         new = list(COMMON_COLUMNS) + [value_column_name(t)] + attr_map.get(t, [])
         columns[t] = old + [c for c in new if c not in old]
 
-    # the batch's new rows, one projection for all the tables it writes
-    slots = warehouse.flat_slots({t: columns[t] for t in incoming})
-    lower_map = warehouse.lowered_attributes()
-    flat = elements.select(
-        F.lower(F.col("table_name")).alias(TABLE),
-        F.col("element_id"),
-        F.col("parent_element_id"),
-        F.col("pcr_uuid").alias(PCR),
-        F.col("element_tag").alias("original_tag_name"),
-        F.col("value").alias(VALUE),
-        *[lower_map.getItem(c).alias(s) for c, s in slots.items()],
-    )
-    # the kept rows never enter the plan: the write tasks read the old part
-    # files themselves; ``flatten.flatten_batch`` gives a batch one partition
-    # per core, so even a one-file batch rewrites the lake on every core
-    n_tasks = min(spark.sparkContext.defaultParallelism, elements.rdd.getNumPartitions())
-    flat = flat.coalesce(n_tasks)
+    # the tasks deal out the old part files and the spool files alike, so
+    # even a one-file batch rewrites the lake on every core
+    n_tasks = spark.sparkContext.defaultParallelism
     old_files = [(t, p) for t in columns if t in existing
                  for p in catalog.part_files(os.path.join(warehouse_dir, t))]
     assigned = catalog.deal_by_size(old_files, n_tasks, path=lambda f: f[1])
+    spooled = catalog.deal_by_size(spool_files, n_tasks)
 
+    slots = warehouse.flat_slots({t: columns[t] for t in incoming})
     layouts = {
         t: (
             os.path.join(warehouse_dir, t) + catalog.STAGING_SUFFIX,
@@ -208,8 +270,9 @@ def overwrite_pcrs(elements: DataFrame, warehouse_dir: str, summary: BatchSummar
         )
         for t, cols in columns.items()
     }
+    task = _write_task(layouts, assigned, spooled, slots, owners, keys)
     written: Counter = Counter()
-    for r in flat.mapInArrow(_write_task(layouts, assigned, keys), WRITTEN_SCHEMA).collect():
+    for r in spark.range(0, n_tasks, 1, n_tasks).mapInArrow(task, WRITTEN_SCHEMA).collect():
         written[r["table"]] += r["rows"]
 
     for t, (staging, cols, _) in layouts.items():

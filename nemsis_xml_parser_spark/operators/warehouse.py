@@ -19,16 +19,17 @@ Spark-first redesign:
   {table}_value`` + attribute columns, names lowercased, attr names that
   collide with the common columns silently dropped — parity with the
   column-intersection filter (/root/reference/main_ingest.py:479-483);
-* the flat layout (``flat_slots``, ``flat_source``, ``to_flat``,
-  ``split_by_table``) carries every table of a batch in one frame — table
-  tag, the 4 common columns, the value, one slot per attribute column — so
-  both sinks move a batch in ONE Spark job: ``overwrite.overwrite_pcrs``
+* the flat layout (``flat_slots``, ``flat_source``, ``split_by_table``)
+  carries every table of a batch in one stream of Arrow batches — table
+  tag, the 4 common columns, the value, one slot per attribute column —
+  so both sinks move a batch in ONE Spark job: ``overwrite.overwrite_pcrs``
   (the per-tag lake, one parquet directory per table, that
-  ``bookkeeping.ingest_xml_files`` writes; only the batch's new rows go
-  through the flat layout, and the write tasks copy the lake's kept rows
-  from the part files the driver deals them) and
+  ``bookkeeping.ingest_xml_files`` writes; its write tasks pivot the
+  batch's spooled Arrow rows into the flat layout with pyarrow
+  (``overwrite.pivot``) and copy the lake's kept rows from the part files
+  the driver deals them, so no row enters the JVM) and
   ``jdbc_sink.stage_to_jdbc_distributed`` (the JDBC target's stage
-  tables).
+  tables, fed by ``to_flat`` projections of ``table_frame``s).
 
 Neither sink runs a job per tag: ingest cost is one write job per batch
 regardless of tag count (NEMSIS has hundreds of tags — per-tag jobs would

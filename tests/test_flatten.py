@@ -3,13 +3,14 @@
 import hashlib
 import uuid
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
 from nemsis_xml_parser_spark.operators.flatten import (
-    flatten_batch,
     flatten_xml_document,
     flatten_xml_strings,
+    spool_xml_files,
 )
 from tests.conftest import NEMSIS_XML
 
@@ -122,11 +123,8 @@ def test_random_ids_are_distinct_canonical_uuid4s(spark, tmp_path):
         p = tmp_path / f"doc{i}.xml"
         p.write_text(NEMSIS_XML)
         paths.append(str(p))
-    elements, _ = flatten_batch(spark, paths)
-    try:
-        got = elements.select("element_id", "parent_element_id").collect()
-    finally:
-        elements.unpersist()
+    spooled, _ = spool_xml_files(spark, paths, str(tmp_path / "spool"))
+    got = pa.concat_tables(pa.ipc.open_file(p).read_all() for p in spooled).to_pylist()
     ids = [r["element_id"] for r in got]
     assert len(ids) == 3 * len(flatten_xml_document(NEMSIS_XML))
     assert len(set(ids)) == len(ids)

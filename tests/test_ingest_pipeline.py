@@ -192,19 +192,20 @@ def _mixed_batch(tmp_path):
 
 
 def test_batch_summary_matches_spark_passes(spark, tmp_path):
-    """The summary the flatten tasks fold while the cache materializes
-    equals what the separate Spark passes over the cached batch return:
+    """The summary the spool tasks fold while they write the spool equals
+    what the separate Spark passes over the flattened batch return:
     tables, attribute columns, distinct non-NULL PCR keys and files."""
-    from nemsis_xml_parser_spark.operators.flatten import flatten_batch
+    from nemsis_xml_parser_spark.operators.flatten import flatten_xml_files, spool_xml_files
     from nemsis_xml_parser_spark.operators.warehouse import (
         attribute_columns_per_table,
         table_names,
     )
 
     paths = _mixed_batch(tmp_path)
-    elements, summary = flatten_batch(spark, paths)
+    spooled, summary = spool_xml_files(spark, paths, str(tmp_path / "spool"))
+    assert len(spooled) > 1
+    elements = flatten_xml_files(spark, paths).cache()
     try:
-        assert elements.rdd.getNumPartitions() > 1
         keys = {r[0] for r in elements.where(F.col("pcr_uuid").isNotNull())
                 .select("pcr_uuid").distinct().collect()}
         files = {r[0] for r in elements.select("file").distinct().collect()}
@@ -224,30 +225,38 @@ def test_batch_summary_matches_spark_passes(spark, tmp_path):
 
 
 def test_batch_summary_survives_a_retried_fold(spark, tmp_path):
-    """A retried task (or a recomputed cache partition) adds its summary
-    entries again: a flatten task run twice over one assignment, folding
-    into one accumulator, gives the summary of the distributed batch."""
+    """A retried task adds its summary entries again and rewrites its
+    spool file: a spool task run twice over one assignment, folding into
+    one accumulator, gives the summary of the distributed batch and leaves
+    one spool file, holding every row of the batch once."""
     import pyarrow as pa
 
     from nemsis_xml_parser_spark.operators.flatten import (
         BatchSummary,
-        _flatten_task,
-        flatten_batch,
+        _spool_task,
+        spool_xml_files,
+        spool_file_name,
         summary_accumulator,
     )
 
     paths = _mixed_batch(tmp_path)
-    elements, summary = flatten_batch(spark, paths, deterministic_ids=True)
-    elements.unpersist()
+    spooled, summary = spool_xml_files(spark, paths, str(tmp_path / "spool"),
+                                       deterministic_ids=True)
     acc = summary_accumulator(spark)
-    task = _flatten_task([paths], True, acc)
+    retried = tmp_path / "retried"
+    retried.mkdir()
+    task = _spool_task([paths], True, str(retried), acc)
     for _ in range(2):
-        list(task(iter([pa.record_batch({"id": [0]})])))
+        assert len(list(task(iter([pa.record_batch({"id": [0]})])))) == 1
     assert BatchSummary.from_entries(acc.value) == summary
+    assert os.listdir(retried) == [spool_file_name(0)]
+    one = pa.ipc.open_file(str(retried / spool_file_name(0))).read_all()
+    every = pa.concat_tables(pa.ipc.open_file(p).read_all() for p in spooled)
+    assert sorted(one["element_id"].to_pylist()) == sorted(every["element_id"].to_pylist())
 
 
 def test_ingest_runs_two_spark_jobs(spark, tmp_path):
-    """A batch into an existing lake runs one job that flattens, caches
+    """A batch into an existing lake runs one job that flattens, spools
     and summarizes it, and one write job: the batch's tables, attribute
     columns, PCR keys and parsed files cost no Spark pass of their own.
     A batch of 40 files, above Spark's 32-path parallel-listing
