@@ -15,8 +15,10 @@ The lake layout is plain parquet directories under a warehouse root:
     {root}/_files_processed/          bookkeeping log (append, one file per batch)
     {root}/{tag}/                     one directory per dynamic table
 
-At 100 TB the same code runs with Delta/Iceberg table paths for ACID
-overwrite; the operators only assume ``read.parquet`` / ``write.parquet``.
+The flatten and write tasks read the batch's files, the spool and the
+lake's part files by path with pyarrow, so the lake must be a path every
+executor sees (local or a shared mount); readers need only
+``read.parquet``.  On Delta/Iceberg the rewrite becomes ``MERGE``.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ from .. import catalog
 from ..schema import (
     FILES_PROCESSED_SCHEMA,
     INGESTION_LOGIC_VERSION,
+    STATUS_ERROR_MD5,
     STATUS_ERROR_NOT_FOUND,
     STATUS_ERROR_PARSE,
     STATUS_OK,
@@ -178,16 +181,20 @@ def ingest_xml_files(
     rows (``last_versions``).  Per-file statuses come from the
     summary's files: files that parse to zero elements get
     Error_Parsing_Empty and error-dir routing (parity:
-    main_ingest.py:386-397); routing never moves a file over one already
-    there (``archive_file``).  Every file of the batch, skipped and missing
+    main_ingest.py:386-397), and a path that exists but cannot be read (its
+    MD5 is None, say a directory named ``d.xml``) gets Error_MD5 and
+    error-dir routing without entering the flatten, so the rest of the
+    batch is ingested; routing never moves a file over one already there
+    (``archive_file``).  Every file of the batch, skipped and missing
     ones too, gets its status and MD5 in the log, as each file does in the
     reference (main_ingest.py:648-688).
     """
     catalog.clean_scratch_dirs(warehouse_dir)
     todo, skipped = files_to_process(warehouse_dir, file_paths)
     records = [(p, md5, STATUS_SKIPPED) for p, md5 in skipped.items()]
-    for p in [p for p in todo if not os.path.exists(p)]:
-        records.append((p, todo.pop(p), STATUS_ERROR_NOT_FOUND))
+    for p in [p for p, md5 in todo.items() if md5 is None]:
+        missing = not os.path.exists(p)
+        records.append((p, todo.pop(p), STATUS_ERROR_NOT_FOUND if missing else STATUS_ERROR_MD5))
     if todo:
         spool = os.path.join(warehouse_dir, catalog.SPOOL_DIR)
         try:
@@ -202,10 +209,9 @@ def ingest_xml_files(
         ]
     if records:
         log_processed_files(warehouse_dir, [(os.path.basename(p), m, s) for p, m, s in records])
-    statuses = {p: s for p, _, s in records}
-    for p in todo:
-        if statuses[p] == STATUS_OK and archive_dir:
+    for p, _, status in records:
+        if status == STATUS_OK and archive_dir:
             archive_file(p, archive_dir)
-        elif statuses[p] != STATUS_OK and error_dir:
+        elif status in (STATUS_ERROR_PARSE, STATUS_ERROR_MD5) and error_dir:
             archive_file(p, error_dir)
-    return statuses
+    return {p: s for p, _, s in records}

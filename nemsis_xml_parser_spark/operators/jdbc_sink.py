@@ -14,9 +14,11 @@ reference's psycopg2 layer did — but set-based:
 * ``fk_pairs`` derives the unique (child_table, parent_table) pairs
   distributively (D4);
 * ``stage_to_jdbc_distributed`` is the one staging path: ONE coalesced
-  ``mapInArrow`` job stages every table of the batch, in the flat layout
-  the lake rewrite also uses (``warehouse.to_flat``), over one connection
-  per task; then ONE driver transaction runs DDL → a DELETE per table
+  ``mapInArrow`` job stages every table of the batch over one connection
+  per task — the tables' frames go into the job as one union, in a flat
+  "table tag + columns" layout of this module's own (``_to_flat``), and
+  each task splits them apart again (``_split_by_table``); then ONE
+  driver transaction runs DDL → a DELETE per table
   against the batch's PCR key set, staged once (D3) → one
   ``INSERT .. SELECT .. UNION ALL`` per table (D6).  No data row passes
   through the driver, whatever the size of the batch.
@@ -29,16 +31,17 @@ byte-stable.
 from __future__ import annotations
 
 import time as _time
+from collections import Counter
 from dataclasses import dataclass
 from functools import reduce
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from ..naming import COMMON_COLUMNS, fk_constraint_name, value_column_name
-from . import warehouse
 
 
 @dataclass(frozen=True)
@@ -378,6 +381,74 @@ STAGED_SCHEMA = "table string, pid int, rows long"
 KEYS_TABLE = "_batch_pcr_keys"
 
 
+# the flat layout a staging job moves every table of a batch in, one union
+# of the tables' frames: table tag, the 4 common columns, the value, and
+# attribute slots "_a0".."_aN" (named by position, so no attribute name can
+# collide with them)
+_TABLE, _VALUE = "_t", "_v"
+
+
+def _flat_slots(columns: dict[str, list[str]]) -> dict[str, str]:
+    """Attribute slot of every attribute column in ``columns`` ({table:
+    its column names}), shared by all the tables."""
+    names = sorted(
+        {c for t, cols in columns.items() for c in cols
+         if c not in COMMON_COLUMNS and c != value_column_name(t)}
+    )
+    return {c: f"_a{i}" for i, c in enumerate(names)}
+
+
+def _flat_source(table: str, column: str, slots: dict[str, str]) -> str:
+    """Flat column holding ``table``'s ``column``: a common column as it
+    is, the table's value column -> _VALUE, any other column -> its slot."""
+    if column in COMMON_COLUMNS:
+        return column
+    return _VALUE if column == value_column_name(table) else slots[column]
+
+
+def _to_flat(
+    frame: DataFrame, table: str, columns: list[str], slots: dict[str, str]
+) -> DataFrame:
+    """``frame``'s ``columns`` (those of ``table``) in the flat layout,
+    tagged ``table``; the slots of columns the table lacks are NULL."""
+    have = {_flat_source(table, c, slots): c for c in columns}
+    null = F.lit(None).cast("string")
+    return frame.select(
+        F.lit(table).alias(_TABLE),
+        *[
+            (F.col(have[s]) if s in have else null).alias(s)
+            for s in [*COMMON_COLUMNS, _VALUE, *slots.values()]
+        ],
+    )
+
+
+def _split_by_table(
+    batches, layouts: dict[str, tuple[list[str], list[str]]], chunk_rows: int
+):
+    """Task side of a flat-layout job: split Arrow ``batches`` by table tag
+    and yield (table, Arrow table in the table's own column names).
+    ``layouts`` maps a table to (column names, flat source columns).  A
+    table's rows are yielded once ``chunk_rows`` of them are buffered, and
+    the rest at the end, so a task holds at most about ``chunk_rows`` rows
+    per table, whatever the size of its partition."""
+    pending: dict[str, list[pa.RecordBatch]] = {}
+    buffered: Counter = Counter()
+    for batch in batches:
+        tags = batch.column(_TABLE)
+        for t in pc.unique(tags).to_pylist():
+            names, sources = layouts[t]
+            sub = batch.filter(pc.equal(tags, t))
+            pending.setdefault(t, []).append(
+                pa.RecordBatch.from_arrays([sub.column(s) for s in sources], names=names)
+            )
+            buffered[t] += sub.num_rows
+            if buffered[t] >= chunk_rows:
+                buffered[t] = 0
+                yield t, pa.Table.from_batches(pending.pop(t))
+    for t, rest in pending.items():
+        yield t, pa.Table.from_batches(rest)
+
+
 def stage_partition(
     batches,
     pid: int,
@@ -388,7 +459,7 @@ def stage_partition(
     paramstyle: str = "format",
 ) -> list[tuple[str, int, int]]:
     """Task side of the staging job: split flat-layout Arrow ``batches`` by
-    table (``warehouse.split_by_table``; ``layouts`` maps a table to its
+    table (``_split_by_table``; ``layouts`` maps a table to its
     column names and flat source columns) and stage each table's rows into
     ``stage_table_name(table, pid)`` over ONE connection,
     ``connect_fn(pid)``, opened at the first row.  Each stage table is
@@ -399,7 +470,7 @@ def stage_partition(
     rows: dict[str, int] = {}
     conn = None
     try:
-        for table, part in warehouse.split_by_table(batches, layouts, STAGE_CHUNK_ROWS):
+        for table, part in _split_by_table(batches, layouts, STAGE_CHUNK_ROWS):
             if conn is None:
                 conn = connect_fn(pid)
                 cur = conn.cursor()
@@ -472,8 +543,8 @@ def stage_to_jdbc_distributed(
     path, for a one-file batch as for a 100 TB one.
 
     Phase 1 (executors, ONE Spark job): every table frame is projected into
-    the flat layout the lake rewrite also writes (``warehouse.to_flat``:
-    table tag, the 4 common columns, the value, attribute slots), the union
+    the flat layout (``_to_flat``: table tag, the 4 common columns, the
+    value, attribute slots), the union
     is coalesced to ``defaultParallelism`` tasks, and ``mapInArrow`` hands
     each task its rows as Arrow batches.  Each task opens ONE DBAPI
     connection, ``connect_fn(task_id)``, and stages every table it holds
@@ -525,9 +596,9 @@ def stage_to_jdbc_distributed(
             return f'"{stage_schema}"."{stage_table_name(table, pid)}"'
 
     _t_stage0 = _time.perf_counter()
-    slots = warehouse.flat_slots(registry)
+    slots = _flat_slots(registry)
     layouts = {
-        t: (cols, [warehouse.flat_source(t, c, slots) for c in cols])
+        t: (cols, [_flat_source(t, c, slots) for c in cols])
         for t, cols in registry.items()
     }
 
@@ -546,7 +617,7 @@ def stage_to_jdbc_distributed(
     if registry:
         flat = reduce(
             DataFrame.unionByName,
-            [warehouse.to_flat(frames[t], t, cols, slots) for t, cols in registry.items()],
+            [_to_flat(frames[t], t, cols, slots) for t, cols in registry.items()],
         )
         out = (
             flat.coalesce(flat.sparkSession.sparkContext.defaultParallelism)

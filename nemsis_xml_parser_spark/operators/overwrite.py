@@ -15,12 +15,14 @@ whatever the number of tables.  No row passes through Spark's plan: the
 job runs over ``spark.range``, and the driver deals each task its share
 of the batch's spool files (``flatten.spool_xml_files``) and of each
 rewritten table's part files, largest first (``catalog.deal_by_size``).
-Each task pivots its spooled rows with pyarrow into ``warehouse``'s flat
-layout (``pivot``: table tag, the 4 common columns, the value, one slot
-per attribute column), streams its old files by row group, drops the rows
-of the key set and writes the rest, with its new rows of the same table,
-as one parquet file into the table's staging directory.  The driver then
-swaps the staging directories in (``catalog.swap_in_scratch_dir``).
+Each task pivots its spooled rows with pyarrow straight into each
+table's own columns (``pivot``: split by lowercased table tag, then the 4
+common columns and the value by name and each attribute column by a
+lookup in the row's attribute map), streams its old files by row group,
+drops the rows of the key set and writes the rest, with its new rows of
+the same table, as one parquet file into the table's staging directory.
+The driver then swaps the staging directories in
+(``catalog.swap_in_scratch_dir``).
 Per-tag jobs would cost a scheduler round-trip per table, and NEMSIS has
 hundreds of tags.
 
@@ -41,7 +43,6 @@ import os
 import uuid
 from collections import Counter
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -49,9 +50,7 @@ from pyspark.sql import SparkSession
 
 from .. import catalog
 from ..naming import COMMON_COLUMNS, value_column_name
-from . import warehouse
 from .flatten import BatchSummary
-from .warehouse import TABLE, VALUE
 
 WRITTEN_SCHEMA = "table string, rows long"
 PCR = "pcr_uuid_context"
@@ -64,41 +63,48 @@ def part_file_name(pid: int) -> str:
 
 
 def write_partition(
-    batches,
-    layouts: dict[str, tuple[str, list[str], list[str] | None]],
+    pieces,
+    layouts: dict[str, tuple[str, list[str]]],
     pid: int,
     old_files: list[tuple[str, str]],
     keys: list[str],
 ) -> list[tuple[str, int]]:
     """Task side of the write job: write each table's rows as ONE parquet
     file ``part_file_name(pid)`` in that table's directory.  ``layouts``
-    maps a table to (directory, column names, flat source columns); the
-    sources are None for a table the batch has no rows for.
+    maps a table to (directory, column names).
 
     The rows are the kept rows of this task's ``old_files`` ((table, path)
     pairs of the live lake), streamed by row group, minus every row whose
     ``pcr_uuid_context`` is in ``keys`` (a NULL never matches), laid out in
     the table's column names (a column the file lacks is NULL); then the
-    flat-layout new rows of ``batches``, split by table tag.  Files are
-    written under a hidden temp name and renamed into place, so a retried
-    task replaces its own file instead of adding a second one.  Returns
-    (table, rows) per file written."""
+    new rows of ``pieces``, (table, Arrow table in its column names) pairs.
+    A table's rows are buffered and written as one row group once
+    ``ROW_GROUP_ROWS`` of them are, and the rest at the end, so a task
+    holds at most about that many rows per table.  Files are written under
+    a hidden temp name and renamed into place, so a retried task replaces
+    its own file instead of adding a second one.  Returns (table, rows) per
+    file written."""
     rows: Counter = Counter()
     writers: dict[str, tuple[pq.ParquetWriter, str]] = {}
+    pending: dict[str, list[pa.Table]] = {}
     schemas = {
-        t: pa.schema([(c, pa.string()) for c in names])
-        for t, (_, names, _) in layouts.items()
+        t: pa.schema([(c, pa.string()) for c in names]) for t, (_, names) in layouts.items()
     }
 
-    def write(t: str, columns: list) -> None:
+    def flush(t: str) -> None:
         if t not in writers:
             directory = layouts[t][0]
             os.makedirs(directory, exist_ok=True)
             tmp = os.path.join(directory, f".{pid:05d}-{uuid.uuid4().hex}.tmp")
             writers[t] = (pq.ParquetWriter(tmp, schemas[t]), tmp)
+        writers[t][0].write_table(pa.concat_tables(pending.pop(t)))
+
+    def write(t: str, columns: list) -> None:
         part = pa.Table.from_arrays(columns, schema=schemas[t])
-        writers[t][0].write_table(part)
+        pending.setdefault(t, []).append(part)
         rows[t] += part.num_rows
+        if sum(p.num_rows for p in pending[t]) >= ROW_GROUP_ROWS:
+            flush(t)
 
     key_set = pa.array(keys, pa.string())
     for t, path in old_files:
@@ -111,13 +117,10 @@ def write_partition(
                         kept.column(c) if c in have else pa.nulls(kept.num_rows, pa.string())
                         for c in layouts[t][1]
                     ])
-    split = warehouse.split_by_table(
-        batches,
-        {t: (names, sources) for t, (_, names, sources) in layouts.items() if sources},
-        ROW_GROUP_ROWS,
-    )
-    for t, part in split:
+    for t, part in pieces:
         write(t, part.columns)
+    for t in list(pending):
+        flush(t)
     for t, (writer, tmp) in writers.items():
         writer.close()
         os.replace(tmp, os.path.join(layouts[t][0], part_file_name(pid)))
@@ -132,11 +135,11 @@ def _lowered(strings: pa.Array) -> pa.Array:
     return pc.take(lowered, pc.index_in(strings, value_set=distinct))
 
 
-def pivot(spooled: pa.RecordBatch, slots: dict[str, str], owners: dict[str, str]) -> pa.RecordBatch:
-    """Spool rows (``flatten.SPOOL_SCHEMA``) in ``warehouse``'s flat
-    layout: the lowercased table tag, the 4 common columns, the value and
-    one slot per attribute column of ``slots``, holding the value of the
-    row's attribute whose lowercased key is that column.  When several
+def pivot(spooled: pa.RecordBatch, columns: dict[str, list[str]], owners: dict[str, str]):
+    """Spool rows (``flatten.SPOOL_SCHEMA``) as (table, Arrow table in the
+    table's ``columns``) pieces, one per lowercased table tag: the common
+    columns and the value by name, and each attribute column the value of
+    the row's attribute whose lowercased key is that column.  When several
     keys of a row lower to one column, the later key wins, as in the
     reference's row dict (main_ingest.py:466-476).  A row whose PCR is a
     key of ``owners`` is dropped unless its file is that PCR's owner."""
@@ -144,42 +147,31 @@ def pivot(spooled: pa.RecordBatch, slots: dict[str, str], owners: dict[str, str]
         at = pc.index_in(spooled.column("pcr_uuid"), value_set=pa.array(list(owners)))
         owner = pc.take(pa.array(list(owners.values()), pa.string()), at)
         spooled = spooled.filter(pc.fill_null(pc.equal(spooled.column("file"), owner), True))
-    n = spooled.num_rows
     attributes = spooled.column("attributes")
     # a map's entries are offsets[i]:offsets[i + 1] of its flattened keys
     # and items, whatever slice of them the array is
-    offsets = attributes.offsets.to_numpy()
-    first, count = int(offsets[0]), int(offsets[-1] - offsets[0])
-    items = attributes.items.slice(first, count)
-    slot = pc.index_in(_lowered(attributes.keys.slice(first, count)),
-                       value_set=pa.array(list(slots), pa.string()))
-    slot = pc.fill_null(slot, -1).to_numpy()
-    entry = np.flatnonzero(slot >= 0)
-    # each entry's (slot, row) cell; a stable sort keeps a cell's entries
-    # in document order, so the last of each run is the later key
-    cell = slot[entry].astype(np.int64) * n + np.repeat(np.arange(n), np.diff(offsets))[entry]
-    order = np.argsort(cell, kind="stable")
-    cell, entry = cell[order], entry[order]
-    last = np.ones(len(cell), dtype=bool)
-    last[:-1] = cell[1:] != cell[:-1]
-    cell, entry = cell[last], entry[last]
-    bounds = np.searchsorted(cell, np.arange(len(slots) + 1) * n)
-    columns = [
-        _lowered(spooled.column("table_name")),
-        spooled.column("element_id"),
-        spooled.column("parent_element_id"),
-        spooled.column("pcr_uuid"),
-        spooled.column("element_tag"),
-        spooled.column("value"),
-    ]
-    for k in range(len(slots)):
-        # the cells are unique now: each row gets at most one entry
-        at = np.full(n, -1, dtype=np.int64)
-        at[cell[bounds[k]:bounds[k + 1]] - k * n] = entry[bounds[k]:bounds[k + 1]]
-        columns.append(pc.take(items, pa.array(at, mask=at < 0)))
-    return pa.RecordBatch.from_arrays(
-        columns, names=[TABLE, *COMMON_COLUMNS, VALUE, *slots.values()]
+    offsets = attributes.offsets
+    first = offsets[0].as_py()
+    count = offsets[-1].as_py() - first
+    lowered = pa.MapArray.from_arrays(
+        pc.subtract(offsets, pa.scalar(first, pa.int32())),
+        _lowered(attributes.keys.slice(first, count)),
+        attributes.items.slice(first, count),
     )
+    rows = pa.RecordBatch.from_arrays(
+        [*(spooled.column(c) for c in
+           ("element_id", "parent_element_id", "pcr_uuid", "element_tag", "value")), lowered],
+        names=[*COMMON_COLUMNS, "value", "attributes"],
+    )
+    tags = _lowered(spooled.column("table_name"))
+    for t in pc.unique(tags).to_pylist():
+        sub = rows.filter(pc.equal(tags, t))
+        yield t, pa.table([
+            sub.column(c) if c in COMMON_COLUMNS
+            else sub.column("value") if c == value_column_name(t)
+            else pc.map_lookup(sub.column("attributes"), c, "last")
+            for c in columns[t]
+        ], names=columns[t])
 
 
 def _spooled(path: str):
@@ -189,15 +181,17 @@ def _spooled(path: str):
         yield reader.get_batch(i)
 
 
-def _write_task(layouts, old_files, spool_files, slots, owners, keys):
+def _write_task(layouts, old_files, spool_files, owners, keys):
     """Task side of the write job: the task given the id ``i`` pivots the
     rows of its spool files ``spool_files[i]`` and writes them, with the
     kept rows of ``old_files[i]``, as part file ``i`` of each table."""
+    columns = {t: cols for t, (_, cols) in layouts.items()}
 
     def run(ids):
         for batch in ids:
             for i in batch.column(0).to_pylist():
-                new = (pivot(b, slots, owners) for p in spool_files[i] for b in _spooled(p))
+                new = (piece for p in spool_files[i] for b in _spooled(p)
+                       for piece in pivot(b, columns, owners))
                 written = write_partition(new, layouts, i, old_files[i], keys)
                 yield pa.RecordBatch.from_pylist(
                     [{"table": t, "rows": n} for t, n in written],
@@ -261,21 +255,16 @@ def overwrite_pcrs(
     assigned = catalog.deal_by_size(old_files, n_tasks, path=lambda f: f[1])
     spooled = catalog.deal_by_size(spool_files, n_tasks)
 
-    slots = warehouse.flat_slots({t: columns[t] for t in incoming})
     layouts = {
-        t: (
-            os.path.join(warehouse_dir, t) + catalog.STAGING_SUFFIX,
-            cols,
-            [warehouse.flat_source(t, c, slots) for c in cols] if t in incoming else None,
-        )
+        t: (os.path.join(warehouse_dir, t) + catalog.STAGING_SUFFIX, cols)
         for t, cols in columns.items()
     }
-    task = _write_task(layouts, assigned, spooled, slots, owners, keys)
+    task = _write_task(layouts, assigned, spooled, owners, keys)
     written: Counter = Counter()
     for r in spark.range(0, n_tasks, 1, n_tasks).mapInArrow(task, WRITTEN_SCHEMA).collect():
         written[r["table"]] += r["rows"]
 
-    for t, (staging, cols, _) in layouts.items():
+    for t, (staging, cols) in layouts.items():
         if not written[t]:
             # an emptied table still holds its schema, or readers that
             # infer it (Spark, DuckDB globs) find nothing

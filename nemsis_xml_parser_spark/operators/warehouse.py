@@ -19,40 +19,25 @@ Spark-first redesign:
   {table}_value`` + attribute columns, names lowercased, attr names that
   collide with the common columns silently dropped — parity with the
   column-intersection filter (/root/reference/main_ingest.py:479-483);
-* the flat layout (``flat_slots``, ``flat_source``, ``split_by_table``)
-  carries every table of a batch in one stream of Arrow batches — table
-  tag, the 4 common columns, the value, one slot per attribute column —
-  so both sinks move a batch in ONE Spark job: ``overwrite.overwrite_pcrs``
-  (the per-tag lake, one parquet directory per table, that
-  ``bookkeeping.ingest_xml_files`` writes; its write tasks pivot the
-  batch's spooled Arrow rows into the flat layout with pyarrow
-  (``overwrite.pivot``) and copy the lake's kept rows from the part files
-  the driver deals them, so no row enters the JVM) and
-  ``jdbc_sink.stage_to_jdbc_distributed`` (the JDBC target's stage
-  tables, fed by ``to_flat`` projections of ``table_frame``s).
+  an attribute column holds the later of two keys that lower to it, as
+  the reference's row dict does (main_ingest.py:466-476).
 
-Neither sink runs a job per tag: ingest cost is one write job per batch
-regardless of tag count (NEMSIS has hundreds of tags — per-tag jobs would
-mean hundreds of scheduler round-trips per batch), and every consumer read
-is pruned to its table's directory.
+This module keeps the table shape and nothing else.  Neither sink runs a
+job per tag (NEMSIS has hundreds of tags, so that would mean hundreds of
+scheduler round-trips per batch): the lake's write tasks build each
+table's columns from the batch's spooled Arrow rows with pyarrow, by the
+same rules (``overwrite.pivot``), and ``jdbc_sink.stage_to_jdbc_distributed``
+stages ``table_frame``s in one job.
 """
 
 from __future__ import annotations
 
-from collections import Counter
 from collections.abc import Iterable
 
-import pyarrow as pa
-import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..naming import COMMON_COLUMNS, table_name_for_tag, value_column_name
-
-# flat-layout columns besides the 4 common ones: table tag, value, and
-# attribute slots "_a0".."_aN" (named by position, so no attribute name can
-# collide with them)
-TABLE, VALUE = "_t", "_v"
 
 
 def table_names(elements: DataFrame) -> list[str]:
@@ -94,12 +79,16 @@ def attribute_columns_per_table(elements: DataFrame) -> dict[str, list[str]]:
     return attribute_columns((r["t"], r["attr"]) for r in rows)
 
 
-def lowered_attributes() -> Column:
-    """The ``attributes`` map with lowercased keys.  Keys were sanitized
-    during flatten; lookups must be case-insensitive because column names
-    are lowercased at sink time."""
-    return F.expr(
-        "map_from_entries(transform(map_entries(attributes), e -> struct(lower(e.key), e.value)))"
+def _attribute(column: str) -> Column:
+    """The value of the attribute whose lowercased key is ``column``; when
+    several keys of an element lower to it, the later key wins, as in the
+    reference's row dict (main_ingest.py:466-476).  Keys were sanitized
+    during flatten; lookups are case-insensitive because column names are
+    lowercased at sink time."""
+    return F.aggregate(
+        F.map_entries("attributes"),
+        F.lit(None).cast("string"),
+        lambda found, e: F.when(F.lower(e["key"]) == column, e["value"]).otherwise(found),
     )
 
 
@@ -116,7 +105,6 @@ def table_frame(
     if attr_cols is None:
         attr_cols = attribute_columns_per_table(subset).get(table, [])
 
-    lower_map = lowered_attributes()
     cols = [
         F.col("element_id"),
         F.col("parent_element_id"),
@@ -124,69 +112,8 @@ def table_frame(
         F.col("element_tag").alias("original_tag_name"),
         F.col("value").alias(value_column_name(table)),
     ]
-    cols += [lower_map.getItem(a).alias(a) for a in attr_cols]
+    cols += [_attribute(a).alias(a) for a in attr_cols]
     return subset.select(*cols)
-
-
-def flat_slots(columns: dict[str, list[str]]) -> dict[str, str]:
-    """Attribute slot of every attribute column in ``columns`` ({table:
-    its column names}), shared by all the tables."""
-    names = sorted(
-        {c for t, cols in columns.items() for c in cols
-         if c not in COMMON_COLUMNS and c != value_column_name(t)}
-    )
-    return {c: f"_a{i}" for i, c in enumerate(names)}
-
-
-def flat_source(table: str, column: str, slots: dict[str, str]) -> str:
-    """Flat column holding ``table``'s ``column``: a common column as it
-    is, the table's value column -> VALUE, any other column -> its slot."""
-    if column in COMMON_COLUMNS:
-        return column
-    return VALUE if column == value_column_name(table) else slots[column]
-
-
-def to_flat(
-    frame: DataFrame, table: str, columns: list[str], slots: dict[str, str]
-) -> DataFrame:
-    """``frame``'s ``columns`` (those of ``table``) in the flat layout,
-    tagged ``table``; the slots of columns the table lacks are NULL."""
-    have = {flat_source(table, c, slots): c for c in columns}
-    null = F.lit(None).cast("string")
-    return frame.select(
-        F.lit(table).alias(TABLE),
-        *[
-            (F.col(have[s]) if s in have else null).alias(s)
-            for s in [*COMMON_COLUMNS, VALUE, *slots.values()]
-        ],
-    )
-
-
-def split_by_table(
-    batches, layouts: dict[str, tuple[list[str], list[str]]], chunk_rows: int
-):
-    """Task side of a flat-layout job: split Arrow ``batches`` by table tag
-    and yield (table, Arrow table in the table's own column names).
-    ``layouts`` maps a table to (column names, flat source columns).  A
-    table's rows are yielded once ``chunk_rows`` of them are buffered, and
-    the rest at the end, so a task holds at most about ``chunk_rows`` rows
-    per table, whatever the size of its partition."""
-    pending: dict[str, list[pa.RecordBatch]] = {}
-    buffered: Counter = Counter()
-    for batch in batches:
-        tags = batch.column(TABLE)
-        for t in pc.unique(tags).to_pylist():
-            names, sources = layouts[t]
-            sub = batch.filter(pc.equal(tags, t))
-            pending.setdefault(t, []).append(
-                pa.RecordBatch.from_arrays([sub.column(s) for s in sources], names=names)
-            )
-            buffered[t] += sub.num_rows
-            if buffered[t] >= chunk_rows:
-                buffered[t] = 0
-                yield t, pa.Table.from_batches(pending.pop(t))
-    for t, rest in pending.items():
-        yield t, pa.Table.from_batches(rest)
 
 
 def table_comments(elements: DataFrame) -> dict[str, str]:

@@ -22,6 +22,7 @@ from nemsis_xml_parser_spark.operators.bookkeeping import (
 )
 from nemsis_xml_parser_spark.schema import (
     FILES_PROCESSED_SCHEMA,
+    STATUS_ERROR_MD5,
     STATUS_ERROR_PARSE,
     STATUS_OK,
 )
@@ -65,6 +66,31 @@ def test_end_to_end_ingest(spark, tmp_path):
     # routing: good archived, bad moved to errors
     assert os.listdir(archive) == ["good.xml"]
     assert os.listdir(errors) == ["bad.xml"]
+
+
+def test_unreadable_path_fails_alone(spark, tmp_path):
+    """A path that exists but cannot be read (a directory named like an
+    XML file) gets Error_MD5, is logged and routed to the error dir, and
+    the rest of its batch is ingested and archived."""
+    wh = str(tmp_path / "wh")
+    archive = str(tmp_path / "archive")
+    errors = str(tmp_path / "errors")
+    good = _write(tmp_path, "good.xml", NEMSIS_XML)
+    unreadable = tmp_path / "d.xml"
+    unreadable.mkdir()
+
+    statuses = ingest_xml_files(
+        spark, [str(unreadable), good], wh, archive_dir=archive, error_dir=errors,
+        deterministic_ids=True,
+    )
+    assert statuses == {str(unreadable): STATUS_ERROR_MD5, good: STATUS_OK}
+    recs = {r["original_file_name"]: r for r in read_files_processed(spark, wh).collect()}
+    assert {n: (r["status"], r["md5_hash"]) for n, r in recs.items()} == {
+        "d.xml": (STATUS_ERROR_MD5, None), "good.xml": (STATUS_OK, file_md5(
+            os.path.join(archive, "good.xml")))}
+    assert spark.read.parquet(os.path.join(wh, "evitals_01")).count() == 1
+    assert os.listdir(archive) == ["good.xml"]
+    assert os.listdir(errors) == ["d.xml"]
 
 
 def test_reingest_md5_skip_and_overwrite(spark, tmp_path):

@@ -417,8 +417,7 @@ def test_stage_partition_retry_is_idempotent(tmp_path, monkeypatch):
     holds its rows once, also when they arrive in several chunks."""
     import pyarrow as pa
 
-    from nemsis_xml_parser_spark.operators.warehouse import TABLE, VALUE
-
+    TABLE, VALUE = J._TABLE, J._VALUE
     common = list(COMMON_COLUMNS)
     layouts = {
         t: (common + [value_column_name(t)], common + [VALUE]) for t in ("p", "q")

@@ -201,28 +201,23 @@ def test_write_partition_retry_replaces_its_own_file(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from nemsis_xml_parser_spark.operators.overwrite import (
-        TABLE,
-        VALUE,
-        part_file_name,
-        write_partition,
-    )
+    from nemsis_xml_parser_spark.operators.overwrite import part_file_name, write_partition
 
     common = ["element_id", "parent_element_id", "pcr_uuid_context", "original_tag_name"]
-    layouts = {
-        t: (str(tmp_path / t), common + [f"{t}_value", "a"], common + [VALUE, "_a0"])
-        for t in ("p", "q")
-    }
-    layouts["r"] = (str(tmp_path / "r"), common + ["r_value"], None)
-    batch = pa.RecordBatch.from_pydict({
-        TABLE: ["p", "q", "p"],
-        "element_id": ["1", "2", "3"],
-        "parent_element_id": [None, "1", "1"],
-        "pcr_uuid_context": ["A", "A", None],
-        "original_tag_name": ["p", "q", "p"],
-        VALUE: ["v1", "v2", "v3"],
-        "_a0": ["x", None, None],
-    })
+    layouts = {t: (str(tmp_path / t), common + [f"{t}_value", "a"]) for t in ("p", "q")}
+    layouts["r"] = (str(tmp_path / "r"), common + ["r_value"])
+
+    def piece(t, **columns):
+        return t, pa.table({c: pa.array(columns[c], pa.string()) for c in layouts[t][1]})
+
+    pieces = [
+        piece("p", element_id=["1"], parent_element_id=[None], pcr_uuid_context=["A"],
+              original_tag_name=["p"], p_value=["v1"], a=["x"]),
+        piece("q", element_id=["2"], parent_element_id=["1"], pcr_uuid_context=["A"],
+              original_tag_name=["q"], q_value=["v2"], a=[None]),
+        piece("p", element_id=["3"], parent_element_id=["1"], pcr_uuid_context=[None],
+              original_tag_name=["p"], p_value=["v3"], a=[None]),
+    ]
     old = {}
     for t, pcrs in (("p", ["A", None, "it's", "B"]), ("r", ["it's", "B"])):
         old[t] = str(tmp_path / f"old_{t}.parquet")
@@ -235,13 +230,15 @@ def test_write_partition_retry_replaces_its_own_file(tmp_path):
         }), old[t])
     for _ in range(2):
         assert write_partition(
-            [batch], layouts, 7, [("p", old["p"]), ("r", old["r"])], ["A", "it's"]
+            pieces, layouts, 7, [("p", old["p"]), ("r", old["r"])], ["A", "it's"]
         ) == [("p", 4), ("q", 1), ("r", 1)]
     for t, n in (("p", 4), ("q", 1), ("r", 1)):
         assert os.listdir(tmp_path / t) == [part_file_name(7)]
         got = pq.read_table(tmp_path / t / part_file_name(7))
         assert got.column_names == layouts[t][1]
         assert got.num_rows == n
+        # a table's kept and new rows share one buffer and one row group
+        assert pq.ParquetFile(tmp_path / t / part_file_name(7)).metadata.num_row_groups == 1
     p = pq.read_table(tmp_path / "p" / part_file_name(7)).to_pylist()
     assert sorted((r["element_id"], r["pcr_uuid_context"], r["a"]) for r in p) == [
         ("1", "A", "x"), ("3", None, None), ("p1", None, None), ("p3", "B", None)
@@ -252,13 +249,13 @@ def test_write_partition_retry_replaces_its_own_file(tmp_path):
 
 def test_pivot_of_a_sliced_batch_keeps_each_rows_later_key():
     """``pivot`` reads each row's own map entries when the batch is a
-    slice of a larger one, fills a slot from the later of two keys that
-    lower to its column, lowercases the table tag, and keeps a PCR that
-    several files carry only from its owner file (NULL PCRs stay)."""
+    slice of a larger one, fills a column from the later of two keys that
+    lower to it, lowercases the table tag, and keeps a PCR that several
+    files carry only from its owner file (NULL PCRs stay)."""
     import pyarrow as pa
 
     from nemsis_xml_parser_spark.operators.flatten import SPOOL_SCHEMA
-    from nemsis_xml_parser_spark.operators.overwrite import TABLE, VALUE, pivot
+    from nemsis_xml_parser_spark.operators.overwrite import pivot
 
     rows = [
         dict(table_name="X", element_id="0", parent_element_id=None, pcr_uuid="A",
@@ -271,13 +268,15 @@ def test_pivot_of_a_sliced_batch_keeps_each_rows_later_key():
         dict(table_name="y", element_id="3", parent_element_id=None, pcr_uuid=None,
              element_tag="y", value="v3", attributes={}, file="f1"),
     ]
+    common = ["element_id", "parent_element_id", "pcr_uuid_context", "original_tag_name"]
+    columns = {t: common + [f"{t}_value", "b", "code"] for t in ("x", "y")}
     batch = pa.RecordBatch.from_pylist(rows, schema=SPOOL_SCHEMA).slice(1)
-    flat = pivot(batch, {"b": "_a0", "code": "_a1"}, {"A": "f2"}).to_pylist()
-    assert flat == [
-        {TABLE: "x", "element_id": "1", "parent_element_id": None, "pcr_uuid_context": "A",
-         "original_tag_name": "X", VALUE: "v1", "_a0": "3", "_a1": "2"},
-        {TABLE: "y", "element_id": "3", "parent_element_id": None, "pcr_uuid_context": None,
-         "original_tag_name": "y", VALUE: "v3", "_a0": None, "_a1": None},
+    pieces = [(t, part.to_pylist()) for t, part in pivot(batch, columns, {"A": "f2"})]
+    assert pieces == [
+        ("x", [{"element_id": "1", "parent_element_id": None, "pcr_uuid_context": "A",
+                "original_tag_name": "X", "x_value": "v1", "b": "3", "code": "2"}]),
+        ("y", [{"element_id": "3", "parent_element_id": None, "pcr_uuid_context": None,
+                "original_tag_name": "y", "y_value": "v3", "b": None, "code": None}]),
     ]
 
 
@@ -336,6 +335,31 @@ def test_one_file_batch_spreads_old_files_over_all_tasks(spark, tmp_path):
     x0 = spark.read.parquet(os.path.join(lake, "x0"))
     assert x0.count() == 4 * n
     assert x0.where(F.col("pcr_uuid_context") == "P0").first()["x0_value"] == "2"
+
+
+def test_each_part_file_is_one_row_group(spark, tmp_path):
+    """A write task buffers each table's new rows over all its spool
+    batches (one per file) and writes them as one parquet row group, so a
+    batch of more files than tasks writes no more row groups than part
+    files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nemsis_xml_parser_spark import catalog
+
+    lake = str(tmp_path / "lake")
+    n = spark.sparkContext.defaultParallelism
+    tags = ["x0", "x1"]
+    docs = [(f"f{i}.xml", f"<r>{_report(f'P{i}', tags, i)}</r>") for i in range(3 * n)]
+    files, summary = spool(spark, lake, docs)
+    assert len(files) == n
+    assert max(pa.ipc.open_file(pa.memory_map(f)).num_record_batches for f in files) > 1
+    overwrite_pcrs(spark, files, lake, summary, {})
+    for t in list_table_dirs(lake):
+        parts = catalog.part_files(os.path.join(lake, t))
+        assert len(parts) == n, t
+        assert [pq.ParquetFile(p).metadata.num_row_groups for p in parts] == [1] * n, t
+    assert spark.read.parquet(os.path.join(lake, "x1")).count() == 3 * n
 
 
 def _logged(wh):
@@ -503,9 +527,9 @@ def test_lake_equals_the_table_frames_of_its_last_versions(spark, tmp_path):
     batches' files less the rows of superseded PCR versions (a PCR keeps
     its last file's rows; NULL-PCR rows all stay), in the lake's column
     order.  The batch holds a PCR two of its files carry, attribute keys
-    in mixed case, attributes that collide with a common or the value
-    column, a new attribute of an existing table, NULL-PCR rows and an
-    unparsable file.  The spool job's summary equals the summary of the
+    in mixed case, two keys of one element that differ only in case,
+    attributes that collide with a common or the value column, a new
+    attribute of an existing table, NULL-PCR rows and an unparsable file.  The spool job's summary equals the summary of the
     same files' rows folded on the driver."""
     from nemsis_xml_parser_spark.operators.bookkeeping import last_versions
     from nemsis_xml_parser_spark.operators.flatten import (
@@ -525,7 +549,7 @@ def test_lake_equals_the_table_frames_of_its_last_versions(spark, tmp_path):
     ])
     second = _write_docs(tmp_path / "second", [
         ("c.xml", '<r><PatientCareReport UUID="B"><x code="2" b="3">v</x></PatientCareReport>'
-                  '<hdr A="4">k</hdr></r>'),
+                  '<hdr A="4">k</hdr><x Code="1" code="2">n</x></r>'),
         ("d.xml", NEMSIS_XML.replace("rec-1", "rec-1-v2").replace('NV="7701"', 'Nv="7702"')),
         ("e.xml", '<r><PatientCareReport UUID="B"><x CODE="5" element_id="6" X_Value="7">w'
                   "</x><hdr/></PatientCareReport><hdr pcr_uuid_context=\"8\"/></r>"),
@@ -565,6 +589,7 @@ def test_lake_equals_the_table_frames_of_its_last_versions(spark, tmp_path):
         elements.unpersist()
     x = spark.read.parquet(os.path.join(wh, "x"))
     assert x.columns[5:] == ["code", "b"]
-    assert [(r["x_value"], r["code"], r["b"]) for r in x.collect()] == [("w", "5", None)]
+    assert sorted((r["x_value"], r["code"], r["b"]) for r in x.collect()) == [
+        ("n", "2", None), ("w", "5", None)]
     hdr = {(r["hdr_value"], r["a"]) for r in spark.read.parquet(os.path.join(wh, "hdr")).collect()}
     assert hdr == {("h", "1"), ("k", "4"), (None, None)}

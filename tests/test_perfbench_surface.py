@@ -13,6 +13,8 @@ from pathlib import Path
 
 import pytest
 
+pytestmark = pytest.mark.etl
+
 PERFBENCH = Path(__file__).resolve().parents[1] / "perfbench"
 PACKAGE = "nemsis_xml_parser_spark"
 

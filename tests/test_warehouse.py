@@ -6,7 +6,7 @@ import pytest
 
 from nemsis_xml_parser_spark.catalog import list_table_dirs
 from nemsis_xml_parser_spark.operators.bookkeeping import ingest_xml_files
-from nemsis_xml_parser_spark.operators.flatten import flatten_xml_strings
+from nemsis_xml_parser_spark.operators.flatten import flatten_xml_files, flatten_xml_strings
 from nemsis_xml_parser_spark.operators.warehouse import (
     attribute_columns_per_table,
     orphan_check,
@@ -58,6 +58,17 @@ def test_table_frame_attr_pivot(elements):
     tf = table_frame(elements, "epatient_15")
     assert tf.columns[-1] == "codetype"
     assert tf.collect()[0]["codetype"] == "ICD10"
+
+
+def test_table_frame_keeps_the_later_of_keys_equal_but_for_case(spark, tmp_path):
+    """Attribute keys that lower to one column fill it with the later
+    key's value, as the reference's row dict does (main_ingest.py:466-476),
+    instead of failing on a duplicated map key."""
+    p = tmp_path / "case.xml"
+    p.write_text('<r><x Code="1" code="2">v</x><x CODE="3">w</x><x/></r>')
+    rows = table_frame(flatten_xml_files(spark, [str(p)]), "x", ["code"]).collect()
+    assert sorted((r["x_value"] or "", r["code"] or "") for r in rows) == [
+        ("", ""), ("v", "2"), ("w", "3")]
 
 
 def test_attr_collision_with_common_dropped(spark):
